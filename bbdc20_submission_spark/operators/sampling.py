@@ -69,10 +69,31 @@ def _bucket_sql(id_col: str, seed: int, portable: bool) -> str:
     return f"pmod(xxhash64({i}, {seed}), {_BUCKETS})"
 
 
+def _key_sql(key) -> str:
+    """A strata/budget key as a SQL literal of its own type, so a
+    ``map<int, ...>`` lookup keys an int stratum column exactly as a
+    string map keys a string one. Ints are BIGINT (``L``) so the map
+    widens to any integral column type; floats go through a string
+    cast so NaN/inf parse too."""
+    if isinstance(key, str):
+        return sql_str_lit(key)
+    if isinstance(key, bool):
+        return "true" if key else "false"
+    if isinstance(key, int):
+        return f"{key}L"
+    if isinstance(key, float):
+        return f"CAST('{key!r}' AS DOUBLE)"
+    raise TypeError(
+        f"unsupported strata key {key!r} of type {type(key).__name__};"
+        " use str, bool, int or float keys"
+    )
+
+
 def _map_sql(entries: Mapping, value_fmt) -> str:
-    """``map(k1, v1, ...)`` literal over sorted string keys."""
+    """``map(k1, v1, ...)`` literal over sorted keys, each formatted
+    by its type."""
     return "map(%s)" % ", ".join(
-        f"{sql_str_lit(k)}, {value_fmt(v)}"
+        f"{_key_sql(k)}, {value_fmt(v)}"
         for k, v in sorted(entries.items())
     )
 

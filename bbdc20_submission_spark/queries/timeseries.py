@@ -328,23 +328,27 @@ def w3_w7_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
       and a 0.0 sentinel — same arithmetic both engines; the
       reference's cumsum trick is the engine's job).
 
-    Both windows share the (user_id; ts, event_id) partitioning, so
-    Catalyst plans ONE sort/exchange for the whole suite — cheaper
-    than certifying the two operators in separate queries."""
+    All windows share the ``user_id`` partitioning, so Catalyst plans
+    ONE hash exchange for the whole suite, plus two in-partition sorts:
+    the (ts, event_id) order and the reversed row-number order that
+    interpolation's "next valid" running frame reads — cheaper than
+    certifying the two operators in separate queries. The moving
+    average reads the raw value, so it runs first, on the forward
+    sort; after interpolation it would need a third sort."""
     e = load_table(spark, "events", sf_dir).withColumn(
         "v", F.when(F.col("event_type") == "error", F.lit(None)).otherwise(F.col("value"))
     )
-    i = interpolate_linear(
-        e, keys=["user_id"], order_by=["ts", "event_id"], value_cols=["v"]
-    )
     m = trailing_moving_average(
-        i, keys=["user_id"], order_by=["ts", "event_id"], value_col="value",
+        e, keys=["user_id"], order_by=["ts", "event_id"], value_col="value",
         n=5, valid_only=False,
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    i = interpolate_linear(
+        m.withColumn("_rn", F.row_number().over(w)),
+        keys=["user_id"], order_by=["ts", "event_id"], value_cols=["v"],
+    )
     return (
-        m.withColumn("_rn", F.row_number().over(w))
-        .select(
+        i.select(
             "event_id",
             F.round("v", 6).alias("value_interp"),
             F.when(F.col("_rn") >= 5, F.round("mavg", 6))

@@ -102,3 +102,68 @@ def test_window_form_matches_pandas_fallback_on_adversarial_patterns(spark):
                 wv,
                 want,
             )
+
+
+def _long_groups():
+    """Three long groups over two value columns: leading and trailing
+    null runs, interior gaps of every length, one column all-null in
+    one group, and duplicated rows (ties in ``t``). A duplicate repeats
+    its values, so the output multiset per group does not depend on
+    how the engine orders the tied rows."""
+    n = 4000
+    rng = random.Random(11)
+    rows = []
+    for g in range(3):
+        gap = 0
+        for t in range(n):
+            edge = t < 25 or t >= n - 40  # leading/trailing run
+            if rng.random() < 0.005:
+                gap = rng.randrange(5, 80)  # a long interior null run
+            gap = max(0, gap - 1)
+            a = None if edge or gap or rng.random() < 0.3 else rng.uniform(-5, 5)
+            b = None if g == 2 or rng.random() < 0.1 else rng.uniform(0, 100)
+            rows.append((g, t, a, b))
+            if rng.random() < 0.05:
+                rows.append((g, t, a, b))
+    return rows
+
+
+def test_long_groups_match_pandas(spark):
+    """Parity on groups of >=4 000 rows — long enough that a quadratic
+    "next valid" frame would dominate the test's run time."""
+    rows = _long_groups()
+    df = spark.createDataFrame(rows, "g long, t long, a double, b double")
+    got = sorted(
+        tuple(r)
+        for r in interpolate_linear(df, ["g"], ["t"], ["a", "b"]).collect()
+    )
+
+    pdf = pd.DataFrame(rows, columns=["g", "t", "a", "b"])
+    want = []
+    for _, grp in pdf.groupby("g"):
+        grp = grp.sort_values("t", kind="mergesort").copy()
+        for c in ("a", "b"):
+            grp[c] = grp[c].interpolate(method="linear").fillna(0.0)
+        want.extend(grp.itertuples(index=False, name=None))
+    want.sort()
+
+    assert len(got) == len(want) >= 3 * 4000
+    for have, exp in zip(got, want):
+        assert have[:2] == exp[:2]
+        assert have[2:] == pytest.approx(exp[2:], abs=1e-9), (have, exp)
+    # the all-null column of group 2 became the leading fill
+    assert all(r[3] == 0.0 for r in got if r[0] == 2)
+
+
+def test_plan_has_no_unbounded_following_and_one_exchange(spark):
+    """Every frame is a running frame (no per-row recomputation of an
+    UNBOUNDED FOLLOWING frame), and the forward and reversed orders
+    share one hash exchange on the keys."""
+    df = spark.createDataFrame(
+        [(0, 1, None, 1.0), (0, 2, 2.0, None), (1, 1, 3.0, 4.0)],
+        "g long, t long, a double, b double",
+    )
+    out = interpolate_linear(df, ["g"], ["t"], ["a", "b"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "unboundedfollowing" not in plan.lower(), plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan

@@ -350,3 +350,37 @@ def test_mixture_sample_null_stratum_takes_weight_zero_path(spark):
         .collect()
     }
     assert got == want
+
+
+def test_int_strata_keys_match_string_keys(spark):
+    """Non-string strata keys: an int stratum column sampled with int
+    keys picks exactly the rows the same data picks as strings with
+    the same keys as strings — for every sampler that takes a key
+    mapping (int keys once crashed the SQL-literal formatting)."""
+    from bbdc20_submission_spark.operators.sampling import (
+        mixture_sample,
+        token_budget_sample,
+    )
+
+    rows = [(i, i % 5, 1 + i % 7) for i in range(2000)]
+    ints = spark.createDataFrame(rows, "doc_id long, q int, toks long")
+    strs = ints.withColumn("q", F.col("q").cast("string"))
+
+    def ids(df):
+        return {r["doc_id"] for r in df.select("doc_id").collect()}
+
+    def as_str(m):
+        return {str(k): v for k, v in m.items()}
+
+    fractions = {0: 0.5, 1: 0.1, 3: 1.0}
+    weights = {0: 0.6, 2: 0.3, 4: 0.1}
+    budgets = {1: 400, 2: 50, 4: 10_000}
+    cases = [
+        lambda df, m: stratified_sample(df, "q", m, seed=3),
+        lambda df, m: mixture_sample(df, "q", m, total_fraction=0.3, seed=3),
+        lambda df, m: token_budget_sample(df, "q", m, "toks", seed=3),
+    ]
+    for run, keys in zip(cases, (fractions, weights, budgets)):
+        got = ids(run(ints, keys))
+        assert got, keys
+        assert got == ids(run(strs, as_str(keys))), keys

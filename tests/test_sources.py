@@ -578,11 +578,16 @@ def test_load_table_resplits_heavy_single_chunk_input(spark, tmp_path):
     _RESPLIT_STR_BYTES_PER_CHUNK trigger) must come back repartitioned
     to defaultParallelism so narrow stages don't serialize on one core;
     a light single-chunk table (every certified SF) must pass through
-    with its plan untouched."""
+    with its plan untouched. Whether the heavy table re-splits is what
+    ``_should_resplit`` says for this host's core count."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from bbdc20_submission_spark.sources.harness import load_table
+    from bbdc20_submission_spark.sources.harness import (
+        _effective_splits,
+        _should_resplit,
+        load_table,
+    )
 
     heavy_dir = tmp_path / "heavy"
     heavy_dir.mkdir()
@@ -599,10 +604,11 @@ def test_load_table_resplits_heavy_single_chunk_input(spark, tmp_path):
         tbl, str(heavy_dir / "documents.parquet"), row_group_size=n
     )
     heavy = load_table(spark, "documents", str(heavy_dir))
-    assert (
-        heavy.rdd.getNumPartitions()
-        == spark.sparkContext.defaultParallelism
-    )
+    cores = spark.sparkContext.defaultParallelism
+    str_bytes, chunks = _effective_splits(str(heavy_dir / "documents.parquet"))
+    assert chunks == 1
+    want = cores if _should_resplit(str_bytes, chunks, cores) else 1
+    assert heavy.rdd.getNumPartitions() == want
     # filters still reach the scan through the inserted repartition
     plan = heavy.filter("doc_id < 10").select("doc_id")._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,10)]" in plan, plan
@@ -621,6 +627,29 @@ def test_load_table_resplits_heavy_single_chunk_input(spark, tmp_path):
     pq.write_table(small, str(light_dir / "documents.parquet"))
     light = load_table(spark, "documents", str(light_dir))
     assert "Exchange" not in light._jdf.queryExecution().executedPlan().toString()
+
+
+def test_should_resplit_rule_across_core_counts():
+    """The re-split rule as a pure function of (string bytes, chunks,
+    cores): a heavy table re-splits once it has at most a quarter as
+    many chunks as cores; a light one never does."""
+    from bbdc20_submission_spark.sources.harness import (
+        _RESPLIT_STR_BYTES_PER_CHUNK as per_chunk,
+        _should_resplit,
+    )
+
+    heavy, light = 8 * per_chunk, per_chunk - 1
+    assert not _should_resplit(heavy, 1, 1)
+    assert _should_resplit(heavy, 1, 4)
+    assert not _should_resplit(heavy, 2, 4)
+    assert _should_resplit(heavy, 2, 8)
+    assert not _should_resplit(heavy, 3, 8)
+    assert _should_resplit(heavy, 8, 32)
+    assert not _should_resplit(heavy, 9, 32)
+    for cores in (1, 4, 8, 32):
+        assert not _should_resplit(light, 1, cores)
+    # heaviness is per chunk: 8 chunks of the 32-core case need 8x bytes
+    assert not _should_resplit(8 * per_chunk - 1, 8, 32)
 
 
 def test_load_table_tolerates_unstatable_path(spark, tmp_path):
