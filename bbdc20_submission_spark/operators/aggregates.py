@@ -111,11 +111,11 @@ def label_encode(df: DataFrame, label_col: str, code_col: str = "code") -> DataF
     labels, tiny by construction.
     """
     return (
-        df.select(label_col)
+        df.selectExpr(f"`{label_col}`")
         .distinct()
-        .withColumn(
-            code_col,
-            (F.dense_rank().over(Window.orderBy(label_col)) - F.lit(1)).cast("long"),
+        .selectExpr(
+            f"`{label_col}`",
+            f"CAST(dense_rank() OVER (ORDER BY `{label_col}`) - 1 AS BIGINT) AS `{code_col}`",
         )
     )
 

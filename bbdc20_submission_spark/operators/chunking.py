@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bbdc20_submission_spark.operators.columns import add_sql_columns
 from bbdc20_submission_spark.operators.text import (
     _ws_tokens_sql,
     sql_str_lit,
@@ -119,15 +120,25 @@ def pack_sequences(
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) "
         f"- `{tokens_col}` AS _start"
     )
+    # an output column the input already has is replaced (withColumn
+    # semantics); an input _start would clash with the working column
+    if "_start" in chunks.columns:
+        raise ValueError(
+            "pack_sequences reserves the working column '_start'; rename it"
+        )
+    keep = [
+        f"`{c}`" for c in chunks.columns
+        if c not in ("pack_bucket", "seq_id", "seq_pos")
+    ]
     return (
-        chunks.selectExpr("*", bucket)
+        chunks.selectExpr(*keep, bucket)
         .selectExpr("*", start)
         .selectExpr(
             "*",
             f"CAST(floor(_start / {budget_tokens}) AS BIGINT) AS seq_id",
         )
         .selectExpr(
-            *[f"`{c}`" for c in chunks.columns],
+            *keep,
             "pack_bucket",
             "seq_id",
             f"CAST(_start - seq_id * {budget_tokens} AS BIGINT) AS seq_pos",
@@ -331,14 +342,7 @@ def scrub_text(
             f"regexp_replace({expr}, {sql_str_lit(pattern)}, "
             f"{sql_str_lit(repl)})"
         )
-    if out_col in df.columns:  # keep withColumn's replace semantics
-        return df.selectExpr(
-            *[
-                f"{expr} AS `{c}`" if c == out_col else f"`{c}`"
-                for c in df.columns
-            ]
-        )
-    return df.selectExpr("*", f"{expr} AS `{out_col}`")
+    return add_sql_columns(df, {out_col: expr})
 
 
 def connected_components(

@@ -30,6 +30,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from bbdc20_submission_spark.operators.columns import add_sql_columns
 from bbdc20_submission_spark.operators.text import sql_str_lit
 
 # hash-threshold resolution: fractions are quantized to 1/2^20
@@ -270,7 +271,7 @@ def split_assign(
         for name, edge in zip(names[:-1], edges)
     )
     case = f"CASE {branches} ELSE {sql_str_lit(names[-1])} END"
-    return df.selectExpr("*", f"{case} AS `{out_col}`")
+    return add_sql_columns(df, {out_col: case})
 
 
 def token_budget_sample(

@@ -18,8 +18,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bbdc20_submission_spark.operators.columns import add_sql_columns
 
 
 def rle_islands(
@@ -34,13 +36,15 @@ def rle_islands(
     Null-safe: a change from null to non-null (or vice versa) starts a
     new island; consecutive nulls share one.
     """
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    prev = F.lag(F.col(value_col)).over(w)
-    change = (~F.col(value_col).eqNullSafe(prev)).cast("int")
-    running = Window.partitionBy(*keys).orderBy(*order_by).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    part = ", ".join(f"`{k}`" for k in keys)
+    order = ", ".join(f"`{o}`" for o in order_by)
+    v = f"`{value_col}`"
+    prev = f"lag({v}) OVER (PARTITION BY {part} ORDER BY {order})"
+    island = (
+        f"sum(CAST(NOT ({v} <=> {prev}) AS INT)) OVER (PARTITION BY {part} "
+        f"ORDER BY {order} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
-    return df.withColumn("island", F.sum(change).over(running))
+    return add_sql_columns(df, {"island": island})
 
 
 def sessionize(
@@ -92,19 +96,15 @@ def rle_intervals(
     # carry each run's max ts through the SAME aggregation, then the
     # key's max is a window max over the tiny runs frame — no second
     # scan of df, no join back (one shuffle on keys total)
-    runs = (
-        tagged.groupBy(*keys, "island", value_col)
-        .agg(F.min(ts_col).alias("start"), F.max(ts_col).alias("_run_max"))
+    runs = tagged.groupBy(*keys, "island", value_col).agg(
+        F.expr(f"min(`{ts_col}`) AS `start`"), F.expr(f"max(`{ts_col}`) AS _run_max")
     )
-    w = Window.partitionBy(*keys).orderBy("island")
-    key_end = Window.partitionBy(*keys)
-    runs = runs.withColumn("end", F.lead("start").over(w)).withColumn(
-        "_key_max_ts", F.max("_run_max").over(key_end)
-    )
+    part = ", ".join(f"`{k}`" for k in keys)
     # Final open segment closes at the key's max ts; dropped when empty.
-    runs = (
-        runs.withColumn("end", F.coalesce(F.col("end"), F.col("_key_max_ts")))
-        .filter(F.col("end") > F.col("start"))
-        .select(*keys, value_col, "start", "end")
+    end = (
+        f"coalesce(lead(`start`) OVER (PARTITION BY {part} ORDER BY island), "
+        f"max(_run_max) OVER (PARTITION BY {part}))"
     )
-    return runs
+    return runs.selectExpr(
+        *[f"`{k}`" for k in keys], f"`{value_col}`", "`start`", f"{end} AS `end`"
+    ).filter("`end` > `start`")

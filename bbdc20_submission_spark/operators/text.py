@@ -278,8 +278,9 @@ def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred
     hits = "array(%s)" % ", ".join(f"_hits_{lang}" for lang in langs)
     lang_arr = "array(%s)" % ", ".join(sql_str_lit(lang) for lang in langs)
     best = f"{lang_arr}[array_position({hits}, array_max({hits})) - 1]"
+    # an existing out_col is replaced (withColumn semantics)
     return scored.selectExpr(
-        *[f"`{c}`" for c in df.columns], f"{best} AS `{out_col}`"
+        *[f"`{c}`" for c in df.columns if c != out_col], f"{best} AS `{out_col}`"
     )
 
 

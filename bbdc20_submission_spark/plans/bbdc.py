@@ -40,8 +40,10 @@ from pyspark.sql import functions as F
 
 from bbdc20_submission_spark.caching import managed_persist
 from bbdc20_submission_spark.operators.aggregates import label_encode
+from bbdc20_submission_spark.operators.columns import add_sql_columns, double_sql
 from bbdc20_submission_spark.operators.interpolate import interpolate_linear
 from bbdc20_submission_spark.operators.sessionize import rle_intervals
+from bbdc20_submission_spark.operators.text import sql_str_lit
 from bbdc20_submission_spark.plans.sensors_config import subtraction_pairs
 
 STEP_MS = 200
@@ -64,12 +66,13 @@ PIPELINE_USE_SENSORS = {
 }
 
 
-def window_key(ts_col: str = "ts", step_ms: int = STEP_MS) -> F.Column:
-    """``int(ts*1000) // step * step`` (load_data.py:122-123) —
-    ``//`` floors, so the quotient uses F.floor (a long cast truncates
-    toward zero, off by one window for negative timestamps)."""
-    ms = (F.col(ts_col) * 1000).cast("long")
-    return (F.floor(ms / F.lit(step_ms)) * step_ms).cast("long")
+def window_key(ts_col: str = "ts", step_ms: int = STEP_MS) -> str:
+    """SQL for ``int(ts*1000) // step * step`` (load_data.py:122-123) —
+    ``//`` floors, so the quotient goes through floor (a long cast
+    truncates toward zero, off by one window for negative timestamps)."""
+    return (
+        f"CAST(floor(CAST(`{ts_col}` * 1000 AS BIGINT) / {step_ms}) * {step_ms} AS BIGINT)"
+    )
 
 
 def expand_targets(labels: DataFrame, step_ms: int = STEP_MS) -> DataFrame:
@@ -82,25 +85,31 @@ def expand_targets(labels: DataFrame, step_ms: int = STEP_MS) -> DataFrame:
     step; lo = previous interval's hi + step (cursor continuity) via a
     running max; explode(sequence) generates the grid — no shuffle
     beyond the per-key window."""
-    w = Window.partitionBy("subject", "trial", "arm").orderBy("start")
-    hi = (F.ceil(F.col("end") * 1000 / step_ms) * step_ms - step_ms).cast("long")
-    prev_hi = F.max("hi").over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
+    prev_hi = (
+        "max(hi) OVER (PARTITION BY subject, trial, arm ORDER BY `start` "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"
     )
-    lo = F.greatest(F.coalesce(prev_hi + step_ms, F.lit(step_ms)), F.lit(step_ms))
-    tagged = labels.withColumn("hi", hi).withColumn("lo", lo)
     return (
-        tagged.filter(F.col("hi") >= F.col("lo"))
-        .withColumn("win_end", F.explode(F.sequence("lo", "hi", F.lit(step_ms))))
-        .select("subject", "trial", "arm", "win_end", "action")
+        labels.selectExpr(
+            "subject", "trial", "arm", "`start`", "action",
+            f"CAST(ceil(`end` * 1000 / {step_ms}) * {step_ms} - {step_ms} AS BIGINT) AS hi",
+        )
+        .selectExpr(
+            "*", f"greatest(coalesce({prev_hi} + {step_ms}, {step_ms}), {step_ms}) AS lo"
+        )
+        .filter("hi >= lo")
+        .selectExpr(
+            "subject", "trial", "arm",
+            f"explode(sequence(lo, hi, {step_ms})) AS win_end", "action",
+        )
     )
 
 
 def arm_label_dims(labels: DataFrame) -> tuple[DataFrame, DataFrame]:
     """A10: per-arm sorted-distinct label dimension tables
     [action, code] (sklearn LabelEncoder semantics)."""
-    left = label_encode(labels.filter(F.col("arm") == "la"), "action")
-    right = label_encode(labels.filter(F.col("arm") == "ra"), "action")
+    left = label_encode(labels.filter("arm = 'la'"), "action")
+    right = label_encode(labels.filter("arm = 'ra'"), "action")
     return left, right
 
 
@@ -112,7 +121,7 @@ def prepare_emg(emg: DataFrame, step_ms: int = STEP_MS) -> DataFrame:
     out = interpolate_linear(
         emg, ["subject", "trial"], ["ts"], EMG_CHANNELS
     )
-    return out.withColumn("window", window_key("ts", step_ms))
+    return add_sql_columns(out, {"window": window_key("ts", step_ms)})
 
 
 def prepare_mocap(
@@ -125,10 +134,16 @@ def prepare_mocap(
     use_sensors = use_sensors or PIPELINE_USE_SENSORS
     value_cols = [c for c in mocap.columns if c not in ("subject", "trial", "ts")]
     out = interpolate_linear(mocap, ["subject", "trial"], ["ts"], value_cols)
+    # in pair order, each subtraction reads the columns as the earlier
+    # pairs left them (a finger minus the already hand-relative hand),
+    # composed into one projection
+    relative: dict[str, str] = {}
     for col, ref_col in subtraction_pairs(use_sensors):
-        if col in out.columns and ref_col in out.columns:
-            out = out.withColumn(col, F.col(col) - F.col(ref_col))
-    return out.withColumn("window", window_key("ts", step_ms))
+        if col in value_cols and ref_col in value_cols:
+            cur = relative.get(col, f"`{col}`")
+            ref = relative.get(ref_col, f"`{ref_col}`")
+            relative[col] = f"({cur}) - ({ref})"
+    return add_sql_columns(out, {**relative, "window": window_key("ts", step_ms)})
 
 
 # --------------------------------------------------------------- L1 repair
@@ -183,40 +198,42 @@ def _onehot_label_cols(df: DataFrame, left_dim, right_dim) -> tuple[DataFrame, l
     la_action/ra_action (LabelBinarizer semantics, :163-168)."""
     left_classes = [r["action"] for r in left_dim.orderBy("code").collect()]
     right_classes = [r["action"] for r in right_dim.orderBy("code").collect()]
-    # one select, not a withColumn chain (each withColumn re-analyzes
-    # the whole plan — quadratic in column count)
+    # one parsed projection, not a withColumn chain (each withColumn
+    # re-analyzes the whole plan — quadratic in column count)
     exprs = [
-        (F.col("la_action") == c).cast("double").alias(f"oh_l{i}")
+        f"CAST(la_action = {sql_str_lit(c)} AS DOUBLE) AS oh_l{i}"
         for i, c in enumerate(left_classes)
     ] + [
-        (F.col("ra_action") == c).cast("double").alias(f"oh_r{i}")
+        f"CAST(ra_action = {sql_str_lit(c)} AS DOUBLE) AS oh_r{i}"
         for i, c in enumerate(right_classes)
     ]
     cols = [f"oh_l{i}" for i in range(len(left_classes))] + [
         f"oh_r{i}" for i in range(len(right_classes))
     ]
-    return df.select("*", *exprs), cols
+    return df.selectExpr("*", *exprs), cols
 
 
 def _fit_ols(df: DataFrame, feature_cols: list[str], target_col: str):
     """Exact least squares via the normal equations on Spark-computed
     X'X / X'y (one aggregation pass — distributed, collect is
     O(d^2)). Returns (intercept, coefs list). Mirrors sklearn
-    LinearRegression (generate_submission.py:214)."""
+    LinearRegression (generate_submission.py:214).
+
+    The d(d+3)/2 + 2 sums are one parsed projection (a global
+    aggregate): as Column objects they cost ~13 py4j round trips each."""
     import numpy as np
 
     d = len(feature_cols)
     aggs = []
     for i in range(d):
+        xi = f"`{feature_cols[i]}`"
         for j in range(i, d):
-            aggs.append(
-                F.sum(F.col(feature_cols[i]) * F.col(feature_cols[j])).alias(f"xx_{i}_{j}")
-            )
-        aggs.append(F.sum(F.col(feature_cols[i]) * F.col(target_col)).alias(f"xy_{i}"))
-        aggs.append(F.sum(F.col(feature_cols[i])).alias(f"xs_{i}"))
-    aggs.append(F.sum(target_col).alias("ys"))
-    aggs.append(F.count(F.lit(1)).alias("n"))
-    row = df.agg(*aggs).collect()[0]
+            aggs.append(f"sum({xi} * `{feature_cols[j]}`) AS xx_{i}_{j}")
+        aggs.append(f"sum({xi} * `{target_col}`) AS xy_{i}")
+        aggs.append(f"sum({xi}) AS xs_{i}")
+    aggs.append(f"sum(`{target_col}`) AS ys")
+    aggs.append("count(1) AS n")
+    row = df.selectExpr(*aggs).collect()[0]
 
     n = row["n"]
     xs = np.array([row[f"xs_{i}"] for i in range(d)])
@@ -236,10 +253,10 @@ def _fit_ols(df: DataFrame, feature_cols: list[str], target_col: str):
 
 
 def _apply_linear(df: DataFrame, feature_cols: list[str], intercept: float, coefs: list[float]) -> F.Column:
-    expr = F.lit(intercept)
-    for c, w in zip(feature_cols, coefs):
-        expr = expr + F.col(c) * F.lit(w)
-    return expr
+    terms = [double_sql(intercept)] + [
+        f"`{c}` * {double_sql(w)}" for c, w in zip(feature_cols, coefs)
+    ]
+    return F.expr(" + ".join(terms))
 
 
 def repair_channels(
@@ -332,9 +349,9 @@ def subject_scaler_stats(emg: DataFrame) -> DataFrame:
     Output: [subject, <c>_med, <c>_iqr ...]. Exact percentiles."""
     aggs = []
     for c in EMG_CHANNELS:
-        aggs.append(F.expr(f"percentile({c}, 0.5)").alias(f"{c}_med"))
+        aggs.append(F.expr(f"percentile(`{c}`, 0.5) AS `{c}_med`"))
         aggs.append(
-            (F.expr(f"percentile({c}, 0.75)") - F.expr(f"percentile({c}, 0.25)")).alias(f"{c}_iqr")
+            F.expr(f"percentile(`{c}`, 0.75) - percentile(`{c}`, 0.25) AS `{c}_iqr`")
         )
     return emg.groupBy("subject").agg(*aggs)
 
@@ -345,23 +362,24 @@ def _window_partials(df: DataFrame, value_cols: Sequence[str]) -> DataFrame:
     """Per (subject, trial, window) partial aggregates that all five
     reference stats decompose into. first/last/head7/tail7 are in
     ts order within the window."""
-    w_asc = Window.partitionBy("subject", "trial", "window").orderBy("ts")
-    w_desc = Window.partitionBy("subject", "trial", "window").orderBy(F.col("ts").desc())
-    tagged = df.withColumn("_ra", F.row_number().over(w_asc)).withColumn(
-        "_rd", F.row_number().over(w_desc)
+    w = "PARTITION BY subject, trial, `window`"
+    tagged = df.selectExpr(
+        "*",
+        f"row_number() OVER ({w} ORDER BY ts) AS _ra",
+        f"row_number() OVER ({w} ORDER BY ts DESC) AS _rd",
     )
-    aggs = [F.count(F.lit(1)).alias("_cnt")]
+    aggs = ["count(1) AS _cnt"]
     for c in value_cols:
         aggs += [
-            F.sum(c).alias(f"{c}_sum"),
-            F.min(c).alias(f"{c}_min"),
-            F.max(c).alias(f"{c}_max"),
-            F.min_by(c, "_ra").alias(f"{c}_first"),
-            F.max_by(c, "_ra").alias(f"{c}_last"),
-            F.sum(F.when(F.col("_ra") <= 7, F.col(c)).otherwise(0.0)).alias(f"{c}_head7"),
-            F.sum(F.when(F.col("_rd") <= 7, F.col(c)).otherwise(0.0)).alias(f"{c}_tail7"),
+            f"sum(`{c}`) AS `{c}_sum`",
+            f"min(`{c}`) AS `{c}_min`",
+            f"max(`{c}`) AS `{c}_max`",
+            f"min_by(`{c}`, _ra) AS `{c}_first`",
+            f"max_by(`{c}`, _ra) AS `{c}_last`",
+            f"sum(CASE WHEN _ra <= 7 THEN `{c}` ELSE 0.0D END) AS `{c}_head7`",
+            f"sum(CASE WHEN _rd <= 7 THEN `{c}` ELSE 0.0D END) AS `{c}_tail7`",
         ]
-    return tagged.groupBy("subject", "trial", "window").agg(*aggs)
+    return tagged.groupBy("subject", "trial", "window").agg(*map(F.expr, aggs))
 
 
 def mocap_gather_features(
@@ -379,9 +397,7 @@ def mocap_gather_features(
     range leaves [0, max_window) is zeroed wholesale (NaN-pad +
     nan_to_num semantics)."""
     partials = _window_partials(mocap, value_cols)
-    max_win = mocap.groupBy("subject", "trial").agg(
-        F.max("window").alias("_max_win")
-    )
+    max_win = mocap.groupBy("subject", "trial").agg(F.expr("max(`window`) AS _max_win"))
 
     # anchor x gather x slot expansion (slot counts are small constants)
     slot_rows = []
@@ -390,84 +406,70 @@ def mocap_gather_features(
         hi_off = int(right_s * 1000)
         for slot_off in range(lo_off, hi_off, step_ms):
             slot_rows.append((gi, slot_off))
-    slots = F.array(
-        *[
-            F.struct(F.lit(gi).alias("g"), F.lit(off).alias("off"))
-            for gi, off in slot_rows
-        ]
+    slots = "array(%s)" % ", ".join(
+        f"struct({gi} AS g, {off} AS off)" for gi, off in slot_rows
     )
     exploded = (
         anchors.join(max_win, ["subject", "trial"], "inner")
-        .withColumn("_s", F.explode(slots))
-        .select(
-            "subject", "trial", "win_end", "_max_win",
-            F.col("_s.g").alias("g"),
-            (F.col("win_end") + F.col("_s.off")).cast("long").alias("window"),
+        .selectExpr("subject", "trial", "win_end", "_max_win", f"explode({slots}) AS _s")
+        .selectExpr(
+            "subject", "trial", "win_end", "_max_win", "_s.g AS g",
+            "CAST(win_end + _s.off AS BIGINT) AS `window`",
         )
     )
     joined = exploded.join(partials, ["subject", "trial", "window"], "left")
 
-    pad = (F.col("window") < 0) | (F.col("window") >= F.col("_max_win"))
-    grp = joined.groupBy("subject", "trial", "win_end", "g").agg(
-        F.max(pad.cast("int")).alias("_padded"),
-        F.sum("_cnt").alias("_n"),
-        F.min("window").alias("_first_win"),
-        F.max("window").alias("_last_win"),
-        *[
-            a
-            for c in value_cols
-            for a in (
-                F.sum(f"{c}_sum").alias(f"{c}_sum"),
-                F.min(f"{c}_min").alias(f"{c}_min"),
-                F.max(f"{c}_max").alias(f"{c}_max"),
-                F.min_by(f"{c}_first", "window").alias(f"{c}_first"),
-                F.max_by(f"{c}_last", "window").alias(f"{c}_last"),
-                F.min_by(f"{c}_head7", "window").alias(f"{c}_head7"),
-                F.max_by(f"{c}_tail7", "window").alias(f"{c}_tail7"),
-            )
-        ],
-    )
+    pad = "(`window` < 0 OR `window` >= _max_win)"
+    aggs = [f"max(CAST({pad} AS INT)) AS _padded", "sum(_cnt) AS _n"]
+    for c in value_cols:
+        aggs += [
+            f"sum(`{c}_sum`) AS `{c}_sum`",
+            f"min(`{c}_min`) AS `{c}_min`",
+            f"max(`{c}_max`) AS `{c}_max`",
+            f"min_by(`{c}_first`, `window`) AS `{c}_first`",
+            f"max_by(`{c}_last`, `window`) AS `{c}_last`",
+            f"min_by(`{c}_head7`, `window`) AS `{c}_head7`",
+            f"max_by(`{c}_tail7`, `window`) AS `{c}_tail7`",
+        ]
+    grp = joined.groupBy("subject", "trial", "win_end", "g").agg(*map(F.expr, aggs))
 
     # pack the 5x|channels| stats of a (anchor, gather) row into one
     # array, then ONE conditional aggregation per gather — no 8-way
     # self-join (which would recompute the upstream agg per branch).
-    zero = F.col("_padded") == 1
     stat_exprs = []
     stat_names = []
     # reference stat order: mean, mean_diff, start_end_diff, max, min
     for stat in ("mean", "meandiff", "sediff", "max", "min"):
         for c in value_cols:
-            if stat == "mean":
-                e = F.col(f"{c}_sum") / F.col("_n")
-            elif stat == "meandiff":
-                e = (F.col(f"{c}_last") - F.col(f"{c}_first")) / (F.col("_n") - 1)
-            elif stat == "sediff":
-                e = F.col(f"{c}_tail7") - F.col(f"{c}_head7")
-            elif stat == "max":
-                e = F.col(f"{c}_max")
-            else:
-                e = F.col(f"{c}_min")
+            e = {
+                "mean": f"`{c}_sum` / _n",
+                # try_divide: n = 1 gives NULL (-> 0) where ANSI raises
+                "meandiff": f"try_divide(`{c}_last` - `{c}_first`, _n - 1)",
+                "sediff": f"`{c}_tail7` - `{c}_head7`",
+                "max": f"`{c}_max`",
+                "min": f"`{c}_min`",
+            }[stat]
             # NaN-pad + nan_to_num: zero the whole gather when padded or
             # when the stat itself is NaN/null (e.g. n=1 meandiff)
-            e = F.when(zero, 0.0).otherwise(
-                F.coalesce(F.nanvl(e, F.lit(0.0)), F.lit(0.0))
+            stat_exprs.append(
+                f"CASE WHEN _padded = 1 THEN 0.0D "
+                f"ELSE coalesce(nanvl({e}, 0.0D), 0.0D) END"
             )
-            stat_exprs.append(e)
             stat_names.append(f"{stat}_{c}")
 
-    packed = grp.select(
-        "subject", "trial", "win_end", "g", F.array(*stat_exprs).alias("_st")
+    packed = grp.selectExpr(
+        "subject", "trial", "win_end", "g", "array(%s) AS _st" % ", ".join(stat_exprs)
     )
     agg = packed.groupBy("subject", "trial", "win_end").agg(
         *[
-            F.max(F.when(F.col("g") == gi, F.col("_st"))).alias(f"_st{gi}")
+            F.expr(f"max(CASE WHEN g = {gi} THEN _st END) AS _st{gi}")
             for gi in range(len(gathers))
         ]
     )
-    return agg.select(
+    return agg.selectExpr(
         "subject", "trial", "win_end",
         *[
-            F.element_at(f"_st{gi}", j + 1).alias(f"g{gi}_{n}")
+            f"element_at(_st{gi}, {j + 1}) AS `g{gi}_{n}`"
             for gi in range(len(gathers))
             for j, n in enumerate(stat_names)
         ],
@@ -489,76 +491,76 @@ def emg_frame_features(
 
     Pad slots (outside [0, max_window)) contribute ``nominal_win_rows``
     zero-valued samples, which DO pass through the scaler — reference
-    missing_value=0 semantics. Output: [subject, trial, win_end,
+    missing_value=0 semantics. A channel whose IQR is 0 scales to 0
+    (the quotient is NULL, then nan_to_num); sklearn's RobustScaler
+    would divide by 1, which differs only on the pad samples of a
+    constant non-zero channel. Output: [subject, trial, win_end,
     emg_feats array<double>] with frame-major layout
     (emg_win_means.reshape(-1))."""
     n_slots = int((left_s + right_s) * 1000) // step_ms
     offsets = [(-int(left_s * 1000)) + i * step_ms for i in range(n_slots)]
-    max_win = emg.groupBy("subject", "trial").agg(F.max("window").alias("_max_win"))
+    max_win = emg.groupBy("subject", "trial").agg(F.expr("max(`window`) AS _max_win"))
 
     slots = (
         anchors.join(max_win, ["subject", "trial"], "inner")
-        .withColumn("_off", F.explode(F.array(*[F.lit(o) for o in offsets])))
-        .select(
+        .selectExpr(
             "subject", "trial", "win_end", "_max_win",
-            (F.col("win_end") + F.col("_off")).cast("long").alias("window"),
-            F.col("_off").alias("_slot_off"),
+            "explode(array(%s)) AS _off" % ", ".join(map(str, offsets)),
+        )
+        .selectExpr(
+            "subject", "trial", "win_end", "_max_win",
+            "CAST(win_end + _off AS BIGINT) AS `window`", "_off AS _slot_off",
         )
     )
-    pad = (F.col("window") < 0) | (F.col("window") >= F.col("_max_win"))
+    pad = "(`window` < 0 OR `window` >= _max_win)"
+    channels = [f"`{c}`" for c in EMG_CHANNELS]
 
-    real = slots.filter(~pad).join(
-        emg.select("subject", "trial", "window", "ts", *EMG_CHANNELS),
+    real = slots.filter(f"NOT {pad}").join(
+        emg.selectExpr("subject", "trial", "`window`", "ts", *channels),
         ["subject", "trial", "window"],
         "inner",
     )
     pad_rows = (
         slots.filter(pad)
-        .withColumn("_i", F.explode(F.sequence(F.lit(1), F.lit(nominal_win_rows))))
-        .select(
-            "subject", "trial", "win_end", "window",
-            (F.col("_i").cast("double") / 1e9 + F.col("window") / 1000.0).alias("ts"),
-            *[F.lit(0.0).alias(c) for c in EMG_CHANNELS],
+        .selectExpr(
+            "subject", "trial", "win_end", "`window`", "_slot_off",
+            f"explode(sequence(1, {nominal_win_rows})) AS _i",
+        )
+        .selectExpr(
+            "subject", "trial", "win_end", "`window`",
+            "CAST(_i AS DOUBLE) / 1.0E9D + `window` / 1000.0D AS ts",
+            *[f"0.0D AS {c}" for c in channels],
             "_slot_off",
         )
     )
-    block = real.select(
-        "subject", "trial", "win_end", "window", "ts", *EMG_CHANNELS, "_slot_off"
+    block = real.selectExpr(
+        "subject", "trial", "win_end", "`window`", "ts", *channels, "_slot_off"
     ).unionByName(pad_rows)
 
-    # robust scale (x - med) / iqr, then nan_to_num
-    block = block.join(F.broadcast(scaler_stats), "subject", "left")
+    # robust scale (x - med) / iqr, then nan_to_num; try_divide makes
+    # an IQR of 0 a NULL (-> 0) where ANSI division would raise
     scaled = [
-        F.coalesce(
-            F.nanvl((F.col(c) - F.col(f"{c}_med")) / F.col(f"{c}_iqr"), F.lit(0.0)),
-            F.lit(0.0),
-        ).alias(c)
+        f"coalesce(nanvl(try_divide(`{c}` - `{c}_med`, `{c}_iqr`), 0.0D), 0.0D) AS `{c}`"
         for c in EMG_CHANNELS
     ]
-    block = block.select(
-        "subject", "trial", "win_end", "_slot_off", "ts", *scaled
+    frame = (
+        f"floor((row_number() OVER (PARTITION BY subject, trial, win_end "
+        f"ORDER BY _slot_off, ts) - 1) / {frame_rows}) AS _frame"
     )
-
-    w = Window.partitionBy("subject", "trial", "win_end").orderBy("_slot_off", "ts")
-    framed = block.withColumn(
-        "_frame", F.floor((F.row_number().over(w) - 1) / frame_rows)
+    framed = (
+        block.join(F.broadcast(scaler_stats), "subject", "left")
+        .selectExpr("subject", "trial", "win_end", "_slot_off", "ts", *scaled)
+        .selectExpr("*", frame)
     )
     frame_means = framed.groupBy("subject", "trial", "win_end", "_frame").agg(
-        *[F.avg(F.abs(F.col(c))).alias(f"m_{c}") for c in EMG_CHANNELS]
+        *[F.expr(f"avg(abs(`{c}`)) AS `m_{c}`") for c in EMG_CHANNELS]
     )
     # frame-major flatten: [f0c0..f0c7, f1c0, ...]
-    per_frame = F.array(*[F.col(f"m_{c}") for c in EMG_CHANNELS])
-    return (
-        frame_means.groupBy("subject", "trial", "win_end")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("_frame"), per_frame.alias("fm")))
-                    ),
-                    lambda s: s["fm"],
-                )
-            ).alias("emg_feats")
+    per_frame = "array(%s)" % ", ".join(f"`m_{c}`" for c in EMG_CHANNELS)
+    return frame_means.groupBy("subject", "trial", "win_end").agg(
+        F.expr(
+            "flatten(transform(array_sort(collect_list("
+            f"struct(_frame, {per_frame} AS fm))), s -> s.fm)) AS emg_feats"
         )
     )
 
@@ -574,13 +576,10 @@ def build_features(
     315-379). Output: [subject, trial, win_end, features array<double>]."""
     mg = mocap_gather_features(mocap, anchors)
     eg = emg_frame_features(emg, anchors, scaler_stats)
-    mocap_cols = [c for c in mg.columns if c.startswith("g")]
-    return (
-        mg.join(eg, ["subject", "trial", "win_end"], "inner")
-        .select(
-            "subject", "trial", "win_end",
-            F.concat(F.array(*[F.col(c) for c in mocap_cols]), F.col("emg_feats")).alias("features"),
-        )
+    mocap_cols = ", ".join(f"`{c}`" for c in mg.columns if c.startswith("g"))
+    return mg.join(eg, ["subject", "trial", "win_end"], "inner").selectExpr(
+        "subject", "trial", "win_end",
+        f"concat(array({mocap_cols}), emg_feats) AS features",
     )
 
 
@@ -591,15 +590,12 @@ def predictions_to_intervals(preds: DataFrame) -> DataFrame:
     into half-open second-unit intervals (generate_submission.py:
     505-562): segment end = next change's ts; final segment kept only
     if non-empty. Expects [subject, trial, arm, win_end, action]."""
-    with_key = preds.withColumn(
-        "key", F.concat(F.col("subject"), F.col("trial"), F.lit("."), F.col("arm"))
+    with_key = preds.selectExpr(
+        "concat(subject, trial, '.', arm) AS key", "win_end", "action"
     )
     runs = rle_intervals(
         with_key, keys=["key"], ts_col="win_end", value_col="action"
     )
-    return runs.select(
-        "key",
-        (F.col("start") / 1000.0).alias("start"),
-        (F.col("end") / 1000.0).alias("end"),
-        "action",
+    return runs.selectExpr(
+        "key", "`start` / 1000.0D AS `start`", "`end` / 1000.0D AS `end`", "action"
     )

@@ -6,14 +6,23 @@ partitioned glob scan reads every file in one job and
 ``input_file_name()`` restores the (subject, trial) partition identity
 (S4). At 100 TB this is the difference between a driver bottleneck and
 a fully parallel scan.
+
+Sensor CSVs are read with a declared all-DOUBLE schema taken from the
+first file's header, never with schema inference: inference fires two
+Spark jobs while the plan is being built and scans every file once more
+before the real scan, which at the paper's scale (minutes of 600 Hz
+samples per trial) doubles the CSV I/O. Spark checks every other
+file's header against that schema (``enforceSchema=false``) and fails
+on a non-numeric cell (``FAILFAST``), so the declared schema cannot
+silently misread a file.
 """
 
 from __future__ import annotations
 
+import csv
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 LABEL_SCHEMA = T.StructType(
@@ -32,32 +41,62 @@ def load_labels(spark: SparkSession, path: str) -> DataFrame:
     Key layout per ``load_data.py:17-19``: subject = key[0:3],
     trial = key[3:6], arm = after '.'."""
     raw = spark.read.csv(path, header=False, schema=LABEL_SCHEMA)
-    return raw.select(
-        F.substring("key", 1, 3).alias("subject"),
-        F.substring("key", 4, 3).alias("trial"),
-        F.split("key", r"\.").getItem(1).alias("arm"),
-        "start",
-        "end",
-        "action",
+    return raw.selectExpr(
+        "substring(`key`, 1, 3) AS subject",
+        "substring(`key`, 4, 3) AS trial",
+        "split(`key`, '[.]')[1] AS arm",
+        "`start`",
+        "`end`",
+        "`action`",
     )
 
 
-def _with_file_keys(df: DataFrame) -> DataFrame:
+def _csv_header(spark: SparkSession, pattern: str) -> list[str]:
+    """Column names from the header line of the first file matching
+    ``pattern``, read on the driver through the Hadoop ``FileSystem``
+    (any Hadoop path; no Spark job)."""
+    jvm = spark.sparkContext._jvm
+    glob = jvm.org.apache.hadoop.fs.Path(pattern)
+    fs = glob.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    matches = fs.globStatus(glob)
+    if matches is None or len(matches) == 0:
+        raise FileNotFoundError(f"no file matches {pattern}")
+    reader = jvm.java.io.BufferedReader(
+        jvm.java.io.InputStreamReader(fs.open(matches[0].getPath()), "UTF-8")
+    )
+    try:
+        line = reader.readLine()
+    finally:
+        reader.close()
+    if not line:
+        raise ValueError(f"{matches[0].getPath().toString()}: no header line")
+    return next(csv.reader([line.lstrip("\ufeff")]))
+
+
+def _with_file_keys(df: DataFrame, columns: list[str]) -> DataFrame:
     """S4: parse subject/trial from the source file name
-    (``load_data.py:86-87``: fn[:3], fn[3:6])."""
-    base = F.element_at(F.split(F.input_file_name(), "/"), -1)
-    return df.withColumn("subject", F.substring(base, 1, 3)).withColumn(
-        "trial", F.substring(base, 4, 3)
+    (``load_data.py:86-87``: fn[:3], fn[3:6]); ``columns`` are
+    ``df``'s columns, a file's own subject/trial columns are replaced."""
+    base = "element_at(split(input_file_name(), '/'), -1)"
+    return df.selectExpr(
+        *[f"`{c}`" for c in columns if c not in ("subject", "trial")],
+        f"substring({base}, 1, 3) AS subject",
+        f"substring({base}, 4, 3) AS trial",
     )
 
 
 def load_sensor_csv_dir(spark: SparkSession, path: str) -> DataFrame:
     """S2/S3: one glob scan over a directory of per-trial sensor CSVs
-    (header row, float columns), keyed by filename."""
-    df = spark.read.option("header", True).option("inferSchema", True).csv(
-        os.path.join(path, "*.csv")
+    (header row, numeric columns), keyed by filename. Every column is
+    DOUBLE, named by the first file's header (module docstring: why
+    not inferred); an empty cell is a NULL, i.e. a missing sample."""
+    pattern = os.path.join(path, "*.csv")
+    columns = _csv_header(spark, pattern)
+    schema = T.StructType([T.StructField(c, T.DoubleType(), True) for c in columns])
+    df = spark.read.csv(
+        pattern, schema=schema, header=True, enforceSchema=False, mode="FAILFAST"
     )
-    return _with_file_keys(df)
+    return _with_file_keys(df, columns)
 
 
 def write_submission_csv(df: DataFrame, path: str, single_file: bool = True) -> None:

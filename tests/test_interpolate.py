@@ -167,3 +167,17 @@ def test_plan_has_no_unbounded_following_and_one_exchange(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "unboundedfollowing" not in plan.lower(), plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_user_columns_named_like_internal_ones_pass_through(spark):
+    """Internal columns take a prefix no input column starts with, so a
+    caller's ``_ippos`` or ``_pos`` column is neither read nor shadowed."""
+    df = spark.createDataFrame(
+        [(0, 1, None, 7, "a"), (0, 2, 2.0, 8, "b"), (0, 3, None, 9, "c"), (0, 4, 4.0, 1, "d")],
+        "g long, t long, v double, _ippos long, _pos string",
+    )
+    out = interpolate_linear(df, ["g"], ["t"], ["v"], leading_fill=-1.5)
+    assert out.columns == df.columns
+    assert [tuple(r) for r in out.orderBy("t").collect()] == [
+        (0, 1, -1.5, 7, "a"), (0, 2, 2.0, 8, "b"), (0, 3, 3.0, 9, "c"), (0, 4, 4.0, 1, "d"),
+    ]

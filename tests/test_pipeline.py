@@ -127,6 +127,136 @@ def test_mocap_gather_features_match_reference_math(spark):
         np.testing.assert_allclose(got, expected, rtol=1e-9, atol=1e-9)
 
 
+# ------------------------------------------------- golden: EMG frame features
+
+def _emg_feats_golden(emg_rows, anchors, left_ms=2000, right_ms=2000,
+                      frame_rows=200, pad_rows=120):
+    """numpy re-derivation of generate_submission.py:368-376: the
+    +-2 s block of 200 ms slots, pad slots of 120 zero samples at the
+    trial edges, robust scaling per subject (then nan_to_num), 200-sample
+    frames, mean |x| per frame and channel, frame-major flatten."""
+    chans = bbdc.EMG_CHANNELS
+    pdf = pd.DataFrame(emg_rows, columns=["subject", "trial", "ts", *chans])
+    windows, samples = {}, {}
+    for (s, t), grp in pdf.groupby(["subject", "trial"]):
+        g = grp.sort_values("ts").reset_index(drop=True)
+        g[chans] = g[chans].interpolate(method="linear", axis=0).fillna(0)
+        g["window"] = (g["ts"] * 1000).astype(np.int64) // STEP * STEP
+        windows[(s, t)] = {int(w): wg[chans].to_numpy() for w, wg in g.groupby("window")}
+        samples.setdefault(s, []).append(g[chans].to_numpy())
+    scaler = {}
+    for s, parts in samples.items():
+        x = np.concatenate(parts)
+        q25, med, q75 = np.percentile(x, [25, 50, 75], axis=0)
+        scaler[s] = (med, q75 - q25)
+    out = {}
+    for s, t, win_end in anchors:
+        wd = windows[(s, t)]
+        max_key = max(wd)
+        block = np.concatenate([
+            np.zeros((pad_rows, len(chans))) if ix < 0 or ix >= max_key else wd[ix]
+            for ix in range(win_end - left_ms, win_end + right_ms, STEP)
+        ])
+        med, iqr = scaler[s]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            scaled = np.nan_to_num((block - med) / iqr)
+        out[(s, t, win_end)] = np.concatenate([
+            np.abs(scaled[i:i + frame_rows]).mean(axis=0)
+            for i in range(0, len(scaled), frame_rows)
+        ])
+    return out
+
+
+def test_emg_frame_features_match_reference_math(spark):
+    """Includes a subject whose c3 is constant 0 (IQR 0): its scaled
+    values are 0/0, which nan_to_num zeroes."""
+    subjects = ("s01", "s02")
+    labels_rows, emg_rows, _ = make_fixture(subjects=subjects, span_s=1.6)
+    emg_rows = [
+        (*r[:6], 0.0, *r[7:]) if r[0] == "s02" else r for r in emg_rows
+    ]
+    labels_df, _, _ = fixture_dfs(spark, subjects=subjects, span_s=1.6)
+    emg_df = spark.createDataFrame(
+        emg_rows,
+        "subject string, trial string, ts double, "
+        + ", ".join(f"{c} double" for c in bbdc.EMG_CHANNELS),
+    )
+    emg = bbdc.prepare_emg(emg_df)
+    anchors = bbdc.expand_targets(labels_df).filter("arm = 'la'").select(
+        "subject", "trial", "win_end"
+    )
+    got = {
+        (r["subject"], r["trial"], r["win_end"]): r["emg_feats"]
+        for r in bbdc.emg_frame_features(
+            emg, anchors, bbdc.subject_scaler_stats(emg)
+        ).collect()
+    }
+    want = _emg_feats_golden(emg_rows, list(got))
+    assert len(got) == len(_expand_targets_golden(labels_rows)) // 2
+    assert {k[0] for k in got} == set(subjects)
+    for key, feats in got.items():
+        assert len(feats) == 12 * 8
+        np.testing.assert_allclose(feats, want[key], rtol=1e-9, atol=1e-12, err_msg=str(key))
+    # the IQR-0 channel really went through the nan_to_num path
+    assert all(feats[3::8] == [0.0] * 12 for key, feats in got.items() if key[0] == "s02")
+
+
+# ------------------------------------------------- driver plan-assembly cost
+
+def test_training_matrix_build_py4j_budget(spark, tmp_path):
+    """Building the bbdc training-matrix plan (CSV ingest, EMG
+    windowing, robust scaling, context-frame features, label join)
+    sends at most a fixed number of py4j commands. The parsed-SQL
+    plan builders need about 700 (the Column-API forms needed ~6 100);
+    one stage rebuilt from Column objects (~13 round trips per call)
+    adds hundreds to thousands."""
+    import os
+
+    from bbdc20_submission_spark.sources import native
+
+    labels, emg, _ = make_fixture(subjects=("s01", "s02"), span_s=1.6)
+    with open(tmp_path / "labels.csv", "w") as fh:
+        fh.writelines(f"{k},{s},{e},{a}\n" for k, s, e, a in labels)
+    os.makedirs(tmp_path / "emg")
+    for s in ("s01", "s02"):
+        with open(tmp_path / "emg" / f"{s}t01.csv", "w") as fh:
+            fh.write(",".join(["ts", *bbdc.EMG_CHANNELS]) + "\n")
+            fh.writelines(
+                ",".join("" if v is None else repr(v) for v in r[2:]) + "\n"
+                for r in emg if r[0] == s
+            )
+
+    def build():
+        labels_df = native.load_labels(spark, str(tmp_path / "labels.csv"))
+        emg_df = bbdc.prepare_emg(native.load_sensor_csv_dir(spark, str(tmp_path / "emg")))
+        la = bbdc.expand_targets(labels_df).filter("arm = 'la'")
+        left_dim, _ = bbdc.arm_label_dims(labels_df)
+        feats = bbdc.emg_frame_features(
+            emg_df, la.select("subject", "trial", "win_end"), bbdc.subject_scaler_stats(emg_df)
+        )
+        return (
+            feats.join(la, ["subject", "trial", "win_end"])
+            .join(F.broadcast(left_dim), "action")
+            .select("emg_feats", "code")
+        )
+
+    build()  # first build fills the JVM-side caches
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counting_send(*args, **kwargs):
+        sent[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting_send
+    try:
+        build()
+    finally:
+        client.send_command = send
+    assert 0 < sent[0] <= 1000, f"{sent[0]} py4j commands to build the training matrix"
+
+
 # ------------------------------------------------- end-to-end invariants
 
 E2E_KW = dict(span_s=3.2)

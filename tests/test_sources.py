@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from bbdc20_submission_spark.sources.native import (
@@ -38,6 +39,60 @@ def test_sensor_dir_scan_keys_from_filenames(spark, tmp_path):
     got = {(r["subject"], r["trial"]) for r in df.select("subject", "trial").distinct().collect()}
     assert got == {("s01", "t01"), ("s02", "t05")}
     assert df.count() == 4
+
+
+def _sensor_dir(tmp_path, files: dict[str, str]) -> str:
+    d = tmp_path / "sensors"
+    d.mkdir()
+    for name, text in files.items():
+        (d / name).write_text(text)
+    return str(d)
+
+
+def test_sensor_dir_build_fires_no_job(spark, tmp_path):
+    """The schema comes from the first file's header on the driver:
+    building the frame runs no Spark job (inference ran two)."""
+    d = _sensor_dir(tmp_path, {"s01t01.csv": "ts,c0\n0.0,1.0\n", "s02t01.csv": "ts,c0\n0.0,2.0\n"})
+    sc = spark.sparkContext
+    group = "test-sensor-dir-build"
+    sc.setJobGroup(group, "loader build")
+    try:
+        df = load_sensor_csv_dir(spark, d)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert df.count() == 2  # the group does capture this thread's jobs
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_sensor_dir_reads_every_column_as_double(spark, tmp_path):
+    d = _sensor_dir(tmp_path, {"s01t01.csv": "ts,c0,c1\n0,1,\n1,2,3\n"})
+    df = load_sensor_csv_dir(spark, d)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+        ("ts", "double"), ("c0", "double"), ("c1", "double"),
+        ("subject", "string"), ("trial", "string"),
+    ]
+    rows = sorted(tuple(r) for r in df.select("ts", "c0", "c1").collect())
+    assert rows == [(0.0, 1.0, None), (1.0, 2.0, 3.0)]
+
+
+def test_sensor_dir_rejects_a_different_header(spark, tmp_path):
+    d = _sensor_dir(tmp_path, {"s01t01.csv": "ts,c0\n0.0,1.0\n", "s02t01.csv": "ts,c9\n0.0,2.0\n"})
+    with pytest.raises(Exception, match="(?i)header"):
+        load_sensor_csv_dir(spark, d).collect()
+
+
+def test_sensor_dir_rejects_a_non_numeric_cell(spark, tmp_path):
+    d = _sensor_dir(tmp_path, {"s01t01.csv": "ts,c0\n0.0,1.0\n0.1,abc\n"})
+    with pytest.raises(Exception, match="(?i)malformed"):
+        load_sensor_csv_dir(spark, d).collect()
+
+
+def test_sensor_dir_empty_raises(spark, tmp_path):
+    d = _sensor_dir(tmp_path, {})
+    with pytest.raises(FileNotFoundError):
+        load_sensor_csv_dir(spark, d)
 
 
 def test_submission_sink_headerless(spark, tmp_path):
