@@ -21,10 +21,13 @@ def telescoping_mean_diff(value: Column | str, order: Column) -> Column:
     telescoping identity avoids materializing the diffs (SURVEY A3).
     ``order`` must be a deterministic (tie-broken) sort key expression.
     Returns null for groups of size 1 (0/0), matching np.mean([]) NaN
-    normalized to null.
+    normalized to null — ``try_divide``, because ANSI mode (the Spark 4
+    default) raises DIVIDE_BY_ZERO on a plain ``/``.
     """
     v = F.col(value) if isinstance(value, str) else value
-    return (F.max_by(v, order) - F.min_by(v, order)) / (F.count(v) - F.lit(1))
+    return F.try_divide(
+        F.max_by(v, order) - F.min_by(v, order), F.count(v) - F.lit(1)
+    )
 
 
 def block_sum_diff(

@@ -220,30 +220,6 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     )
 
 
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """k-word shingles as strings -> array<string> (distinct).
-
-    NOTE: inline form — the tokenizer is re-evaluated per shingle
-    index inside the transform (no CSE across HOF lambdas). Fine for
-    tests/small frames; hot paths should project ``ws_tokens`` into a
-    column and use ``shingles_from_tokens`` (measured ~4x)."""
-    return shingles_from_tokens(ws_tokens(text), k)
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: for seed s, min over shingles of
-    xxhash64(shingle, s) -> array<long> of length num_hashes.
-
-    One narrow pass; signature width is constant so downstream shuffle
-    volume is O(docs), not O(text)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, lambda x: F.xxhash64(x, F.lit(s))))
-            for s in range(num_hashes)
-        ]
-    )
-
-
 def portable_minhash_md5s(x: Column, num_hashes: int) -> list[Column]:
     """Engine-portable MinHash slot hashes: ceil(num_hashes/4) salted
     md5s per value (``md5(x || ':q')``), each split into four
@@ -818,72 +794,16 @@ def _block_slices(n_blocks: int) -> list[tuple[int, int]]:
     return slices
 
 
-def _flip_masks(w: int, r: int) -> list[int]:
-    """All XOR masks of weight <= r over a w-bit block (r in 1..2 —
-    weight-3 fanout is C(21,3) ~ 1330/block, never cost-effective)."""
-    masks = [0]
-    if r >= 1:
-        masks += [1 << j for j in range(w)]
-    if r >= 2:
-        masks += [
-            (1 << i) | (1 << j) for i in range(w) for j in range(i + 1, w)
-        ]
-    return masks
-
-
-# Measured cost ratio (r13, 32-thread local probes): one exploded
-# probe ROW — expression build + exchange + Arrow + kernel traversal —
-# costs ~1.5 us, one SWAR pair EVAL in the preallocated kernel ~20 ns.
-# The first auto model weighted them equally and picked r=2 for media
-# at 800k blobs, where the measured wall was r1 194 s vs r2 >15 min
-# per rep: the 718x probe-row fanout utterly dominated the candidate
-# savings. With this weight the crossover moves where the measurement
-# says it is (~6M blobs at budget 8).
-_PROBE_ROW_COST = 80
-
-
-def _probe_flips_auto(n: int, max_hamming: int) -> int:
-    """Pick the multi-index block-split radius r (probe flips per
-    block) minimizing estimated cost for an n-doc corpus:
-    ``_PROBE_ROW_COST * n * sum(phi_b)`` (probe explosion, exchange-
-    weighted) plus expected i.i.d. candidate volume
-    ``n^2 * sum(phi_b / 2^w_b)`` (SWAR pair evals) — wider blocks
-    (higher r, fewer blocks) trade linear probe fanout for
-    EXPONENTIALLY better bucket selectivity. Calibrated against the
-    measured media ladder: r=1 everywhere below ~6M docs at budget 8
-    (certified plans identical); r=2 is the far-tail configuration.
-    The choice is a pure plan decision: every candidate is verified
-    against the exact hamming distance, so output is identical for
-    any r. Note the model intentionally ignores downstream
-    verification (e.g. d9's jaccard stage): for verify-dominated
-    compositions the split is cost-irrelevant and callers pin r=1."""
-    import math as _math
-
-    best_r, best_cost = 1, None
-    for r in (1, 2):
-        s = max_hamming // (r + 1) + 1
-        cost = 0.0
-        for _, w in _block_slices(s):
-            phi = sum(_math.comb(w, j) for j in range(r + 1))
-            cost += _PROBE_ROW_COST * n * phi + n * n * phi / 2.0**w
-        if best_cost is None or cost < best_cost:
-            best_r, best_cost = r, cost
-    return best_r
-
-
 def simhash_near_dups(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 8,
-    bands: int | None = None,
     bucket_cap: int = 1024,
     shingle_k: int | None = None,
     exact_hot_buckets: bool | None = None,
     exact_pair_budget: int = 1_000_000_000,
     bounded_probe_rounds: int = 4,
-    probe_flips: int | str = 1,
-    approx_n: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs with guaranteed recall via multi-index
     Hamming search (the HmSearch/multi-index-hashing family): split
@@ -913,10 +833,6 @@ def simhash_near_dups(
     ``hamming_near_pairs`` for the full plan menu and the automatic
     budget guard.
 
-    ``bands`` (legacy): force the equality-only banded scheme with
-    that many slices; ``bands <= max_hamming`` raises, because that
-    configuration silently loses pairs.
-
     ``shingle_k``: fingerprint over k-shingle features instead of
     unigram tokens (``simhash_sets_df`` — see there for why shingles
     de-correlate the fingerprints by orders of magnitude). Callers
@@ -934,26 +850,20 @@ def simhash_near_dups(
     return hamming_near_pairs(
         fp,
         max_hamming=max_hamming,
-        bands=bands,
         bucket_cap=bucket_cap,
         exact_hot_buckets=exact_hot_buckets,
         exact_pair_budget=exact_pair_budget,
         bounded_probe_rounds=bounded_probe_rounds,
-        probe_flips=probe_flips,
-        approx_n=approx_n,
     )
 
 
 def hamming_near_pairs(
     fp: DataFrame,
     max_hamming: int = 8,
-    bands: int | None = None,
     bucket_cap: int = 1024,
     exact_hot_buckets: bool | None = None,
     exact_pair_budget: int = 1_000_000_000,
     bounded_probe_rounds: int = 4,
-    probe_flips: int | str = 1,
-    approx_n: int | None = None,
 ) -> DataFrame:
     """All pairs of a ``[_id, _fp]`` fingerprint frame within the
     hamming budget — the candidate-join core of ``simhash_near_dups``
@@ -974,6 +884,15 @@ def hamming_near_pairs(
     budget scales with the bit width for a fixed angular threshold,
     so block width is ~2/theta bits for ANY fingerprint size.
 
+    The radius is 1 (``s = max_hamming//2 + 1`` blocks, each probed
+    with its one-bit flips). The radius-2 split (``max_hamming//3 + 1``
+    wider blocks probed with every weight-<=2 flip) would emit the same
+    pairs, since every candidate is verified against the exact distance,
+    but it lost every measurement: media 16x (800k blobs) r1 194 s vs
+    r2 >15 min per rep, d9 64x r2 524 s vs 203 s exact / 132 s bounded
+    at r1 (BENCHNOTES r13) — its ~16x probe fanout costs more in the
+    exchange than its wider blocks save in candidates.
+
     ``exact_hot_buckets`` (r11: the guard is now automatic):
 
     * ``None`` (default) — AUTO: after the hot-bucket dim is built
@@ -989,9 +908,7 @@ def hamming_near_pairs(
       and the auto plan is byte-identical to the exact one — the
       guard costs one tiny agg job and changes nothing.
     * ``True`` — exact recall regardless of cost (the caller opts
-      INTO the quadratic region; no guard job runs). Incompatible
-      with ``bands`` (the legacy branch sub-samples both sides and
-      cannot honor exactness — it raises).
+      INTO the quadratic region; no guard job runs).
     * ``False`` — always the bounded plan, never quadratic (r12
       form). Per hot bucket of m = ceil(n/cap) subs: the index side
       hash-assigns each row to ONE sub (salted by the bucket key, so
@@ -1018,399 +935,296 @@ def hamming_near_pairs(
     on a 32-core executor wave — past that the quadratic term
     dominates wall and a bounded plan (or the MinHash-LSH family,
     whose bucket-key entropy is arbitrary — d8 measured 16359/16384
-    at the same 64x probe) is the right tool.
+    at the same 64x probe) is the right tool."""
+    slices = _block_slices(max_hamming // 2 + 1)
+    # SQL-string expression build (one JVM parse, no per-literal
+    # py4j tax). Index side: s exact block values; probe side:
+    # each block value plus its one-bit flips.
+    def slice_sql(o: int, w: int) -> str:
+        return f"(shiftright(_fp, {o}) & {(1 << w) - 1})"
 
-    ``probe_flips`` (r13): the block-split radius r. The pigeonhole
-    generalizes — with ``s = max_hamming // (r+1) + 1`` blocks, a
-    within-budget pair has SOME block differing in at most r bits, so
-    probing each block value plus all its weight-<=r flips keeps
-    recall 1 while blocks get (r+1)/2 times WIDER: at budget 8, r=1
-    means 5 blocks of ~13 bits (occupancy ~n/2^13 — hot past ~10k
-    docs) while r=2 means 3 blocks of ~21 bits (occupancy flat out to
-    ~2M docs) at a probe fanout of ~232 rows/doc/band instead of ~14.
-    Because every candidate is verified against the exact distance,
-    r is a pure PLAN choice — output is bit-identical for any r.
-    ``"auto"`` counts the (cheap, 2-long-column) frame once at plan
-    time and picks argmin of ``n*sum(phi_b) + n^2*sum(phi_b/2^w_b)``
-    over r in {1, 2} (:func:`_probe_flips_auto`) — small corpora keep
-    r=1 (identical certified plans), large corpora buy back the
-    sub-cap occupancy hump the r12 media ladder measured at 19.3x.
-    Ints fix the radius with no plan-time job. Incompatible with the
-    legacy ``bands`` scheme (raises unless 1).
-
-    ``approx_n``: row-count hint for the auto pick (parquet footer
-    counts, or a count the caller already materialized) — the cost
-    model only needs the ORDER of n, so any approximation within a
-    small factor is fine and the plan-time count job is skipped
-    entirely (the s4/semdedup auto-k pattern)."""
-    if bands is not None and bands <= max_hamming:
-        raise ValueError(
-            f"bands={bands} <= max_hamming={max_hamming} breaks the "
-            "pigeonhole recall guarantee; use bands > max_hamming"
-        )
-    if bands is not None and probe_flips != 1:
-        raise ValueError(
-            "probe_flips is a multi-index block-split knob; the legacy "
-            "banded scheme (bands=...) probes exact values only — use "
-            "bands=None for radius probing"
-        )
-    if probe_flips == "auto":
-        probe_flips = _probe_flips_auto(
-            approx_n if approx_n is not None else fp.count(), max_hamming
-        )
-    if probe_flips not in (1, 2):
-        raise ValueError(
-            f"probe_flips={probe_flips!r}: need 1, 2, or 'auto' "
-            "(weight-3 probe fanout is never cost-effective)"
-        )
-    if bands is not None and exact_hot_buckets is True:
-        raise ValueError(
-            "exact_hot_buckets=True is incompatible with the legacy "
-            "banded scheme (bands=...): it hash-splits hot buckets on "
-            "BOTH join sides, so hot-bucket recall is bounded, not "
-            "exact. Use the default multi-index scheme (bands=None) "
-            "for exactness, or exact_hot_buckets=False/None to accept "
-            "the bounded legacy behavior."
-        )
-    if bands is not None:
-        # legacy equality-only pigeonhole: bands > max_hamming slices
-        banded = fp.select(
-            "_id",
-            "_fp",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            F.shiftright("_fp", o)
-                            .bitwiseAND(F.lit((1 << w) - 1))
-                            .alias("slice"),
-                        )
-                        for b, (o, w) in enumerate(_block_slices(bands))
-                    ]
-                )
-            ).alias("bb"),
-        ).select("_id", "_fp", "bb.band", "bb.slice")
-        banded = _cap_buckets(
-            banded, ["band", "slice"], "_id", bucket_cap,
-            salt_cols=("band", "slice"),
-        )
-        left = banded.select(
-            F.col("_id").alias("id_a"), F.col("_fp").alias("fp_a"),
-            "band", "slice", "sub_bucket",
-        )
-        right = banded.select(
-            F.col("_id").alias("id_b"), F.col("_fp").alias("fp_b"),
-            "band", "slice", "sub_bucket",
-        )
-        joined = left.join(right, ["band", "slice", "sub_bucket"])
-    else:
-        slices = _block_slices(max_hamming // (probe_flips + 1) + 1)
-        # SQL-string expression build (one JVM parse, no per-literal
-        # py4j tax). Index side: s exact block values; probe side:
-        # each block value plus its weight-<=probe_flips flips.
-        def slice_sql(o: int, w: int) -> str:
-            return f"(shiftright(_fp, {o}) & {(1 << w) - 1})"
-
-        idx_sql = "array(%s)" % ",".join(
-            f"named_struct('band', {b}, 'slice', {slice_sql(o, w)})"
-            for b, (o, w) in enumerate(slices)
-        )
-        probe_sql = "array(%s)" % ",".join(
-            f"named_struct('band', {b}, 'slice', ({slice_sql(o, w)} ^ {flip}))"
-            for b, (o, w) in enumerate(slices)
-            for flip in _flip_masks(w, probe_flips)
-        )
-        # inline() explodes straight to (band, slice) — one projection
-        # instead of explode + unpack per side (r14)
-        index = fp.selectExpr("_id", "_fp", f"inline({idx_sql})")
-        probe = fp.selectExpr("_id", "_fp", f"inline({probe_sql})")
-        hot = _hot_buckets(index, ["band", "slice"], bucket_cap)
-        if exact_hot_buckets is None:
-            # AUTO guard: COLLECT the hot dim (bounded: a bucket is
-            # hot only past cap members, so the dim holds at most
-            # s * n/cap rows — a few thousand even at the 64x octave,
-            # empty inside the applicability window) and estimate the
-            # exact scheme's hot candidate volume as
-            # (w+1) * sum(_bn^2) — each hot bucket's index occupancy
-            # times the (w+1)-bucket probed neighborhood (occupancies
-            # are ~uniform in the all-hot low-entropy regime that
-            # creates this problem). The collected rows are then
-            # replayed as a LOCAL relation for the sub-bucket joins,
-            # so the guard's one job REPLACES the plan-side hot
-            # recomputation instead of adding to it (the r11 probe
-            # measured +2.7 s at 16x for the agg-only form). Inside
-            # the window the dim is empty, the estimate is 0, and
-            # auto == exact in results; past the window this is what
-            # stops a 100 TB caller from silently entering the
-            # quadratic region (r10's 155+ s at the 64x octave).
-            hot_rows = hot.collect()
-            import math as _math
-
-            w_max = max(w for _, w in slices)
-            phi_max = sum(
-                _math.comb(w_max, j) for j in range(probe_flips + 1)
-            )
-            est_pairs = sum(r["_bn"] * r["_bn"] for r in hot_rows) * phi_max
-            hot = fp.sparkSession.createDataFrame(hot_rows, hot.schema)
-            use_exact = est_pairs <= exact_pair_budget
-            if not use_exact:
-                import warnings
-
-                warnings.warn(
-                    "hamming_near_pairs: estimated exact hot-bucket "
-                    f"candidate volume ~{est_pairs:.2e} pair evals "
-                    f"exceeds exact_pair_budget={exact_pair_budget:.0e}"
-                    " — the corpus is past the multi-index "
-                    "applicability window (n >~ bucket_cap * "
-                    "2^(64/s)); degrading to the bounded "
-                    "O(n*cap*rounds) sub-sampled plan (family "
-                    "connectivity preserved via hamming-verified "
-                    "chain edges across sub-buckets; pair recall "
-                    f"~1-(1-{bounded_probe_rounds}/m)^k over k "
-                    "matching bands). Pass exact_hot_buckets=True to "
-                    "opt into the quadratic exact plan, raise "
-                    "bounded_probe_rounds for more recall at linear "
-                    "cost, or switch to the MinHash-LSH family "
-                    "(minhash_lsh_candidates) for scale-free bucket "
-                    "entropy.",
-                    UserWarning,
-                    stacklevel=2,
-                )
-        else:
-            use_exact = exact_hot_buckets
-        # index side: hash-assigned subs (<= cap rows per task), salted
-        # by the bucket key so the assignment is INDEPENDENT per band —
-        # unsalted, a pair split apart in one band was split apart in
-        # every band (r11 behavior). Probe side: exact plan EXPLODES
-        # into every sub of a hot bucket (recall 1 — hash-assigning
-        # both sides would only compare pairs whose id hashes collide
-        # mod m, see _explode_sub_buckets); bounded plan assigns each
-        # probe row to up to bounded_probe_rounds round-salted subs
-        # (recall ~rounds/m per matching band, cost linear in rounds).
-        # At the certified SFs no bucket is hot, so all plans are
-        # identical there.
-        if bounded_probe_rounds < 1:
-            raise ValueError(
-                f"bounded_probe_rounds={bounded_probe_rounds} must be >= 1"
-            )
-        salt = ("band", "slice")
-        left = _apply_sub_buckets(
-            index, hot, ["band", "slice"], "_id", bucket_cap, salt_cols=salt
-        ).withColumn("_side", F.lit(0))
-        right = (
-            _explode_sub_buckets(probe, hot, ["band", "slice"], bucket_cap)
-            if use_exact
-            else _multi_sub_buckets(
-                probe,
-                hot,
-                ["band", "slice"],
-                "_id",
-                bucket_cap,
-                bounded_probe_rounds,
-                salt_cols=salt,
-            )
-        ).withColumn("_side", F.lit(1))
-        # Per-bucket pair generation runs as a numpy XOR+popcount
-        # kernel instead of a block equi-join: the join streams the
-        # FULL index x probe cross product through SMJ row machinery
-        # (measured 3.5e9 rows / ~50 s at the 16x replica for 435k
-        # survivors — per-row operator overhead, not arithmetic, was
-        # the cost), while the kernel materializes each bucket once
-        # and evaluates the same pairs as vectorized uint64 SWAR
-        # popcounts (~10 machine ops per pair). The kernel rides
-        # mapInPandas over a repartition on the bucket key with the
-        # bucket split done IN-KERNEL (pandas groupby): per-call
-        # overhead is then per-PARTITION, not per-bucket — the
-        # groupBy().applyInPandas() form paid ~2.5 s of per-group
-        # Arrow/eval overhead across ~1300 buckets at sf0.1, swamping
-        # the arithmetic it saved. Both sides shuffle only the
-        # exploded keys (s + s*(w+1) small rows per doc — identical
-        # exchange volume to the join plan); per-partition frames are
-        # bounded by the same shuffle-partition sizing as any
-        # exchange, and the blocked matrix bounds the kernel's peak
-        # at ~35 MB per task regardless of bucket shape. Same pairs,
-        # same recall guarantee — pinned against the brute-force
-        # cross join by test_hamming_near_pairs_pigeonhole_recall and
-        # the kernel A/B test. (The UDF closure is self-contained —
-        # numpy + literals only — so executors need not import this
-        # package.)
-        id_type = fp.schema["_id"].dataType.simpleString()
-        thr = int(max_hamming)
-
-        def _partition_pairs(batches):
-            import numpy as np
-            import pandas as pd
-
-            chunks = list(batches)
-            if not chunks:
-                return
-            pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-            M1 = np.uint64(0x5555555555555555)
-            M2 = np.uint64(0x3333333333333333)
-            M4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-            H01 = np.uint64(0x0101010101010101)
-            C1, C2, C4, C56 = (
-                np.uint64(1), np.uint64(2), np.uint64(4), np.uint64(56),
-            )
-            THR = np.uint64(thr)
-            out_a: list = []
-            out_b: list = []
-            out_h: list = []
-            # Blocked SWAR popcount with PREALLOCATED buffers and
-            # in-place ufuncs (r13): the expression form allocated ~9
-            # fresh 34 MB temporaries per block, so with 32 executor
-            # threads the kernel was MEMORY-BANDWIDTH-bound (plus
-            # allocator/huge-page churn) — measured 2.5-3.7x slower
-            # than this form at identical pair counts. 256x4096 blocks
-            # (8 MB) keep the working set near-cache-resident; outputs
-            # are bit-identical (exact integer popcounts either way).
-            BA, BB = 256, 4096
-            xbuf = np.empty((BA, BB), dtype=np.uint64)
-            tbuf = np.empty((BA, BB), dtype=np.uint64)
-            for _, g in pdf.groupby(["band", "slice", "sub_bucket"], sort=False):
-                ia = g["_side"].to_numpy() == 0
-                if not ia.any() or ia.all():
-                    continue
-                ids = g["_id"].to_numpy()
-                fps = np.ascontiguousarray(
-                    g["_fp"].to_numpy(), dtype=np.int64
-                ).view(np.uint64)
-                fa, ids_a = fps[ia], ids[ia]
-                fb, ids_b = fps[~ia], ids[~ia]
-                for s in range(0, len(fa), BA):
-                    fa_s, ia_s = fa[s : s + BA], ids_a[s : s + BA]
-                    na = len(fa_s)
-                    for t in range(0, len(fb), BB):
-                        fb_t = fb[t : t + BB]
-                        nb = len(fb_t)
-                        x = xbuf[:na, :nb]
-                        tmp = tbuf[:na, :nb]
-                        np.bitwise_xor(fa_s[:, None], fb_t[None, :], out=x)
-                        np.right_shift(x, C1, out=tmp)
-                        np.bitwise_and(tmp, M1, out=tmp)
-                        np.subtract(x, tmp, out=x)
-                        np.right_shift(x, C2, out=tmp)
-                        np.bitwise_and(tmp, M2, out=tmp)
-                        np.bitwise_and(x, M2, out=x)
-                        np.add(x, tmp, out=x)
-                        np.right_shift(x, C4, out=tmp)
-                        np.add(x, tmp, out=x)
-                        np.bitwise_and(x, M4, out=x)
-                        np.multiply(x, H01, out=x)
-                        np.right_shift(x, C56, out=x)
-                        mask = (x <= THR) & (
-                            ia_s[:, None] < ids_b[None, t : t + BB]
-                        )
-                        ii, jj = np.nonzero(mask)
-                        if len(ii):
-                            # keep survivors as numpy arrays —
-                            # .extend would box every element to a
-                            # Python object, which dominates when a
-                            # loose budget admits millions of pairs
-                            out_a.append(ia_s[ii])
-                            out_b.append(ids_b[t : t + BB][jj])
-                            out_h.append(x[ii, jj].astype(np.int64))
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "id_a": np.concatenate(out_a),
-                        "id_b": np.concatenate(out_b),
-                        "hamming": pd.Series(
-                            np.concatenate(out_h), dtype="int32"
-                        ),
-                    }
-                )
-
-        pairs = left.unionByName(right).repartition(
-            "band", "slice", "sub_bucket"
-        ).mapInPandas(
-            _partition_pairs,
-            schema=f"id_a {id_type}, id_b {id_type}, hamming int",
-        )
-        if not use_exact:
-            # Chain edges across a hot bucket's subs (r12, mirroring
-            # minhash_lsh_candidates): sub-splitting alone leaves a
-            # capped dup family's subs as disconnected components —
-            # downstream keep-one-per-family clustering would keep
-            # ~m representatives of one family. Link consecutive subs
-            # through their min/max-id members' rep pairs, but —
-            # unlike the MinHash path, where chain edges are a
-            # heuristic riding a later jaccard verify — check the
-            # EXACT hamming distance here (the fingerprints are in
-            # hand), so only true within-budget pairs are emitted and
-            # the output contract (every row within max_hamming) is
-            # preserved. A mixed hot bucket whose consecutive-sub reps
-            # are all collision docs can still split a family (same
-            # residual caveat as MinHash); the probe rounds' ~rounds/m
-            # cross-sub sampling is the second, independent repair.
-            # On a corpus inside the applicability window the hot dim
-            # is empty and every chain stage is a no-op over zero rows.
-            from pyspark.sql import Window
-
-            reps = (
-                left.join(
-                    F.broadcast(hot.select("band", "slice")),
-                    ["band", "slice"],
-                )
-                .groupBy("band", "slice", "sub_bucket")
-                .agg(
-                    F.min(F.struct("_id", "_fp")).alias("_lo"),
-                    F.max(F.struct("_id", "_fp")).alias("_hi"),
-                )
-            )
-            w = Window.partitionBy("band", "slice").orderBy("sub_bucket")
-            chain = (
-                reps.withColumn("_plo", F.lag("_lo").over(w))
-                .withColumn("_phi", F.lag("_hi").over(w))
-                .filter(F.col("_plo").isNotNull())
-                .select(
-                    F.explode(
-                        F.array(
-                            F.struct(
-                                F.col("_plo").alias("x"), F.col("_lo").alias("y")
-                            ),
-                            F.struct(
-                                F.col("_plo").alias("x"), F.col("_hi").alias("y")
-                            ),
-                            F.struct(
-                                F.col("_phi").alias("x"), F.col("_lo").alias("y")
-                            ),
-                            F.struct(
-                                F.col("_phi").alias("x"), F.col("_hi").alias("y")
-                            ),
-                        )
-                    ).alias("_e")
-                )
-                .select(
-                    F.least("_e.x._id", "_e.y._id").alias("id_a"),
-                    F.greatest("_e.x._id", "_e.y._id").alias("id_b"),
-                    hamming64(F.col("_e.x._fp"), F.col("_e.y._fp"))
-                    .cast("int")
-                    .alias("hamming"),
-                )
-                .filter(
-                    (F.col("id_a") != F.col("id_b"))
-                    & (F.col("hamming") <= thr)
-                )
-            )
-            pairs = pairs.unionByName(chain)
-        # the kernel already filtered hamming <= budget and
-        # id_a < id_b; distinct collapses the per-band duplicate
-        # emissions, shuffling only survivors
-        return pairs.distinct()
-
-    return (
-        joined.filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", hamming64(F.col("fp_a"), F.col("fp_b")).alias("hamming"))
-        # filter BEFORE distinct: the block self-join emits every
-        # within-bucket pair, while the pairs that survive the hamming
-        # budget are a tiny set. Deduplicating after the filter
-        # shuffles only survivors instead of the full candidate fanout
-        # (measured ~2x on d9 at sf0.1).
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    idx_sql = "array(%s)" % ",".join(
+        f"named_struct('band', {b}, 'slice', {slice_sql(o, w)})"
+        for b, (o, w) in enumerate(slices)
     )
+    probe_sql = "array(%s)" % ",".join(
+        f"named_struct('band', {b}, 'slice', ({slice_sql(o, w)} ^ {flip}))"
+        for b, (o, w) in enumerate(slices)
+        for flip in [0] + [1 << j for j in range(w)]
+    )
+    # inline() explodes straight to (band, slice) — one projection
+    # instead of explode + unpack per side (r14)
+    index = fp.selectExpr("_id", "_fp", f"inline({idx_sql})")
+    probe = fp.selectExpr("_id", "_fp", f"inline({probe_sql})")
+    hot = _hot_buckets(index, ["band", "slice"], bucket_cap)
+    if exact_hot_buckets is None:
+        # AUTO guard: COLLECT the hot dim (bounded: a bucket is
+        # hot only past cap members, so the dim holds at most
+        # s * n/cap rows — a few thousand even at the 64x octave,
+        # empty inside the applicability window) and estimate the
+        # exact scheme's hot candidate volume as
+        # (w+1) * sum(_bn^2) — each hot bucket's index occupancy
+        # times the (w+1)-bucket probed neighborhood (occupancies
+        # are ~uniform in the all-hot low-entropy regime that
+        # creates this problem). The collected rows are then
+        # replayed as a LOCAL relation for the sub-bucket joins,
+        # so the guard's one job REPLACES the plan-side hot
+        # recomputation instead of adding to it (the r11 probe
+        # measured +2.7 s at 16x for the agg-only form). Inside
+        # the window the dim is empty, the estimate is 0, and
+        # auto == exact in results; past the window this is what
+        # stops a 100 TB caller from silently entering the
+        # quadratic region (r10's 155+ s at the 64x octave).
+        hot_rows = hot.collect()
+        w_max = max(w for _, w in slices)
+        est_pairs = sum(r["_bn"] * r["_bn"] for r in hot_rows) * (w_max + 1)
+        hot = fp.sparkSession.createDataFrame(hot_rows, hot.schema)
+        use_exact = est_pairs <= exact_pair_budget
+        if not use_exact:
+            import warnings
+
+            warnings.warn(
+                "hamming_near_pairs: estimated exact hot-bucket "
+                f"candidate volume ~{est_pairs:.2e} pair evals "
+                f"exceeds exact_pair_budget={exact_pair_budget:.0e}"
+                " — the corpus is past the multi-index "
+                "applicability window (n >~ bucket_cap * "
+                "2^(64/s)); degrading to the bounded "
+                "O(n*cap*rounds) sub-sampled plan (family "
+                "connectivity preserved via hamming-verified "
+                "chain edges across sub-buckets; pair recall "
+                f"~1-(1-{bounded_probe_rounds}/m)^k over k "
+                "matching bands). Pass exact_hot_buckets=True to "
+                "opt into the quadratic exact plan, raise "
+                "bounded_probe_rounds for more recall at linear "
+                "cost, or switch to the MinHash-LSH family "
+                "(minhash_lsh_candidates) for scale-free bucket "
+                "entropy.",
+                UserWarning,
+                stacklevel=2,
+            )
+    else:
+        use_exact = exact_hot_buckets
+    # index side: hash-assigned subs (<= cap rows per task), salted
+    # by the bucket key so the assignment is INDEPENDENT per band —
+    # unsalted, a pair split apart in one band was split apart in
+    # every band (r11 behavior). Probe side: exact plan EXPLODES
+    # into every sub of a hot bucket (recall 1 — hash-assigning
+    # both sides would only compare pairs whose id hashes collide
+    # mod m, see _explode_sub_buckets); bounded plan assigns each
+    # probe row to up to bounded_probe_rounds round-salted subs
+    # (recall ~rounds/m per matching band, cost linear in rounds).
+    # At the certified SFs no bucket is hot, so all plans are
+    # identical there.
+    if bounded_probe_rounds < 1:
+        raise ValueError(
+            f"bounded_probe_rounds={bounded_probe_rounds} must be >= 1"
+        )
+    salt = ("band", "slice")
+    left = _apply_sub_buckets(
+        index, hot, ["band", "slice"], "_id", bucket_cap, salt_cols=salt
+    ).withColumn("_side", F.lit(0))
+    right = (
+        _explode_sub_buckets(probe, hot, ["band", "slice"], bucket_cap)
+        if use_exact
+        else _multi_sub_buckets(
+            probe,
+            hot,
+            ["band", "slice"],
+            "_id",
+            bucket_cap,
+            bounded_probe_rounds,
+            salt_cols=salt,
+        )
+    ).withColumn("_side", F.lit(1))
+    # Per-bucket pair generation runs as a numpy XOR+popcount
+    # kernel instead of a block equi-join: the join streams the
+    # FULL index x probe cross product through SMJ row machinery
+    # (measured 3.5e9 rows / ~50 s at the 16x replica for 435k
+    # survivors — per-row operator overhead, not arithmetic, was
+    # the cost), while the kernel materializes each bucket once
+    # and evaluates the same pairs as vectorized uint64 SWAR
+    # popcounts (~10 machine ops per pair). The kernel rides
+    # mapInPandas over a repartition on the bucket key with the
+    # bucket split done IN-KERNEL (pandas groupby): per-call
+    # overhead is then per-PARTITION, not per-bucket — the
+    # groupBy().applyInPandas() form paid ~2.5 s of per-group
+    # Arrow/eval overhead across ~1300 buckets at sf0.1, swamping
+    # the arithmetic it saved. Both sides shuffle only the
+    # exploded keys (s + s*(w+1) small rows per doc — identical
+    # exchange volume to the join plan); per-partition frames are
+    # bounded by the same shuffle-partition sizing as any
+    # exchange, and the blocked matrix bounds the kernel's peak
+    # at ~35 MB per task regardless of bucket shape. Same pairs,
+    # same recall guarantee — pinned against the brute-force
+    # cross join by test_hamming_near_pairs_pigeonhole_recall and
+    # the kernel A/B test. (The UDF closure is self-contained —
+    # numpy + literals only — so executors need not import this
+    # package.)
+    id_type = fp.schema["_id"].dataType.simpleString()
+    thr = int(max_hamming)
+
+    def _partition_pairs(batches):
+        import numpy as np
+        import pandas as pd
+
+        chunks = list(batches)
+        if not chunks:
+            return
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
+        M1 = np.uint64(0x5555555555555555)
+        M2 = np.uint64(0x3333333333333333)
+        M4 = np.uint64(0x0F0F0F0F0F0F0F0F)
+        H01 = np.uint64(0x0101010101010101)
+        C1, C2, C4, C56 = (
+            np.uint64(1), np.uint64(2), np.uint64(4), np.uint64(56),
+        )
+        THR = np.uint64(thr)
+        out_a: list = []
+        out_b: list = []
+        out_h: list = []
+        # Blocked SWAR popcount with PREALLOCATED buffers and
+        # in-place ufuncs (r13): the expression form allocated ~9
+        # fresh 34 MB temporaries per block, so with 32 executor
+        # threads the kernel was MEMORY-BANDWIDTH-bound (plus
+        # allocator/huge-page churn) — measured 2.5-3.7x slower
+        # than this form at identical pair counts. 256x4096 blocks
+        # (8 MB) keep the working set near-cache-resident; outputs
+        # are bit-identical (exact integer popcounts either way).
+        BA, BB = 256, 4096
+        xbuf = np.empty((BA, BB), dtype=np.uint64)
+        tbuf = np.empty((BA, BB), dtype=np.uint64)
+        for _, g in pdf.groupby(["band", "slice", "sub_bucket"], sort=False):
+            ia = g["_side"].to_numpy() == 0
+            if not ia.any() or ia.all():
+                continue
+            ids = g["_id"].to_numpy()
+            fps = np.ascontiguousarray(
+                g["_fp"].to_numpy(), dtype=np.int64
+            ).view(np.uint64)
+            fa, ids_a = fps[ia], ids[ia]
+            fb, ids_b = fps[~ia], ids[~ia]
+            for s in range(0, len(fa), BA):
+                fa_s, ia_s = fa[s : s + BA], ids_a[s : s + BA]
+                na = len(fa_s)
+                for t in range(0, len(fb), BB):
+                    fb_t = fb[t : t + BB]
+                    nb = len(fb_t)
+                    x = xbuf[:na, :nb]
+                    tmp = tbuf[:na, :nb]
+                    np.bitwise_xor(fa_s[:, None], fb_t[None, :], out=x)
+                    np.right_shift(x, C1, out=tmp)
+                    np.bitwise_and(tmp, M1, out=tmp)
+                    np.subtract(x, tmp, out=x)
+                    np.right_shift(x, C2, out=tmp)
+                    np.bitwise_and(tmp, M2, out=tmp)
+                    np.bitwise_and(x, M2, out=x)
+                    np.add(x, tmp, out=x)
+                    np.right_shift(x, C4, out=tmp)
+                    np.add(x, tmp, out=x)
+                    np.bitwise_and(x, M4, out=x)
+                    np.multiply(x, H01, out=x)
+                    np.right_shift(x, C56, out=x)
+                    mask = (x <= THR) & (
+                        ia_s[:, None] < ids_b[None, t : t + BB]
+                    )
+                    ii, jj = np.nonzero(mask)
+                    if len(ii):
+                        # keep survivors as numpy arrays —
+                        # .extend would box every element to a
+                        # Python object, which dominates when a
+                        # loose budget admits millions of pairs
+                        out_a.append(ia_s[ii])
+                        out_b.append(ids_b[t : t + BB][jj])
+                        out_h.append(x[ii, jj].astype(np.int64))
+        if out_a:
+            yield pd.DataFrame(
+                {
+                    "id_a": np.concatenate(out_a),
+                    "id_b": np.concatenate(out_b),
+                    "hamming": pd.Series(
+                        np.concatenate(out_h), dtype="int32"
+                    ),
+                }
+            )
+
+    pairs = left.unionByName(right).repartition(
+        "band", "slice", "sub_bucket"
+    ).mapInPandas(
+        _partition_pairs,
+        schema=f"id_a {id_type}, id_b {id_type}, hamming int",
+    )
+    if not use_exact:
+        # Chain edges across a hot bucket's subs (r12, mirroring
+        # minhash_lsh_candidates): sub-splitting alone leaves a
+        # capped dup family's subs as disconnected components —
+        # downstream keep-one-per-family clustering would keep
+        # ~m representatives of one family. Link consecutive subs
+        # through their min/max-id members' rep pairs, but —
+        # unlike the MinHash path, where chain edges are a
+        # heuristic riding a later jaccard verify — check the
+        # EXACT hamming distance here (the fingerprints are in
+        # hand), so only true within-budget pairs are emitted and
+        # the output contract (every row within max_hamming) is
+        # preserved. A mixed hot bucket whose consecutive-sub reps
+        # are all collision docs can still split a family (same
+        # residual caveat as MinHash); the probe rounds' ~rounds/m
+        # cross-sub sampling is the second, independent repair.
+        # On a corpus inside the applicability window the hot dim
+        # is empty and every chain stage is a no-op over zero rows.
+        from pyspark.sql import Window
+
+        reps = (
+            left.join(
+                F.broadcast(hot.select("band", "slice")),
+                ["band", "slice"],
+            )
+            .groupBy("band", "slice", "sub_bucket")
+            .agg(
+                F.min(F.struct("_id", "_fp")).alias("_lo"),
+                F.max(F.struct("_id", "_fp")).alias("_hi"),
+            )
+        )
+        w = Window.partitionBy("band", "slice").orderBy("sub_bucket")
+        chain = (
+            reps.withColumn("_plo", F.lag("_lo").over(w))
+            .withColumn("_phi", F.lag("_hi").over(w))
+            .filter(F.col("_plo").isNotNull())
+            .select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col("_plo").alias("x"), F.col("_lo").alias("y")
+                        ),
+                        F.struct(
+                            F.col("_plo").alias("x"), F.col("_hi").alias("y")
+                        ),
+                        F.struct(
+                            F.col("_phi").alias("x"), F.col("_lo").alias("y")
+                        ),
+                        F.struct(
+                            F.col("_phi").alias("x"), F.col("_hi").alias("y")
+                        ),
+                    )
+                ).alias("_e")
+            )
+            .select(
+                F.least("_e.x._id", "_e.y._id").alias("id_a"),
+                F.greatest("_e.x._id", "_e.y._id").alias("id_b"),
+                hamming64(F.col("_e.x._fp"), F.col("_e.y._fp"))
+                .cast("int")
+                .alias("hamming"),
+            )
+            .filter(
+                (F.col("id_a") != F.col("id_b"))
+                & (F.col("hamming") <= thr)
+            )
+        )
+        pairs = pairs.unionByName(chain)
+    # the kernel already filtered hamming <= budget and
+    # id_a < id_b; distinct collapses the per-band duplicate
+    # emissions, shuffling only survivors
+    return pairs.distinct()
 
 
 def contamination_flags(

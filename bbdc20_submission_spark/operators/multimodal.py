@@ -223,8 +223,6 @@ def media_near_dups(
     exact_hot_buckets: bool | None = False,
     exact_pair_budget: int = 1_000_000_000,
     bounded_probe_rounds: int = 4,
-    probe_flips: int | str = "auto",
-    approx_n: int | None = None,
 ) -> DataFrame:
     """Near-duplicate media detection: perceptual dHash, then the
     multi-index Hamming candidate join (pigeonhole recall 1 over the
@@ -248,19 +246,8 @@ def media_near_dups(
     never-quadratic plan is the right default. Pass ``True`` only
     when every individual pair matters and the corpus is inside the
     multi-index applicability window (see ``hamming_near_pairs``), or
-    ``None`` for the budget-guarded auto mode.
-
-    ``probe_flips`` defaults to ``"auto"`` here (r13): at the default
-    hamming budget 8 the r=1 block split (5 blocks of ~13 bits) pays
-    a sub-cap occupancy hump past ~10k blobs (the r12 16x ladder read
-    19.3x on it), while the r=2 split (3 blocks of ~21 bits, radius-2
-    probing) holds occupancy flat out to ~2M blobs for ~16x probe
-    fanout — bit-identical output either way (exact-distance verify),
-    so auto-sizing the split from the plan-time blob count is safe by
-    construction. The count rides the persisted fingerprint frame the
-    join needs anyway, so the only extra cost is materializing it at
-    build instead of first use — or pass ``approx_n`` (e.g. a parquet
-    footer row count) and the plan-time job disappears entirely."""
+    ``None`` for the budget-guarded auto mode. With the bounded
+    default, building the plan fires no Spark job."""
     from bbdc20_submission_spark.caching import managed_persist
     from bbdc20_submission_spark.operators.dedup import hamming_near_pairs
 
@@ -272,6 +259,4 @@ def media_near_dups(
         exact_hot_buckets=exact_hot_buckets,
         exact_pair_budget=exact_pair_budget,
         bounded_probe_rounds=bounded_probe_rounds,
-        probe_flips=probe_flips,
-        approx_n=approx_n,
     )

@@ -195,11 +195,6 @@ def d9_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # byte-identical to the r11 auto-guard's choice — passing it
     # explicitly skips the guard's extra agg job (bench job-count
     # hygiene) and documents that d9's contract IS exact recall.
-    # probe_flips stays 1 (r13, measured): d9's cost past the window
-    # is dominated by the ~1.3e-4 background-pair fraction inside the
-    # hamming-17 window hitting the exact jaccard verify — invariant
-    # to the block split, so the wider r=2 blocks only add probe
-    # fanout (524 s vs 203 s exact / 132 s bounded at the 64x probe).
     cands = hamming_near_pairs(
         fp, max_hamming=17, exact_hot_buckets=True
     ).select("id_a", "id_b")

@@ -374,13 +374,8 @@ def a_user_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "events", sf_dir)
     order = F.struct(F.col("ts"), F.col("event_id"))
     aggs = e.groupBy("user_id").agg(
-        F.round(telescoping_mean_diff("value", order), 6).alias("_md"),
-        F.count("value").alias("_n"),
+        F.round(telescoping_mean_diff("value", order), 6).alias("mean_diff"),
         F.round(signed_abs_max(F.col("value") - 100.0), 6).alias("signed_abs_max"),
-    ).select(
-        "user_id",
-        F.when(F.col("_n") > 1, F.col("_md")).alias("mean_diff"),
-        "signed_abs_max",
     )
     modes = mode_lowest(e, ["user_id"], "event_type")
     return aggs.join(modes, "user_id")

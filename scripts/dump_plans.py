@@ -1,18 +1,34 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans of the headline
-queries with the scale properties each plan demonstrates. Run after
-changing any headline query: python scripts/dump_plans.py"""
+"""Dump formatted physical plans.
+
+With no arguments, regenerate PLANS.md: the plans of the headline
+queries (sf0.01) with the scale property each plan demonstrates. Run
+after changing any headline query: python scripts/dump_plans.py
+
+With ``--tag TAG --out DIR``, write ``DIR/<query>_<TAG>.txt`` holding
+``.explain("formatted")`` for every declared query (``--only q1,q2``
+restricts the set) over ``$SPARK_GRAFT_SF_DIR`` (default sf0.1) — the
+before/after evidence for plan-shape claims (Exchange counts, join
+strategies, PushedFilters, Python-eval nodes):
+
+    python scripts/dump_plans.py --tag before --out plans/r14
+"""
 
 from __future__ import annotations
 
+import argparse
 import contextlib
 import io
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bbdc20_submission_spark import get_spark, registry
+from bbdc20_submission_spark.sources.harness import DEFAULT_SF_DIR
+
+TESTDATA = os.path.dirname(DEFAULT_SF_DIR)
 
 HEADLINERS = {
     "w6_sessionize_rle": (
@@ -148,10 +164,15 @@ HEADLINERS = {
 }
 
 
-def main() -> None:
-    spark = get_spark("plans")
-    registry.load_all()
-    sf = "/root/testdata/sf0.01"
+def _formatted(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def write_plans_md(spark) -> None:
+    sf = os.path.join(TESTDATA, "sf0.01")
     out = [
         "# PLANS — physical plans of the headline queries\n",
         "Generated by `scripts/dump_plans.py` (sf0.01, AQE on). Each plan",
@@ -159,20 +180,52 @@ def main() -> None:
         "properties are regression-tested in `tests/test_plan_quality.py`.\n",
     ]
     for name, note in HEADLINERS.items():
-        df = registry.QUERIES[name](spark, sf)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = _formatted(registry.QUERIES[name](spark, sf))
         tree = plan.split("\n\n")[0]
         details = [s for s in plan.split("\n\n")[1:] if "Scan parquet" in s or ") Exchange" in s]
         out.append(f"## {name}\n\n{note}\n")
         out.append("```\n" + tree.strip() + "\n```\n")
         for d in details[:4]:
             out.append("```\n" + d.strip() + "\n```\n")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("PLANS.md written")
+
+
+def write_tagged(spark, tag: str, out_dir: str, only: set[str] | None) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(TESTDATA, "sf0.1"))
+    os.makedirs(out_dir, exist_ok=True)
+    for name in sorted(registry.QUERIES):
+        if only is not None and name not in only:
+            continue
+        try:
+            text = _formatted(registry.QUERIES[name](spark, sf_dir))
+        except Exception as exc:  # noqa: BLE001 — record, keep going
+            text = f"ERROR building/explaining {name}: {exc}\n"
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"== {name} ({tag}, sf_dir={sf_dir}) ==\n")
+            fh.write(text)
+        print(f"wrote {path}")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--tag", help="file-name suffix, e.g. before/after")
+    ap.add_argument("--out", help="directory for <query>_<tag>.txt")
+    ap.add_argument("--only", help="comma-list of query names")
+    args = ap.parse_args()
+    if (args.tag is None) != (args.out is None):
+        ap.error("--tag and --out go together")
+    if args.tag is None and args.only is not None:
+        ap.error("--only needs --tag and --out")
+    spark = get_spark("dump_plans")
+    registry.load_all()
+    if args.tag is None:
+        write_plans_md(spark)
+    else:
+        only = {q for q in args.only.split(",") if q} if args.only else None
+        write_tagged(spark, args.tag, args.out, only)
 
 
 if __name__ == "__main__":

@@ -972,14 +972,14 @@ def main() -> None:
         open(os.path.join(out, "_DONE"), "w").close()
         return out
 
-    def _media_dedup(h, flips="auto"):
+    def _media_dedup(h):
         def run(spark, d):
             from bbdc20_submission_spark.operators.multimodal import (
                 media_near_dups,
             )
 
             media = spark.read.parquet(os.path.join(d, "media.parquet"))
-            return media_near_dups(media, max_hamming=h, probe_flips=flips)
+            return media_near_dups(media, max_hamming=h)
 
         return run
 
@@ -994,16 +994,13 @@ def main() -> None:
         for f in MEDIA_RUN_FACTORS:
             d = replicate_media(spark, f)
             spark.read.parquet(os.path.join(d, "media.parquet")).count()
-            # h8 default now auto-picks the block split (r13); the
-            # pinned r1 row keeps the r12 hump on record for contrast
-            for name, h, flips in [
-                ("media_near_dups_h8", 8, "auto"),
-                ("media_near_dups_h8_r1", 8, 1),
-                ("media_near_dups_h4", 4, "auto"),
+            for name, h in [
+                ("media_near_dups_h8", 8),
+                ("media_near_dups_h4", 4),
             ]:
                 if not _want(name):
                     continue
-                t = _measure(lambda: _media_dedup(h, flips)(spark, d))
+                t = _measure(lambda: _media_dedup(h)(spark, d))
                 store["media"].setdefault(name, {})[str(f)] = t
                 print(f, "media", name, t, flush=True)
             json.dump(store, open(RESULTS_JSON, "w"))
@@ -1302,7 +1299,10 @@ def main() -> None:
         " as d9's; the h=8 ratio IS that term, not a machinery"
         " defect). h=4 (3 blocks of ~21 bits) stays inside the window"
         " out to ~2M blobs — the budget, like the LSH plane count, is"
-        " the selectivity knob a 100 TB deployment sizes first:\n",
+        " the selectivity knob a 100 TB deployment sizes first. (The"
+        " radius-2 block split that once widened h=8's blocks to ~21"
+        " bits lost every measurement — 1x r1 ~8 s vs r2 ~180 s, 16x"
+        " r1 194 s vs r2 >15 min — and is deleted; BENCHNOTES.)\n",
         "| operator | 1x (s) | 16x (s) | 16x/1x |",
         "|---|---|---|---|",
         *_table(

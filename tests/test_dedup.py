@@ -59,17 +59,9 @@ def test_simhash_finds_planted_near_dups(spark):
     pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
     planted = {(i, i + 10_000) for i in range(30)}
     recall = len(pairs & planted) / len(planted)
-    # bands > max_hamming -> pigeonhole guarantees recall 1 over pairs
+    # the multi-index pigeonhole guarantees recall 1 over pairs
     # actually within the hamming budget; planted mutations land there
     assert recall >= 0.9, f"simhash recall {recall}"
-
-
-def test_simhash_bands_guard(spark):
-    docs = _mk_docs(spark, n=4)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="pigeonhole"):
-        simhash_near_dups(docs, max_hamming=8, bands=4)
 
 
 def test_hot_bucket_cap_bounds_pair_count(spark):
@@ -343,78 +335,6 @@ def test_chain_edges_adversarial_collision_majority(spark):
         parent[find(idx[a])] = find(idx[b])
     n_components = len({find(i) for i in range(len(fam))})
     assert n_components == 1, f"family split into {n_components} components"
-
-
-def test_hamming_probe_flips_r2_bit_identical(spark):
-    """r13: the radius-2 block split (probe_flips=2 — 3 wider blocks
-    probed with all weight-<=2 flips) must emit EXACTLY the same
-    (pair, distance) set as the default radius-1 split: the pigeonhole
-    generalizes (some block differs in <= r bits when s = h//(r+1)+1)
-    and the exact-distance verify makes r a pure plan choice."""
-    import random
-
-    from bbdc20_submission_spark.operators.dedup import hamming_near_pairs
-
-    def signed(v):
-        return v - (1 << 64) if v >= (1 << 63) else v
-
-    rng = random.Random(11)
-    rows = []
-    nid = 0
-    # planted pairs at every distance 0..10 (budget 8 -> the 9/10
-    # rows must NOT appear), plus random background fingerprints
-    for h in range(11):
-        for _ in range(4):
-            base = rng.getrandbits(64)
-            flipped = base
-            for pos in rng.sample(range(64), h):
-                flipped ^= 1 << pos
-            rows += [(nid, signed(base)), (nid + 1, signed(flipped))]
-            nid += 2
-    for _ in range(60):
-        rows.append((nid, signed(rng.getrandbits(64))))
-        nid += 1
-    df = spark.createDataFrame(rows, "_id long, _fp long")
-    r1 = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in hamming_near_pairs(df, max_hamming=8, probe_flips=1).collect()
-    }
-    r2 = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in hamming_near_pairs(df, max_hamming=8, probe_flips=2).collect()
-    }
-    assert r1 == r2 and len(r1) >= 4 * 9
-    assert all(v <= 8 for v in r1.values())
-
-
-def test_probe_flips_auto_picks_by_scale():
-    """The plan-time cost model keeps r=1 for every measured regime —
-    including media 16x (800k blobs), where the uncalibrated model's
-    r=2 pick measured r1 194 s vs r2 >15 min/rep — and flips to r=2
-    only in the far tail where the quadratic occupancy term really
-    outweighs the exchange-weighted probe fanout."""
-    from bbdc20_submission_spark.operators.dedup import _probe_flips_auto
-
-    assert _probe_flips_auto(10_000, 8) == 1
-    assert _probe_flips_auto(800_000, 8) == 1  # the measured pin
-    assert _probe_flips_auto(3_200_000, 8) == 1  # 64x media ladder
-    assert _probe_flips_auto(20_000_000, 8) == 2  # far tail
-    # at budget 4 the r=1 split already has ~21-bit blocks — r=2's
-    # 32-bit split never pays at any realistic n
-    assert _probe_flips_auto(800_000, 4) == 1
-    assert _probe_flips_auto(3_000_000, 4) == 1
-
-
-def test_hamming_probe_flips_validation(spark):
-    import pytest
-
-    from bbdc20_submission_spark.operators.dedup import hamming_near_pairs
-
-    df = spark.createDataFrame([(0, 1), (1, 2)], "_id long, _fp long")
-    with pytest.raises(ValueError, match="probe_flips"):
-        hamming_near_pairs(df, max_hamming=8, probe_flips=3)
-    with pytest.raises(ValueError, match="banded"):
-        hamming_near_pairs(df, max_hamming=8, bands=12, probe_flips=2)
 
 
 def test_hamming_near_pairs_recall_exact_in_hot_buckets(spark):
@@ -1048,28 +968,6 @@ def test_hamming_auto_guard_degrades_past_budget(spark):
         ).collect()
     }
     assert exact == truth
-
-
-def test_hamming_legacy_bands_rejects_exactness_claim(spark):
-    """The legacy banded scheme hash-splits hot buckets on BOTH sides,
-    so it cannot honor exact_hot_buckets=True — it must raise rather
-    than silently lose recall (r11, ADVICE)."""
-    import pytest as _pytest
-
-    from bbdc20_submission_spark.operators.dedup import hamming_near_pairs
-
-    df, _, budget = _hot_corpus_for_guard(spark)
-    with _pytest.raises(ValueError, match="incompatible"):
-        hamming_near_pairs(
-            df, max_hamming=budget, bands=10, exact_hot_buckets=True
-        )
-    # bands with the bounded/auto settings still works
-    assert (
-        hamming_near_pairs(
-            df, max_hamming=budget, bands=10, exact_hot_buckets=False
-        ).count()
-        > 0
-    )
 
 
 def test_sub_bucket_helpers_semantics(spark):

@@ -81,6 +81,25 @@ def test_media_near_dups_finds_perturbed_copies(spark):
         assert pair in out and out[pair] <= 8, (pair, out.get(pair))
 
 
+def test_media_near_dups_build_fires_no_job(spark):
+    """Building the media near-dup plan is lazy: with the bounded
+    default no count or hot-bucket collect runs until the caller acts."""
+    from bbdc20_submission_spark.operators.multimodal import media_near_dups
+
+    media = synthetic_media(spark, n=12)
+    sc = spark.sparkContext
+    group = "test-media-near-dups-build"
+    sc.setJobGroup(group, "media_near_dups build")
+    try:
+        out = media_near_dups(media, max_hamming=8)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        out.count()  # the group does capture this thread's jobs
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_media_near_dups_forced_hot_bounded_and_connected(spark):
     """r12 (VERDICT #4): at a FORCED-HOT configuration — one asset
     mass-duplicated far past bucket_cap, media_near_dups' bounded

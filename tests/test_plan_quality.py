@@ -136,27 +136,18 @@ def test_simhash_hamming_filter_precedes_distinct(spark, sf_dir):
     """The hamming budget must cut the bucket fanout BEFORE the
     pair-dedup shuffle (millions of within-bucket pairs at sf0.1; only
     survivors may be exchanged for the distinct). Since the r7 kernel
-    rewrite the default multi-index path generates + hamming-filters
-    pairs INSIDE the numpy popcount kernel (MapInPandas over a
-    bucket-key repartition — no pair join exists at all), with the
-    distinct above it; the legacy banded path still folds the
-    bit_count bound into the pair JOIN CONDITION. Pin both."""
+    rewrite the multi-index path generates + hamming-filters pairs
+    INSIDE the numpy popcount kernel (MapInPandas over a bucket-key
+    repartition — no pair join exists at all), with the distinct
+    above it."""
     from bbdc20_submission_spark.operators.dedup import simhash_near_dups
 
     d = load_table(spark, "documents", sf_dir)
     plan = formatted_plan(simhash_near_dups(d, max_hamming=13))
-    # default path: popcount kernel, no SMJ pair join, dedup above it
+    # popcount kernel, no SMJ pair join, dedup above it
     assert "MapInPandas" in plan
     assert "SortMergeJoin" not in plan
     assert 0 <= plan.find("HashAggregate") < plan.find("MapInPandas")
-    # legacy banded path: the hamming bound rides the join itself
-    legacy = formatted_plan(simhash_near_dups(d, max_hamming=13, bands=14))
-    join_conditions = [
-        ln for ln in legacy.splitlines() if ln.startswith("Join condition:")
-    ]
-    assert any(
-        "bit_count" in ln and "<= 13" in ln for ln in join_conditions
-    ), join_conditions
 
 
 def test_topk_global_avoids_full_sort(spark, sf_dir):

@@ -49,6 +49,21 @@ def test_telescoping_identity(spark, groups):
         assert math.isclose(got[g], want, rel_tol=1e-9, abs_tol=1e-9)
 
 
+def test_telescoping_single_row_group_is_null(spark):
+    """A one-row group has no diffs: the documented answer is NULL,
+    not ANSI's DIVIDE_BY_ZERO."""
+    df = spark.createDataFrame(
+        [(0, 0, 1.0), (0, 1, 4.0), (1, 0, 7.0)], "g long, i long, v double"
+    )
+    got = {
+        r["g"]: r["md"]
+        for r in df.groupBy("g")
+        .agg(telescoping_mean_diff("v", F.col("i")).alias("md"))
+        .collect()
+    }
+    assert got == {0: 3.0, 1: None}
+
+
 def _reference_frames(n_rows: int, win: int, shift: int, cut: int) -> list[list[int]]:
     """utils.py:10-16 semantics on row indices."""
     frames = [
