@@ -10,51 +10,40 @@ DataFrame API:
 Every function body is a SQL EXPRESSION (resolved to the same Catalyst
 operators the DataFrame operators compile to) — no Python UDFs, so
 calling these from SQL costs exactly what the DataFrame path costs and
-stays inside whole-stage codegen. Formula constants (stopword list,
-token pattern, quality weights, fingerprint base/modulus) are
-interpolated from the single Python source of truth in
-``operators.text``, so the SQL surface cannot drift from the certified
-DataFrame surface.
+stays inside whole-stage codegen. The token-count, stopword-ratio and
+quality bodies are the ``operators.text`` fragments that
+``quality_score`` parses, and the other constants (token pattern,
+fingerprint base/modulus) come from the same module, so the SQL surface
+cannot drift from the certified DataFrame surface.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from bbdc20_submission_spark.operators.text import STOPWORDS, TOKEN_PATTERN
-
-_SW = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
-
-# shared ratio fragments. Char-class counts go through translate
-# (delete the class, diff the lengths) — bit-identical to the
-# regexp_replace('[^...]') form but a per-char table lookup instead
-# of a regex pass (17x at the 64x scale octave); keeps the SQL
-# surface on the same fast expressions as operators.text
-_NT = "size(split(t, ' '))"
-_NC = "length(t)"
-_LETTERS = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_DIGITS = "(length(t) - length(translate(t, '0123456789', '')))"
-_ALPHA = f"(length(t) - length(translate(t, '{_LETTERS}', '')))"
-_SPACES = "(length(t) - length(translate(t, ' ', '')))"
-_SWHITS = f"size(filter(split(t, ' '), x -> array_contains(array({_SW}), x)))"
+from bbdc20_submission_spark.operators.text import (
+    STOPWORDS,
+    TOKEN_PATTERN,
+    _quality_sql,
+    _raw_text_stats_sql,
+    _stopword_hits_sql,
+    _ws_tokens_sql,
+)
 
 
 def _definitions() -> dict[str, str]:
-    punct = f"({_NC} - {_ALPHA} - {_DIGITS} - {_SPACES})"
-    quality = (
-        f"least({_NT} / 32.0, 1.0) * 0.4 "
-        f"+ least({_SWHITS} / {_NT} * 4.0, 1.0) * 0.3 "
-        f"+ (1.0 - least({punct} / {_NC} * 4.0, 1.0)) * 0.2 "
-        f"+ (1.0 - least({_DIGITS} / {_NC} * 4.0, 1.0)) * 0.1"
-    )
+    # the text functions are the quality_score fragments over the
+    # parameter t, so empty text scores as it does there
+    toks = _ws_tokens_sql("t")
+    raw = _raw_text_stats_sql("t", toks, _stopword_hits_sql(toks, STOPWORDS["en"]))
     return {
         # text analysis
-        "sg_ws_tokens(t STRING) RETURNS INT": _NT,
+        "sg_ws_tokens(t STRING) RETURNS INT": raw["n_tokens"],
         "sg_bpe_tokens(t STRING) RETURNS INT": (
             f"size(regexp_extract_all(t, '{TOKEN_PATTERN}', 0))"
         ),
-        "sg_stopword_ratio(t STRING) RETURNS DOUBLE": f"{_SWHITS} / {_NT}",
-        "sg_quality(t STRING) RETURNS DOUBLE": f"round({quality}, 6)",
+        "sg_stopword_ratio(t STRING) RETURNS DOUBLE": raw["stopword_ratio"],
+        "sg_quality(t STRING) RETURNS DOUBLE": f"round({_quality_sql(raw)}, 6)",
         # portable rolling fingerprint (md5-prefix token hash, the d5
         # cross-engine form: conv(substr(md5, 1, 8)) folded mod 1e9+7)
         "sg_fingerprint(t STRING) RETURNS BIGINT": (

@@ -92,16 +92,6 @@ def extract_features(
     )
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: passes metadata through, marks the payload with
-    the target size. Real implementation swaps the body of the pandas
-    UDF for a vips/PIL resize; partitioning, schema and batch shape are
-    already correct."""
-    return media.withColumn("width", F.lit(width)).withColumn(
-        "height", F.lit(height)
-    )
-
-
 def frame_sample_stub(media: DataFrame, every_ms: int) -> DataFrame:
     """Video frame sampling plumbing: emits one row per sampled frame
     offset using the duration metadata (sequence+explode — a narrow

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bbdc20_submission_spark.operators.columns import add_sql_columns
@@ -37,13 +37,9 @@ from bbdc20_submission_spark.operators.text import sql_str_lit
 _BUCKETS = 1 << 20
 
 
-def _hash_bucket(id_col: Column, seed: int) -> Column:
-    """Uniform bucket in [0, _BUCKETS) as a pure function of (id, seed)."""
-    return F.pmod(F.xxhash64(id_col, F.lit(seed)), F.lit(_BUCKETS))
-
-
 def portable_hash_bucket(id_col: Column, seed: int) -> Column:
-    """Engine-portable variant of ``_hash_bucket``: first 8 hex chars of
+    """Engine-portable variant of the xxhash64 bucket
+    (``_bucket_sql``): first 8 hex chars of
     md5(f"{id}:{seed}") mod 2^20. Any engine with md5 reproduces the
     SAME sample membership (DuckDB:
     ``CAST(('0x'||substr(md5(id||':s'),1,8)) AS BIGINT) % 1048576``) —
@@ -58,8 +54,9 @@ def portable_hash_bucket(id_col: Column, seed: int) -> Column:
 
 
 def _bucket_sql(id_col: str, seed: int, portable: bool) -> str:
-    """SQL fragment of ``_hash_bucket`` / ``portable_hash_bucket`` over
-    a plain column name — parses to the identical expressions."""
+    """Uniform bucket in [0, _BUCKETS) as a pure function of (id, seed),
+    as a SQL fragment over a plain column name: xxhash64, or with
+    ``portable`` the expression ``portable_hash_bucket`` builds."""
     i = f"`{id_col}`"
     if portable:
         salt = sql_str_lit(f":{seed}")

@@ -94,83 +94,35 @@ def stopword_hits(tokens: Column | str, vocabulary: Sequence[str]) -> Column:
     return F.size(F.filter(tokens, lambda x: F.array_contains(vocab, x)))
 
 
-def raw_text_stats(
-    text_col: str = "text",
-    toks: Column | None = None,
-    sw: Column | None = None,
-) -> dict[str, Column]:
-    """Unrounded stat expressions keyed by name. The single source of
-    truth for both ``text_stats`` (which rounds for display) and
-    ``quality_score`` (which must combine UNROUNDED ratios so the
-    composite is rounded exactly once, matching single-rounding
-    oracles).
-
-    ``toks``/``sw`` (r13): references to an already-materialized token
-    array / stopword-hit count. The default (build them inline from
-    ``text_col``) re-evaluates split(text) once per OCCURRENCE in the
-    consumer's projection — HOF-bearing Projects run fully interpreted
-    with no codegen and no subexpression elimination, so the collapsed
-    d2 projection paid ~9 split passes + 3 stopword filter passes per
-    row. Callers that project the array/count once (multi-referenced
-    aliases block CollapseProject from re-inlining them) get each pass
-    exactly once."""
-    t = F.col(text_col)
-    toks = ws_tokens(t) if toks is None else toks
-    n_chars = F.length(t)
-    n_tokens = F.size(toks)
-    # char-class counts via translate (delete the class, diff the
-    # lengths) — bit-identical to the regexp_replace('[^...]') form
-    # but a per-char table lookup instead of a regex engine pass:
-    # 17x on the 64x scale replica (10.9 s -> 0.64 s for the three
-    # counts), and these three counts were the single largest term of
-    # both d2_text_quality and the c1 curation DAG at that octave
-    alpha = n_chars - F.length(F.translate(t, _ASCII_LETTERS, ""))
-    digits = n_chars - F.length(F.translate(t, "0123456789", ""))
-    spaces = n_chars - F.length(F.translate(t, " ", ""))
-    punct = n_chars - alpha - digits - spaces
-    if sw is None:
-        sw = stopword_hits(_ws_tokens_sql(text_col), STOPWORDS["en"])
-    # n_chars is 0 for the empty document — routine in web corpora;
-    # under Spark 4's default ANSI mode a bare division would ABORT
-    # the whole job with DIVIDE_BY_ZERO, so empty docs get 0.0 ratios
-    # (-> a finite rock-bottom quality score, filtered like any other
-    # junk). n_tokens is never 0: ws_tokens('') is ['']. The certified
-    # corpus contains no empty docs, so the oracle formulas (which
-    # divide bare) remain hash-identical on certified data.
-    def _ratio(num: Column, den: Column) -> Column:
-        return F.when(den == 0, F.lit(0.0)).otherwise(num / den)
-
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "avg_token_len": _ratio(n_chars, n_tokens),
-        "punct_ratio": _ratio(punct, n_chars),
-        "digit_ratio": _ratio(digits, n_chars),
-        "stopword_ratio": _ratio(sw, n_tokens),
-    }
-
-
 def _stopword_hits_sql(tokens: str, vocabulary: Sequence[str]) -> str:
     """SQL fragment of :func:`stopword_hits` over a SQL fragment."""
     vocab_sql = "array(%s)" % ",".join(sql_str_lit(w) for w in vocabulary)
     return f"size(filter({tokens}, x -> array_contains({vocab_sql}, x)))"
 
 
-def _raw_text_stats_sql(
-    text_col: str, toks: str, sw: str
-) -> dict[str, str]:
-    """SQL-fragment twin of :func:`raw_text_stats` over column NAMES
-    (``toks``/``sw`` already projected) — parses to the identical
-    expressions (same translate char classes, same guarded ratios,
-    D-suffixed double literals matching F.lit(0.0)); exists so
-    ``_stats_select`` can assemble its whole stat projection in one
-    parse instead of ~40 py4j round trips (r14)."""
-    t = f"`{text_col}`"
-    n_chars = f"length({t})"
-    n_tokens = f"size(`{toks}`)"
-    alpha = f"({n_chars} - length(translate({t}, {sql_str_lit(_ASCII_LETTERS)}, '')))"
-    digits = f"({n_chars} - length(translate({t}, '0123456789', '')))"
-    spaces = f"({n_chars} - length(translate({t}, ' ', '')))"
+def _raw_text_stats_sql(text: str, toks: str, sw: str) -> dict[str, str]:
+    """Unrounded stat fragments keyed by name over SQL fragments of the
+    text, its token array and its stopword-hit count. The single source
+    of truth for ``text_stats`` (which rounds for display),
+    ``quality_score`` (which must combine UNROUNDED ratios so the
+    composite is rounded exactly once, matching single-rounding
+    oracles) and the ``sg_*`` SQL functions.
+
+    Char-class counts go through translate (delete the class, diff the
+    lengths) — bit-identical to the regexp_replace('[^...]') form but a
+    per-char table lookup instead of a regex pass (17x on the 64x scale
+    replica). n_chars is 0 for the empty document — routine in web
+    corpora; under Spark 4's default ANSI mode a bare division would
+    ABORT the whole job with DIVIDE_BY_ZERO, so empty docs get 0.0
+    ratios (a finite rock-bottom quality score, filtered like any other
+    junk). n_tokens is never 0: split('', ' ') is ['']. The certified
+    corpus has no empty docs, so the oracle formulas (which divide
+    bare) stay hash-identical on certified data."""
+    n_chars = f"length({text})"
+    n_tokens = f"size({toks})"
+    alpha = f"({n_chars} - length(translate({text}, {sql_str_lit(_ASCII_LETTERS)}, '')))"
+    digits = f"({n_chars} - length(translate({text}, '0123456789', '')))"
+    spaces = f"({n_chars} - length(translate({text}, ' ', '')))"
     punct = f"({n_chars} - {alpha} - {digits} - {spaces})"
 
     def _ratio(num: str, den: str) -> str:
@@ -182,29 +134,18 @@ def _raw_text_stats_sql(
         "avg_token_len": _ratio(n_chars, n_tokens),
         "punct_ratio": _ratio(punct, n_chars),
         "digit_ratio": _ratio(digits, n_chars),
-        "stopword_ratio": _ratio(f"`{sw}`", n_tokens),
+        "stopword_ratio": _ratio(sw, n_tokens),
     }
 
 
 def _quality_sql(raw: dict[str, str]) -> str:
-    """SQL-fragment twin of :func:`_quality_expr` — literal-for-literal
-    the same arithmetic (left-associative, D-suffixed doubles)."""
+    """Composite [0,1] quality score from the UNROUNDED ratio fragments
+    of ``_raw_text_stats_sql`` (rounded once by the caller)."""
     return (
         f"least({raw['n_tokens']} / 32.0D, 1.0D) * 0.4D "
         f"+ least({raw['stopword_ratio']} * 4.0D, 1.0D) * 0.3D "
         f"+ (1.0D - least({raw['punct_ratio']} * 4.0D, 1.0D)) * 0.2D "
         f"+ (1.0D - least({raw['digit_ratio']} * 4.0D, 1.0D)) * 0.1D"
-    )
-
-
-def _quality_expr(raw: dict[str, Column]) -> Column:
-    """Composite [0,1] quality score from UNROUNDED ratio expressions
-    (rounded once by the caller)."""
-    return (
-        F.least(raw["n_tokens"] / 32.0, F.lit(1.0)) * 0.4
-        + F.least(raw["stopword_ratio"] * 4.0, F.lit(1.0)) * 0.3
-        + (1.0 - F.least(raw["punct_ratio"] * 4.0, F.lit(1.0))) * 0.2
-        + (1.0 - F.least(raw["digit_ratio"] * 4.0, F.lit(1.0))) * 0.1
     )
 
 
@@ -226,7 +167,7 @@ def _stats_select(
     s2 = s1.selectExpr(
         "*", f"{_stopword_hits_sql(f'`{tk}`', STOPWORDS['en'])} AS `{swc}`"
     )
-    raw = _raw_text_stats_sql(text_col, toks=tk, sw=swc)
+    raw = _raw_text_stats_sql(f"`{text_col}`", toks=f"`{tk}`", sw=f"`{swc}`")
     out_exprs = [f"`{c}`" for c in df.columns] + [
         f"CAST({raw['n_chars']} AS BIGINT) AS stat_n_chars",
         f"CAST({raw['n_tokens']} AS BIGINT) AS stat_n_tokens",
@@ -244,7 +185,7 @@ def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Quality-scoring feature block: lengths, token stats, character-
     class ratios, stopword ratio. One narrow map (two collapsed-proof
     projections; tokens materialized once). Ratio columns are rounded
-    to 6 decimals for output; use ``raw_text_stats`` when composing
+    to 6 decimals for output; use ``_raw_text_stats_sql`` when composing
     further arithmetic on them."""
     return _stats_select(df, text_col, with_quality=False)
 

@@ -29,13 +29,6 @@ def tumbling_window_key(ts: Column | str, step_ms: int = 200) -> Column:
     return (F.floor(ms / F.lit(step_ms)) * step_ms).cast("long")
 
 
-def tumbling_window_ts(ts: Column | str, step: str = "200 milliseconds") -> Column:
-    """TimestampType tumbling window (struct<start,end>) — the
-    Structured-Streaming-compatible form of W1."""
-    t = F.col(ts) if isinstance(ts, str) else ts
-    return F.window(t, step)
-
-
 def frame_id(
     df: DataFrame,
     keys: Sequence[str],

@@ -2,12 +2,19 @@
 
 Stage map (reference -> here):
 - target expansion  generate_submission.py:146 / load_data.py:34-42 -> expand_targets
+- label vocabulary  load_data.py:25-28 (A10)                     -> arm_label_classes
 - sensor prep       load_data.py:95,122-129,202-212              -> prepare_emg / prepare_mocap
 - channel repair    generate_submission.py:162-302 (L1)          -> repair_channels
 - robust scaling    generate_submission.py:304-313 (A9)          -> subject_scaler_stats
 - features          generate_submission.py:315-379 (W9)          -> build_features
 - train/predict     generate_submission.py:47-130, 479-502       -> plans.models
 - decode+RLE+sink   generate_submission.py:505-569 (W6/S5)       -> predictions_to_intervals
+
+The label vocabulary is read once, as two Python class lists; the
+encode, one-hot and decode steps are literal SQL over them
+(``label_code_sql``, the one-hot fragments, ``label_decode_sql``), so
+no stage joins or re-reads a label dimension. The robust scaler reads
+an IQR of 0 as 1 (sklearn's ``_handle_zeros_in_scale``).
 
 Scale design: every stage is a DataFrame graph. The feature stage does
 NOT gather raw samples per anchor; it pre-aggregates per-window
@@ -35,7 +42,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bbdc20_submission_spark.caching import managed_persist
@@ -113,6 +120,34 @@ def arm_label_dims(labels: DataFrame) -> tuple[DataFrame, DataFrame]:
     return left, right
 
 
+def arm_label_classes(labels: DataFrame) -> tuple[list[str], list[str]]:
+    """Both arms' class lists in ``arm_label_dims`` code order, read in
+    one action; the pipeline consumes the vocabulary only as these
+    literals (``label_code_sql`` / ``label_decode_sql`` / one-hot)."""
+    left, right = arm_label_dims(labels)
+    rows = (
+        left.selectExpr("'la' AS arm", "action", "code")
+        .unionByName(right.selectExpr("'ra' AS arm", "action", "code"))
+        .orderBy("arm", "code")
+        .collect()
+    )
+    return tuple([r["action"] for r in rows if r["arm"] == arm] for arm in ("la", "ra"))
+
+
+def _classes_sql(classes: Sequence[str]) -> str:
+    return "array(%s)" % ", ".join(map(sql_str_lit, classes))
+
+
+def label_code_sql(classes: Sequence[str], label_col: str) -> str:
+    """SQL for the code of ``label_col`` (its 0-based class position)."""
+    return f"array_position({_classes_sql(classes)}, `{label_col}`) - 1"
+
+
+def label_decode_sql(classes: Sequence[str], code_col: str) -> str:
+    """SQL for the class of code ``code_col`` (``label_code_sql`` inverse)."""
+    return f"element_at({_classes_sql(classes)}, CAST(`{code_col}` AS INT) + 1)"
+
+
 def prepare_emg(emg: DataFrame, step_ms: int = STEP_MS) -> DataFrame:
     """Interpolate nulls per trial (W7), add window key (W1).
 
@@ -148,69 +183,47 @@ def prepare_mocap(
 
 # --------------------------------------------------------------- L1 repair
 
+def _arm_labels(targets: DataFrame) -> DataFrame:
+    """[subject, trial, win_end, la_action, ra_action]: both arms' label
+    of each grid slot (one per slot and arm, so max picks it)."""
+    return targets.groupBy("subject", "trial", "win_end").agg(
+        F.expr("max(CASE WHEN arm = 'la' THEN action END) AS la_action"),
+        F.expr("max(CASE WHEN arm = 'ra' THEN action END) AS ra_action"),
+    )
+
+
 def _sample_label_alignment(
-    emg: DataFrame, targets: DataFrame, step_ms: int = STEP_MS
+    emg: DataFrame, arm_labels: DataFrame, step_ms: int = STEP_MS
 ) -> DataFrame:
     """J5: align each EMG sample with the window labels by the
     reference's repeat-120 rule (generate_submission.py:179-191):
     sample i of a trial takes the label of grid slot floor(i/120)+1,
     clamped to the last labeled slot (tail padded with last label).
     Adds ``la_action`` / ``ra_action`` columns."""
-    w = Window.partitionBy("subject", "trial").orderBy("ts")
-    tagged = emg.withColumn(
-        "_win_end",
-        (F.floor((F.row_number().over(w) - 1) / 120) + 1) * step_ms,
+    slot = (
+        "(floor((row_number() OVER (PARTITION BY subject, trial ORDER BY ts) - 1) / 120)"
+        f" + 1) * {step_ms}"
     )
-    per_arm = (
-        targets.groupBy("subject", "trial", "win_end")
-        .pivot("arm", ["la", "ra"])
-        .agg(F.first("action"))
-        .withColumnRenamed("la", "la_action")
-        .withColumnRenamed("ra", "ra_action")
+    last = arm_labels.groupBy("subject", "trial").agg(F.expr("max(win_end) AS _max_we"))
+    tagged = emg.selectExpr("*", f"{slot} AS _win_end").join(last, ["subject", "trial"], "left")
+    return (
+        add_sql_columns(tagged, {"_win_end": "least(_win_end, _max_we)"})
+        .join(arm_labels.withColumnRenamed("win_end", "_win_end"),
+              ["subject", "trial", "_win_end"], "left")
+        .drop("_win_end", "_max_we")
     )
-    max_we = per_arm.groupBy("subject", "trial").agg(
-        F.max("win_end").alias("_max_we")
-    )
-    lookup = per_arm.select(
-        F.col("subject").alias("_s"),
-        F.col("trial").alias("_t"),
-        F.col("win_end").alias("_we"),
-        "la_action",
-        "ra_action",
-    )
-    joined = (
-        tagged.join(max_we, ["subject", "trial"], "left")
-        .withColumn("_win_end", F.least("_win_end", "_max_we"))
-        .join(
-            lookup,
-            (F.col("subject") == F.col("_s"))
-            & (F.col("trial") == F.col("_t"))
-            & (F.col("_win_end") == F.col("_we")),
-            "left",
-        )
-        .drop("_s", "_t", "_we", "_win_end", "_max_we")
-    )
-    return joined
 
 
-def _onehot_label_cols(df: DataFrame, left_dim, right_dim) -> tuple[DataFrame, list[str]]:
+def _onehot_label_sql(left_classes: list[str], right_classes: list[str]) -> dict[str, str]:
     """12 one-hot columns (6 left + 6 right classes, code order) from
-    la_action/ra_action (LabelBinarizer semantics, :163-168)."""
-    left_classes = [r["action"] for r in left_dim.orderBy("code").collect()]
-    right_classes = [r["action"] for r in right_dim.orderBy("code").collect()]
-    # one parsed projection, not a withColumn chain (each withColumn
-    # re-analyzes the whole plan — quadratic in column count)
-    exprs = [
-        f"CAST(la_action = {sql_str_lit(c)} AS DOUBLE) AS oh_l{i}"
-        for i, c in enumerate(left_classes)
-    ] + [
-        f"CAST(ra_action = {sql_str_lit(c)} AS DOUBLE) AS oh_r{i}"
-        for i, c in enumerate(right_classes)
-    ]
-    cols = [f"oh_l{i}" for i in range(len(left_classes))] + [
-        f"oh_r{i}" for i in range(len(right_classes))
-    ]
-    return df.selectExpr("*", *exprs), cols
+    la_action/ra_action (LabelBinarizer semantics, :163-168), as
+    ``add_sql_columns`` fragments."""
+    return {
+        **{f"oh_l{i}": f"CAST(la_action = {sql_str_lit(c)} AS DOUBLE)"
+           for i, c in enumerate(left_classes)},
+        **{f"oh_r{i}": f"CAST(ra_action = {sql_str_lit(c)} AS DOUBLE)"
+           for i, c in enumerate(right_classes)},
+    }
 
 
 def _fit_ols(df: DataFrame, feature_cols: list[str], target_col: str):
@@ -252,18 +265,18 @@ def _fit_ols(df: DataFrame, feature_cols: list[str], target_col: str):
     return float(intercept), [float(c) for c in coefs]
 
 
-def _apply_linear(df: DataFrame, feature_cols: list[str], intercept: float, coefs: list[float]) -> F.Column:
+def _apply_linear(feature_cols: list[str], intercept: float, coefs: list[float]) -> str:
     terms = [double_sql(intercept)] + [
         f"`{c}` * {double_sql(w)}" for c, w in zip(feature_cols, coefs)
     ]
-    return F.expr(" + ".join(terms))
+    return " + ".join(terms)
 
 
 def repair_channels(
     emg: DataFrame,
     targets: DataFrame,
-    left_dim: DataFrame,
-    right_dim: DataFrame,
+    left_classes: list[str],
+    right_classes: list[str],
 ) -> DataFrame:
     """L1: regression repair of EMG channels, bug-for-bug with the
     reference (generate_submission.py:162-302):
@@ -276,67 +289,59 @@ def repair_channels(
       s02+s04 (loop iterates emg_4_fix_subjects — the unused
       emg_0_fix_subjects list is :284). Both quirks preserved.
 
-    The apply path labels windows by win_end = window+200 when labeled
-    else '<arm>-nothing' (:221-226) — reproduced via join + coalesce.
+    ``left_classes``/``right_classes`` are the arm vocabularies in code
+    order (``arm_label_classes``). The apply path labels windows by
+    win_end = window+200 when labeled else '<arm>-nothing' (:221-226)
+    — reproduced via join + coalesce.
     """
-    aligned = _sample_label_alignment(emg, targets)
-    aligned, oh_cols = _onehot_label_cols(aligned, left_dim, right_dim)
-    aligned = managed_persist(aligned)
+    arm_labels = _arm_labels(targets)
+    onehot = _onehot_label_sql(left_classes, right_classes)
+    oh_cols = list(onehot)
+    aligned = managed_persist(
+        add_sql_columns(_sample_label_alignment(emg, arm_labels), onehot)
+    )
 
     # ---- ch4 model (train: repeat-120 alignment; s01/s03/s05)
     ch4_feats = [f"c{i}" for i in [0, 1, 2, 3, 5, 6, 7]] + oh_cols
-    fit_df = aligned.filter(F.col("subject").isin("s01", "s03", "s05"))
+    fit_df = aligned.filter("subject IN ('s01', 's03', 's05')")
     b0_4, coefs_4 = _fit_ols(fit_df, ch4_feats, "c4")
 
     # apply: window labeled by win_end = window + 200 (apply-path rule)
-    per_arm = (
-        targets.groupBy("subject", "trial", "win_end")
-        .pivot("arm", ["la", "ra"])
-        .agg(F.first("action"))
+    applied = emg.join(
+        arm_labels.selectExpr(
+            "subject", "trial", f"win_end - {STEP_MS} AS `window`", "la_action", "ra_action"
+        ),
+        ["subject", "trial", "window"],
+        "left",
     )
-    def with_apply_labels(df: DataFrame) -> DataFrame:
-        out = df.join(
-            per_arm.select(
-                "subject", "trial",
-                (F.col("win_end") - STEP_MS).alias("window"),
-                F.col("la").alias("_la"), F.col("ra").alias("_ra"),
-            ),
-            ["subject", "trial", "window"],
-            "left",
-        )
-        out = out.withColumn("la_action", F.coalesce("_la", F.lit("la-nothing")))
-        out = out.withColumn("ra_action", F.coalesce("_ra", F.lit("ra-nothing")))
-        return out.drop("_la", "_ra")
-
-    repaired = with_apply_labels(emg)
-    repaired, _ = _onehot_label_cols(repaired, left_dim, right_dim)
-    repaired = repaired.withColumn(
-        "c4",
-        F.when(
-            F.col("subject").isin("s02", "s04"),
-            _apply_linear(repaired, ch4_feats, b0_4, coefs_4),
-        ).otherwise(F.col("c4")),
+    applied = add_sql_columns(applied, {
+        "la_action": "coalesce(la_action, 'la-nothing')",
+        "ra_action": "coalesce(ra_action, 'ra-nothing')",
+    })
+    fix = "CASE WHEN subject IN ('s02', 's04') THEN {} ELSE `{}` END"
+    repaired = add_sql_columns(
+        add_sql_columns(applied, onehot),
+        {"c4": fix.format(_apply_linear(ch4_feats, b0_4, coefs_4), "c4")},
     )
     # consumed by the ch0 fit, the ch0 apply and the output
     repaired = managed_persist(repaired)
 
     # ---- ch0 model: trained on the ch4-REPAIRED data (order matters)
-    aligned2 = _sample_label_alignment(
-        repaired.select("subject", "trial", "ts", "window", *EMG_CHANNELS), targets
+    aligned2 = add_sql_columns(
+        _sample_label_alignment(
+            repaired.select("subject", "trial", "ts", "window", *EMG_CHANNELS), arm_labels
+        ),
+        onehot,
     )
-    aligned2, _ = _onehot_label_cols(aligned2, left_dim, right_dim)
     ch0_train_feats = [f"c{i}" for i in [1, 2, 4, 3, 5, 6, 7]] + oh_cols
-    fit0 = aligned2.filter(F.col("subject").isin("s01", "s02", "s03", "s05"))
+    fit0 = aligned2.filter("subject IN ('s01', 's02', 's03', 's05')")
     b0_0, coefs_0 = _fit_ols(fit0, ch0_train_feats, "c0")
 
-    # applied with channel order [1,2,3,4,5,6,7] (reference bug)
+    # applied with channel order [1,2,3,4,5,6,7] (reference bug: s02
+    # included)
     ch0_apply_feats = [f"c{i}" for i in [1, 2, 3, 4, 5, 6, 7]] + oh_cols
-    repaired = repaired.withColumn(
-        "c0",
-        F.when(
-            F.col("subject").isin("s02", "s04"),  # bug: s02 included
-            _apply_linear(repaired, ch0_apply_feats, b0_0, coefs_0),
-        ).otherwise(F.col("c0")),
+    repaired = add_sql_columns(
+        repaired, {"c0": fix.format(_apply_linear(ch0_apply_feats, b0_0, coefs_0), "c0")}
     )
     return repaired.select("subject", "trial", "ts", "window", *EMG_CHANNELS)
 
@@ -491,11 +496,11 @@ def emg_frame_features(
 
     Pad slots (outside [0, max_window)) contribute ``nominal_win_rows``
     zero-valued samples, which DO pass through the scaler — reference
-    missing_value=0 semantics. A channel whose IQR is 0 scales to 0
-    (the quotient is NULL, then nan_to_num); sklearn's RobustScaler
-    would divide by 1, which differs only on the pad samples of a
-    constant non-zero channel. Output: [subject, trial, win_end,
-    emg_feats array<double>] with frame-major layout
+    missing_value=0 semantics. A channel whose IQR is 0 is divided by
+    1, as sklearn's RobustScaler does (``_handle_zeros_in_scale``, the
+    rule of ``operators.scalers``), so the pad samples of a constant
+    non-zero channel scale to minus its median. Output: [subject,
+    trial, win_end, emg_feats array<double>] with frame-major layout
     (emg_win_means.reshape(-1))."""
     n_slots = int((left_s + right_s) * 1000) // step_ms
     offsets = [(-int(left_s * 1000)) + i * step_ms for i in range(n_slots)]
@@ -537,10 +542,11 @@ def emg_frame_features(
         "subject", "trial", "win_end", "`window`", "ts", *channels, "_slot_off"
     ).unionByName(pad_rows)
 
-    # robust scale (x - med) / iqr, then nan_to_num; try_divide makes
-    # an IQR of 0 a NULL (-> 0) where ANSI division would raise
+    # robust scale (x - med) / iqr with an IQR of 0 read as 1, then
+    # nan_to_num
     scaled = [
-        f"coalesce(nanvl(try_divide(`{c}` - `{c}_med`, `{c}_iqr`), 0.0D), 0.0D) AS `{c}`"
+        f"coalesce(nanvl((`{c}` - `{c}_med`) / CASE WHEN `{c}_iqr` = 0 THEN 1.0D "
+        f"ELSE `{c}_iqr` END, 0.0D), 0.0D) AS `{c}`"
         for c in EMG_CHANNELS
     ]
     frame = (

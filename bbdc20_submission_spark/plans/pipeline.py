@@ -3,18 +3,18 @@
 Accepts the three native tables as DataFrames (loaded by
 sources/native.py from CSVs, or synthesized by tests), trains on the
 train subjects, predicts the test subject, and emits the submission
-interval table. Only the feature matrix is ever collected (thousands
-of rows x ~416 — SURVEY §7 M3 design rule); everything else stays
-distributed.
+interval table. Only the feature matrix (thousands of rows x ~416 —
+SURVEY §7 M3 design rule) and the two arm label vocabularies are ever
+collected; everything else stays distributed.
 """
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from bbdc20_submission_spark.caching import managed_persist
+from bbdc20_submission_spark.operators.text import sql_str_lit
 from bbdc20_submission_spark.plans import bbdc
 from bbdc20_submission_spark.plans.models import predict_vote, train_ensemble
 
@@ -36,39 +36,39 @@ def run_pipeline(
 
     # stages 2-4: targets + sensor prep
     targets = managed_persist(bbdc.expand_targets(labels))
-    left_dim, right_dim = bbdc.arm_label_dims(labels)
+    # the label vocabulary, read once; every later stage consumes it as
+    # literal SQL (encode, one-hot, decode)
+    left_classes, right_classes = bbdc.arm_label_classes(labels)
     emg_p = bbdc.prepare_emg(emg)
     mocap_p = bbdc.prepare_mocap(mocap)
 
     # stage 5: channel repair (train side only, as in the reference);
     # cached — consumed by the scaler fit, the feature stage and the
     # training collect
-    emg_r = managed_persist(bbdc.repair_channels(emg_p, targets, left_dim, right_dim))
+    emg_r = managed_persist(bbdc.repair_channels(emg_p, targets, left_classes, right_classes))
 
     # stage 6: per-subject robust scaler stats
     scaler_stats = bbdc.subject_scaler_stats(emg_r)
 
     # stage 7: train features on the la-grid anchors
-    anchors = targets.filter(F.col("arm") == "la").select(
-        "subject", "trial", "win_end"
-    ).distinct()
+    anchors = targets.filter("arm = 'la'").select("subject", "trial", "win_end").distinct()
     feats = bbdc.build_features(mocap_p, emg_r, anchors, scaler_stats)
 
     # stage 9: train (collect the small matrix; J1 key-aligned join)
-    la = targets.filter(F.col("arm") == "la").select(
-        "subject", "trial", "win_end", F.col("action").alias("la_action")
+    la = targets.filter("arm = 'la'").selectExpr(
+        "subject", "trial", "win_end", "action AS la_action"
     )
-    ra = targets.filter(F.col("arm") == "ra").select(
-        "subject", "trial", "win_end", F.col("action").alias("ra_action")
+    ra = targets.filter("arm = 'ra'").selectExpr(
+        "subject", "trial", "win_end", "action AS ra_action"
     )
     train_rows = (
         feats.join(la, ["subject", "trial", "win_end"])
         .join(ra, ["subject", "trial", "win_end"])
-        .join(F.broadcast(left_dim.withColumnRenamed("code", "y_left")),
-              F.col("la_action") == left_dim.action)
-        .join(F.broadcast(right_dim.withColumnRenamed("code", "y_right")),
-              F.col("ra_action") == right_dim.action)
-        .select("subject", "features", "y_left", "y_right")
+        .selectExpr(
+            "subject", "features",
+            f"{bbdc.label_code_sql(left_classes, 'la_action')} AS y_left",
+            f"{bbdc.label_code_sql(right_classes, 'ra_action')} AS y_right",
+        )
         .collect()
     )
     x = np.array([r["features"] for r in train_rows], dtype=np.float64)
@@ -77,49 +77,28 @@ def run_pipeline(
     weight = np.array(
         [2.0 if r["subject"] == "s05" else 1.0 for r in train_rows]
     )
-    n_left = left_dim.count()
-    n_right = right_dim.count()
-    left_models = train_ensemble(x, y_l, weight, n_classes=n_left,
+    left_models = train_ensemble(x, y_l, weight, n_classes=len(left_classes),
                                  n_models=n_models, seed=seed)
-    right_models = train_ensemble(x, y_r, weight, n_classes=n_right,
+    right_models = train_ensemble(x, y_r, weight, n_classes=len(right_classes),
                                   n_models=n_models, seed=seed)
 
     # stage 8: test features — anchors are the mocap window keys
     # (generate_submission.py:421), scaler fit on the test subject
     emg_t = bbdc.prepare_emg(emg_test)
     mocap_t = bbdc.prepare_mocap(mocap_test)
-    test_scaler = bbdc.subject_scaler_stats(
-        emg_t.filter(F.col("subject") == test_subject)
-    )
+    is_test = f"subject = {sql_str_lit(test_subject)}"
+    test_scaler = bbdc.subject_scaler_stats(emg_t.filter(is_test))
     test_anchors = (
-        mocap_t.filter(F.col("subject") == test_subject)
-        .select("subject", "trial", F.col("window").alias("win_end"))
-        .distinct()
+        mocap_t.filter(is_test).selectExpr("subject", "trial", "`window` AS win_end").distinct()
     )
     test_feats = bbdc.build_features(mocap_t, emg_t, test_anchors, test_scaler)
 
     # stages 10-11: predict, vote, decode, RLE, emit
     voted_l = predict_vote(test_feats, left_models, "code_l")
     voted = predict_vote(voted_l, right_models, "code_r")
-    decoded = (
-        voted.join(
-            F.broadcast(left_dim.select(F.col("code").alias("code_l"),
-                                        F.col("action").alias("la_pred"))),
-            "code_l",
-        )
-        .join(
-            F.broadcast(right_dim.select(F.col("code").alias("code_r"),
-                                         F.col("action").alias("ra_pred"))),
-            "code_r",
-        )
+    preds = voted.selectExpr(
+        "subject", "trial", "win_end",
+        f"stack(2, 'la', {bbdc.label_decode_sql(left_classes, 'code_l')}, "
+        f"'ra', {bbdc.label_decode_sql(right_classes, 'code_r')}) AS (arm, action)",
     )
-    left_preds = decoded.select(
-        "subject", "trial", F.lit("la").alias("arm"),
-        "win_end", F.col("la_pred").alias("action"),
-    )
-    right_preds = decoded.select(
-        "subject", "trial", F.lit("ra").alias("arm"),
-        "win_end", F.col("ra_pred").alias("action"),
-    )
-    preds = left_preds.unionByName(right_preds)
     return bbdc.predictions_to_intervals(preds)

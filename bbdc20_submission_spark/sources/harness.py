@@ -276,9 +276,3 @@ def table_column_max(
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Read all harness tables into a name -> DataFrame dict."""
     return {name: load_table(spark, name, sf_dir) for name in HARNESS_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so spark.sql can use it."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -41,32 +41,6 @@ def stream_tumbling_agg(
     )
 
 
-def stream_sliding_agg(
-    events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window variant (the streaming analog of the J3 context
-    gathers: each row contributes to window/slide overlapping frames)."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(value_col), 6).alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("win_start"),
-            F.col("win.end").alias("win_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
 def stream_session_windows(
     events: DataFrame,
     ts_col: str = "ts",

@@ -158,8 +158,8 @@ def _emg_feats_golden(emg_rows, anchors, left_ms=2000, right_ms=2000,
             for ix in range(win_end - left_ms, win_end + right_ms, STEP)
         ])
         med, iqr = scaler[s]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            scaled = np.nan_to_num((block - med) / iqr)
+        # sklearn's _handle_zeros_in_scale: an IQR of 0 divides by 1
+        scaled = np.nan_to_num((block - med) / np.where(iqr == 0, 1.0, iqr))
         out[(s, t, win_end)] = np.concatenate([
             np.abs(scaled[i:i + frame_rows]).mean(axis=0)
             for i in range(0, len(scaled), frame_rows)
@@ -168,12 +168,15 @@ def _emg_feats_golden(emg_rows, anchors, left_ms=2000, right_ms=2000,
 
 
 def test_emg_frame_features_match_reference_math(spark):
-    """Includes a subject whose c3 is constant 0 (IQR 0): its scaled
-    values are 0/0, which nan_to_num zeroes."""
+    """Includes a subject whose c3 is constant 0 and whose c5 is
+    constant 2.5 (both IQR 0). Both divide by 1, as sklearn's
+    RobustScaler does: c3 scales to 0 everywhere, while c5's real
+    samples scale to 0 and its zero-valued pad samples to -2.5 (a
+    NULL-then-0 rule would zero them)."""
     subjects = ("s01", "s02")
     labels_rows, emg_rows, _ = make_fixture(subjects=subjects, span_s=1.6)
     emg_rows = [
-        (*r[:6], 0.0, *r[7:]) if r[0] == "s02" else r for r in emg_rows
+        (*r[:6], 0.0, r[7], 2.5, *r[9:]) if r[0] == "s02" else r for r in emg_rows
     ]
     labels_df, _, _ = fixture_dfs(spark, subjects=subjects, span_s=1.6)
     emg_df = spark.createDataFrame(
@@ -197,8 +200,10 @@ def test_emg_frame_features_match_reference_math(spark):
     for key, feats in got.items():
         assert len(feats) == 12 * 8
         np.testing.assert_allclose(feats, want[key], rtol=1e-9, atol=1e-12, err_msg=str(key))
-    # the IQR-0 channel really went through the nan_to_num path
-    assert all(feats[3::8] == [0.0] * 12 for key, feats in got.items() if key[0] == "s02")
+    s02 = [feats for key, feats in got.items() if key[0] == "s02"]
+    assert all(feats[3::8] == [0.0] * 12 for feats in s02)
+    # the constant non-zero channel's pad frames carry |0 - 2.5| / 1
+    assert any(v > 0 for feats in s02 for v in feats[5::8])
 
 
 # ------------------------------------------------- driver plan-assembly cost
@@ -263,13 +268,62 @@ E2E_KW = dict(span_s=3.2)
 
 
 @pytest.fixture(scope="module")
-def submission(spark):
+def pipeline_run(spark):
+    """One run_pipeline build + collect on the E2E fixture, run under a
+    job group: (submission rows, Spark jobs fired)."""
     labels_df, emg_df, mocap_df = fixture_dfs(spark, **E2E_KW)
     _, emg_t, mocap_t = fixture_dfs(spark, subjects=("s06",), seed=7, **E2E_KW)
-    out = run_pipeline(
-        labels_df, emg_df, mocap_df, emg_t, mocap_t, n_models=3
+    sc = spark.sparkContext
+    group = "test-pipeline-e2e"
+    sc.setJobGroup(group, "run_pipeline build + collect")
+    try:
+        rows = run_pipeline(
+            labels_df, emg_df, mocap_df, emg_t, mocap_t, n_models=3
+        ).collect()
+        return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+@pytest.fixture(scope="module")
+def submission(pipeline_run):
+    return pipeline_run[0]
+
+
+def test_pipeline_job_budget(pipeline_run):
+    """The label vocabulary is read once and encoded, one-hot encoded
+    and decoded as literal SQL: the run fires about 63 jobs. Re-reading
+    the label dims at each stage (collects, counts, broadcast joins)
+    fired 95-96."""
+    assert pipeline_run[1] <= 70, f"{pipeline_run[1]} jobs for one run_pipeline"
+
+
+def test_label_vocabulary_literals_round_trip(spark):
+    """The one-read class lists are arm_label_dims' code order, and the
+    literal encode/decode fragments round-trip every class, a quoted
+    one included."""
+    labels = spark.createDataFrame(
+        [
+            ("s01", "t01", "la", 0.0, 1.0, "la-lift"),
+            ("s01", "t01", "la", 1.0, 2.0, "la-don't"),
+            ("s02", "t01", "la", 0.0, 2.0, "la-lift"),
+            ("s01", "t01", "ra", 0.0, 2.0, "ra-stir"),
+            ("s02", "t01", "ra", 0.0, 2.0, "ra-hold"),
+        ],
+        "subject string, trial string, arm string, start double, end double, action string",
     )
-    return out.collect()
+    classes = bbdc.arm_label_classes(labels)
+    assert classes == (["la-don't", "la-lift"], ["ra-hold", "ra-stir"])
+    for cls, dim in zip(classes, bbdc.arm_label_dims(labels)):
+        assert sorted((r["code"], r["action"]) for r in dim.collect()) == list(enumerate(cls))
+        got = (
+            spark.createDataFrame([(c,) for c in cls], "action string")
+            .selectExpr("action", f"{bbdc.label_code_sql(cls, 'action')} AS code")
+            .selectExpr("action", "code", f"{bbdc.label_decode_sql(cls, 'code')} AS back")
+            .collect()
+        )
+        assert [(r["code"], r["back"]) for r in got] == list(enumerate(cls))
 
 
 def test_pipeline_runs_and_produces_intervals(submission):

@@ -436,7 +436,7 @@ def test_corpus_diff_statuses_match_python_reference(
 
 
 def test_charclass_counts_translate_equals_regex(spark):
-    """r11 pin: raw_text_stats counts char classes via translate
+    """r11 pin: _raw_text_stats_sql counts char classes via translate
     (delete-the-class, diff the lengths) — must equal the
     regexp_replace('[^...]') formulation EXACTLY on adversarial
     inputs: unicode letters outside [a-zA-Z] (must NOT count),
