@@ -2,6 +2,7 @@
 
 Stage map (reference -> here):
 - target expansion  generate_submission.py:146 / load_data.py:34-42 -> expand_targets
+- slot labels       (both arms per grid slot)                    -> arm_labels
 - label vocabulary  load_data.py:25-28 (A10)                     -> arm_label_classes
 - sensor prep       load_data.py:95,122-129,202-212              -> prepare_emg / prepare_mocap
 - channel repair    generate_submission.py:162-302 (L1)          -> repair_channels
@@ -13,8 +14,13 @@ Stage map (reference -> here):
 The label vocabulary is read once, as two Python class lists; the
 encode, one-hot and decode steps are literal SQL over them
 (``label_code_sql``, the one-hot fragments, ``label_decode_sql``), so
-no stage joins or re-reads a label dimension. The robust scaler reads
-an IQR of 0 as 1 (sklearn's ``_handle_zeros_in_scale``).
+no stage joins or re-reads a label dimension. One ``arm_labels`` frame
+carries the grid labels to every consumer: the repair aligns it to the
+EMG samples once, as one frame holding both of the reference's label
+rules (fit and apply), and fits both repair models over that one
+persisted frame. The robust scaler reads an IQR of 0 as 1 (sklearn's
+``_handle_zeros_in_scale``). Window step, context widths and frame
+sizes are the module constants below — the reference's values.
 
 Scale design: every stage is a DataFrame graph. The feature stage does
 NOT gather raw samples per anchor; it pre-aggregates per-window
@@ -54,7 +60,18 @@ from bbdc20_submission_spark.operators.text import sql_str_lit
 from bbdc20_submission_spark.plans.sensors_config import subtraction_pairs
 
 STEP_MS = 200
+# ``int(ts*1000) // step * step`` (load_data.py:122-123) — ``//``
+# floors, so the quotient goes through floor (a long cast truncates
+# toward zero, off by one window for negative timestamps)
+WINDOW_KEY_SQL = f"CAST(floor(CAST(`ts` * 1000 AS BIGINT) / {STEP_MS}) * {STEP_MS} AS BIGINT)"
 EMG_CHANNELS = [f"c{i}" for i in range(8)]
+# EMG samples in one 200 ms window at 600 Hz: the repair's repeat-120
+# label rule and the size of an EMG pad slot
+NOMINAL_WIN_ROWS = 120
+# EMG context: +-2 s of 200 ms slots around an anchor, cut into
+# 200-sample frames (generate_submission.py:368-376)
+EMG_CONTEXT_MS = 2000
+EMG_FRAME_ROWS = 200
 # (left_s, right_s) context gathers, reference order
 # (generate_submission.py:344-366)
 MOCAP_GATHERS = [
@@ -73,16 +90,7 @@ PIPELINE_USE_SENSORS = {
 }
 
 
-def window_key(ts_col: str = "ts", step_ms: int = STEP_MS) -> str:
-    """SQL for ``int(ts*1000) // step * step`` (load_data.py:122-123) —
-    ``//`` floors, so the quotient goes through floor (a long cast
-    truncates toward zero, off by one window for negative timestamps)."""
-    return (
-        f"CAST(floor(CAST(`{ts_col}` * 1000 AS BIGINT) / {step_ms}) * {step_ms} AS BIGINT)"
-    )
-
-
-def expand_targets(labels: DataFrame, step_ms: int = STEP_MS) -> DataFrame:
+def expand_targets(labels: DataFrame) -> DataFrame:
     """Interval -> 200 ms grid expansion with the reference's running
     cursor (load_data.py:34-42): win_end starts at step and consumes
     every grid point strictly below end*1000 before moving to the next
@@ -99,15 +107,15 @@ def expand_targets(labels: DataFrame, step_ms: int = STEP_MS) -> DataFrame:
     return (
         labels.selectExpr(
             "subject", "trial", "arm", "`start`", "action",
-            f"CAST(ceil(`end` * 1000 / {step_ms}) * {step_ms} - {step_ms} AS BIGINT) AS hi",
+            f"CAST(ceil(`end` * 1000 / {STEP_MS}) * {STEP_MS} - {STEP_MS} AS BIGINT) AS hi",
         )
         .selectExpr(
-            "*", f"greatest(coalesce({prev_hi} + {step_ms}, {step_ms}), {step_ms}) AS lo"
+            "*", f"greatest(coalesce({prev_hi} + {STEP_MS}, {STEP_MS}), {STEP_MS}) AS lo"
         )
         .filter("hi >= lo")
         .selectExpr(
             "subject", "trial", "arm",
-            f"explode(sequence(lo, hi, {step_ms})) AS win_end", "action",
+            f"explode(sequence(lo, hi, {STEP_MS})) AS win_end", "action",
         )
     )
 
@@ -148,7 +156,7 @@ def label_decode_sql(classes: Sequence[str], code_col: str) -> str:
     return f"element_at({_classes_sql(classes)}, CAST(`{code_col}` AS INT) + 1)"
 
 
-def prepare_emg(emg: DataFrame, step_ms: int = STEP_MS) -> DataFrame:
+def prepare_emg(emg: DataFrame) -> DataFrame:
     """Interpolate nulls per trial (W7), add window key (W1).
 
     Expects [subject, trial, ts, c0..c7]. Sample order inside a trial
@@ -156,72 +164,79 @@ def prepare_emg(emg: DataFrame, step_ms: int = STEP_MS) -> DataFrame:
     out = interpolate_linear(
         emg, ["subject", "trial"], ["ts"], EMG_CHANNELS
     )
-    return add_sql_columns(out, {"window": window_key("ts", step_ms)})
+    return add_sql_columns(out, {"window": WINDOW_KEY_SQL})
 
 
-def prepare_mocap(
-    mocap: DataFrame,
-    use_sensors: dict | None = None,
-    step_ms: int = STEP_MS,
-) -> DataFrame:
-    """Interpolate, make configured sensors reference-relative (P5),
+def prepare_mocap(mocap: DataFrame) -> DataFrame:
+    """Interpolate, make the pipeline's sensors reference-relative (P5),
     add window key. Expects wide [subject, trial, ts, <sensor cols>]."""
-    use_sensors = use_sensors or PIPELINE_USE_SENSORS
     value_cols = [c for c in mocap.columns if c not in ("subject", "trial", "ts")]
     out = interpolate_linear(mocap, ["subject", "trial"], ["ts"], value_cols)
     # in pair order, each subtraction reads the columns as the earlier
     # pairs left them (a finger minus the already hand-relative hand),
     # composed into one projection
     relative: dict[str, str] = {}
-    for col, ref_col in subtraction_pairs(use_sensors):
+    for col, ref_col in subtraction_pairs(PIPELINE_USE_SENSORS):
         if col in value_cols and ref_col in value_cols:
             cur = relative.get(col, f"`{col}`")
             ref = relative.get(ref_col, f"`{ref_col}`")
             relative[col] = f"({cur}) - ({ref})"
-    return add_sql_columns(out, {**relative, "window": window_key("ts", step_ms)})
+    return add_sql_columns(out, {**relative, "window": WINDOW_KEY_SQL})
 
 
 # --------------------------------------------------------------- L1 repair
 
-def _arm_labels(targets: DataFrame) -> DataFrame:
+def arm_labels(targets: DataFrame) -> DataFrame:
     """[subject, trial, win_end, la_action, ra_action]: both arms' label
-    of each grid slot (one per slot and arm, so max picks it)."""
+    of each ``expand_targets`` grid slot (one per slot and arm, so max
+    picks it; NULL where an arm has none)."""
     return targets.groupBy("subject", "trial", "win_end").agg(
         F.expr("max(CASE WHEN arm = 'la' THEN action END) AS la_action"),
         F.expr("max(CASE WHEN arm = 'ra' THEN action END) AS ra_action"),
     )
 
 
-def _sample_label_alignment(
-    emg: DataFrame, arm_labels: DataFrame, step_ms: int = STEP_MS
-) -> DataFrame:
-    """J5: align each EMG sample with the window labels by the
-    reference's repeat-120 rule (generate_submission.py:179-191):
-    sample i of a trial takes the label of grid slot floor(i/120)+1,
-    clamped to the last labeled slot (tail padded with last label).
-    Adds ``la_action`` / ``ra_action`` columns."""
+def _sample_label_alignment(emg: DataFrame, slot_labels: DataFrame) -> DataFrame:
+    """J5: both of the repair's label rules, as columns of each EMG
+    sample (``slot_labels`` is an ``arm_labels`` frame):
+
+    - fit rule, ``la_fit``/``ra_fit`` (generate_submission.py:179-191):
+      sample i of a trial takes the label of grid slot floor(i/120)+1,
+      clamped to the last labeled slot (tail padded with last label);
+    - apply rule, ``la_apply``/``ra_apply`` (:221-226): the label of
+      slot window+200, '<arm>-nothing' when that slot has none."""
     slot = (
-        "(floor((row_number() OVER (PARTITION BY subject, trial ORDER BY ts) - 1) / 120)"
-        f" + 1) * {step_ms}"
+        "(floor((row_number() OVER (PARTITION BY subject, trial ORDER BY ts) - 1)"
+        f" / {NOMINAL_WIN_ROWS}) + 1) * {STEP_MS}"
     )
-    last = arm_labels.groupBy("subject", "trial").agg(F.expr("max(win_end) AS _max_we"))
+    last = slot_labels.groupBy("subject", "trial").agg(F.expr("max(win_end) AS _max_we"))
     tagged = emg.selectExpr("*", f"{slot} AS _win_end").join(last, ["subject", "trial"], "left")
-    return (
+    aligned = (
         add_sql_columns(tagged, {"_win_end": "least(_win_end, _max_we)"})
-        .join(arm_labels.withColumnRenamed("win_end", "_win_end"),
+        .join(slot_labels.selectExpr("subject", "trial", "win_end AS _win_end",
+                                     "la_action AS la_fit", "ra_action AS ra_fit"),
               ["subject", "trial", "_win_end"], "left")
-        .drop("_win_end", "_max_we")
+        .join(slot_labels.selectExpr("subject", "trial", f"win_end - {STEP_MS} AS `window`",
+                                     "la_action AS la_apply", "ra_action AS ra_apply"),
+              ["subject", "trial", "window"], "left")
     )
+    return add_sql_columns(aligned, {
+        "la_apply": "coalesce(la_apply, 'la-nothing')",
+        "ra_apply": "coalesce(ra_apply, 'ra-nothing')",
+    }).drop("_win_end", "_max_we")
 
 
-def _onehot_label_sql(left_classes: list[str], right_classes: list[str]) -> dict[str, str]:
-    """12 one-hot columns (6 left + 6 right classes, code order) from
-    la_action/ra_action (LabelBinarizer semantics, :163-168), as
-    ``add_sql_columns`` fragments."""
+def _onehot_label_sql(
+    left_classes: list[str], right_classes: list[str], rule: str
+) -> dict[str, str]:
+    """12 one-hot columns ``oh_<rule>_l*``/``oh_<rule>_r*`` (6 left + 6
+    right classes, code order) from ``la_<rule>``/``ra_<rule>``
+    (LabelBinarizer semantics, :163-168), as ``add_sql_columns``
+    fragments."""
     return {
-        **{f"oh_l{i}": f"CAST(la_action = {sql_str_lit(c)} AS DOUBLE)"
+        **{f"oh_{rule}_l{i}": f"CAST(la_{rule} = {sql_str_lit(c)} AS DOUBLE)"
            for i, c in enumerate(left_classes)},
-        **{f"oh_r{i}": f"CAST(ra_action = {sql_str_lit(c)} AS DOUBLE)"
+        **{f"oh_{rule}_r{i}": f"CAST(ra_{rule} = {sql_str_lit(c)} AS DOUBLE)"
            for i, c in enumerate(right_classes)},
     }
 
@@ -274,7 +289,7 @@ def _apply_linear(feature_cols: list[str], intercept: float, coefs: list[float])
 
 def repair_channels(
     emg: DataFrame,
-    targets: DataFrame,
+    slot_labels: DataFrame,
     left_classes: list[str],
     right_classes: list[str],
 ) -> DataFrame:
@@ -288,61 +303,42 @@ def repair_channels(
       applied with the DIFFERENT order [1,2,3,4,5,6,7] (:296), and to
       s02+s04 (loop iterates emg_4_fix_subjects — the unused
       emg_0_fix_subjects list is :284). Both quirks preserved.
+    - Both fits label a sample by the repeat-120 rule (``la_fit`` /
+      ``ra_fit``); both applies label it by its window + 200, else
+      '<arm>-nothing' (``la_apply`` / ``ra_apply``, :221-226).
 
+    ``slot_labels`` is the ``arm_labels`` frame of the grid;
     ``left_classes``/``right_classes`` are the arm vocabularies in code
-    order (``arm_label_classes``). The apply path labels windows by
-    win_end = window+200 when labeled else '<arm>-nothing' (:221-226)
-    — reproduced via join + coalesce.
+    order (``arm_label_classes``). One aligned frame carries both label
+    rules and is persisted once: the ch0 fit reads the repaired c4
+    through the same fragment that repairs it, so the fits need no
+    second alignment or join.
     """
-    arm_labels = _arm_labels(targets)
-    onehot = _onehot_label_sql(left_classes, right_classes)
-    oh_cols = list(onehot)
-    aligned = managed_persist(
-        add_sql_columns(_sample_label_alignment(emg, arm_labels), onehot)
+    fit_oh = _onehot_label_sql(left_classes, right_classes, "fit")
+    apply_oh = _onehot_label_sql(left_classes, right_classes, "apply")
+    aligned = add_sql_columns(
+        managed_persist(_sample_label_alignment(emg, slot_labels)), {**fit_oh, **apply_oh}
     )
-
-    # ---- ch4 model (train: repeat-120 alignment; s01/s03/s05)
-    ch4_feats = [f"c{i}" for i in [0, 1, 2, 3, 5, 6, 7]] + oh_cols
-    fit_df = aligned.filter("subject IN ('s01', 's03', 's05')")
-    b0_4, coefs_4 = _fit_ols(fit_df, ch4_feats, "c4")
-
-    # apply: window labeled by win_end = window + 200 (apply-path rule)
-    applied = emg.join(
-        arm_labels.selectExpr(
-            "subject", "trial", f"win_end - {STEP_MS} AS `window`", "la_action", "ra_action"
-        ),
-        ["subject", "trial", "window"],
-        "left",
-    )
-    applied = add_sql_columns(applied, {
-        "la_action": "coalesce(la_action, 'la-nothing')",
-        "ra_action": "coalesce(ra_action, 'ra-nothing')",
-    })
     fix = "CASE WHEN subject IN ('s02', 's04') THEN {} ELSE `{}` END"
-    repaired = add_sql_columns(
-        add_sql_columns(applied, onehot),
-        {"c4": fix.format(_apply_linear(ch4_feats, b0_4, coefs_4), "c4")},
-    )
-    # consumed by the ch0 fit, the ch0 apply and the output
-    repaired = managed_persist(repaired)
 
-    # ---- ch0 model: trained on the ch4-REPAIRED data (order matters)
-    aligned2 = add_sql_columns(
-        _sample_label_alignment(
-            repaired.select("subject", "trial", "ts", "window", *EMG_CHANNELS), arm_labels
-        ),
-        onehot,
+    ch4_chans = [f"c{i}" for i in [0, 1, 2, 3, 5, 6, 7]]
+    b0_4, coefs_4 = _fit_ols(
+        aligned.filter("subject IN ('s01', 's03', 's05')"), ch4_chans + list(fit_oh), "c4"
     )
-    ch0_train_feats = [f"c{i}" for i in [1, 2, 4, 3, 5, 6, 7]] + oh_cols
-    fit0 = aligned2.filter("subject IN ('s01', 's02', 's03', 's05')")
-    b0_0, coefs_0 = _fit_ols(fit0, ch0_train_feats, "c0")
+    repaired = add_sql_columns(aligned, {
+        "c4": fix.format(_apply_linear(ch4_chans + list(apply_oh), b0_4, coefs_4), "c4"),
+    })
 
-    # applied with channel order [1,2,3,4,5,6,7] (reference bug: s02
-    # included)
-    ch0_apply_feats = [f"c{i}" for i in [1, 2, 3, 4, 5, 6, 7]] + oh_cols
-    repaired = add_sql_columns(
-        repaired, {"c0": fix.format(_apply_linear(ch0_apply_feats, b0_0, coefs_0), "c0")}
+    # ch0 model: trained on the ch4-REPAIRED data (order matters)
+    b0_0, coefs_0 = _fit_ols(
+        repaired.filter("subject IN ('s01', 's02', 's03', 's05')"),
+        [f"c{i}" for i in [1, 2, 4, 3, 5, 6, 7]] + list(fit_oh),
+        "c0",
     )
+    ch0_apply = [f"c{i}" for i in range(1, 8)] + list(apply_oh)
+    repaired = add_sql_columns(repaired, {
+        "c0": fix.format(_apply_linear(ch0_apply, b0_0, coefs_0), "c0"),
+    })
     return repaired.select("subject", "trial", "ts", "window", *EMG_CHANNELS)
 
 
@@ -387,13 +383,7 @@ def _window_partials(df: DataFrame, value_cols: Sequence[str]) -> DataFrame:
     return tagged.groupBy("subject", "trial", "window").agg(*map(F.expr, aggs))
 
 
-def mocap_gather_features(
-    mocap: DataFrame,
-    anchors: DataFrame,
-    value_cols: Sequence[str] = tuple(MOCAP_USE),
-    gathers: Sequence[tuple[float, float]] = tuple(MOCAP_GATHERS),
-    step_ms: int = STEP_MS,
-) -> DataFrame:
+def mocap_gather_features(mocap: DataFrame, anchors: DataFrame) -> DataFrame:
     """The 8-gather x 5-stat x 8-channel mocap feature block
     (generate_submission.py:330-366), computed from window partials.
 
@@ -401,15 +391,15 @@ def mocap_gather_features(
     columns g{gi}_{stat}_{ch} in reference order. A gather whose slot
     range leaves [0, max_window) is zeroed wholesale (NaN-pad +
     nan_to_num semantics)."""
-    partials = _window_partials(mocap, value_cols)
+    partials = _window_partials(mocap, MOCAP_USE)
     max_win = mocap.groupBy("subject", "trial").agg(F.expr("max(`window`) AS _max_win"))
 
     # anchor x gather x slot expansion (slot counts are small constants)
     slot_rows = []
-    for gi, (left_s, right_s) in enumerate(gathers):
+    for gi, (left_s, right_s) in enumerate(MOCAP_GATHERS):
         lo_off = -int(left_s * 1000)
         hi_off = int(right_s * 1000)
-        for slot_off in range(lo_off, hi_off, step_ms):
+        for slot_off in range(lo_off, hi_off, STEP_MS):
             slot_rows.append((gi, slot_off))
     slots = "array(%s)" % ", ".join(
         f"struct({gi} AS g, {off} AS off)" for gi, off in slot_rows
@@ -426,7 +416,7 @@ def mocap_gather_features(
 
     pad = "(`window` < 0 OR `window` >= _max_win)"
     aggs = [f"max(CAST({pad} AS INT)) AS _padded", "sum(_cnt) AS _n"]
-    for c in value_cols:
+    for c in MOCAP_USE:
         aggs += [
             f"sum(`{c}_sum`) AS `{c}_sum`",
             f"min(`{c}_min`) AS `{c}_min`",
@@ -445,7 +435,7 @@ def mocap_gather_features(
     stat_names = []
     # reference stat order: mean, mean_diff, start_end_diff, max, min
     for stat in ("mean", "meandiff", "sediff", "max", "min"):
-        for c in value_cols:
+        for c in MOCAP_USE:
             e = {
                 "mean": f"`{c}_sum` / _n",
                 # try_divide: n = 1 gives NULL (-> 0) where ANSI raises
@@ -468,33 +458,24 @@ def mocap_gather_features(
     agg = packed.groupBy("subject", "trial", "win_end").agg(
         *[
             F.expr(f"max(CASE WHEN g = {gi} THEN _st END) AS _st{gi}")
-            for gi in range(len(gathers))
+            for gi in range(len(MOCAP_GATHERS))
         ]
     )
     return agg.selectExpr(
         "subject", "trial", "win_end",
         *[
             f"element_at(_st{gi}, {j + 1}) AS `g{gi}_{n}`"
-            for gi in range(len(gathers))
+            for gi in range(len(MOCAP_GATHERS))
             for j, n in enumerate(stat_names)
         ],
     )
 
 
-def emg_frame_features(
-    emg: DataFrame,
-    anchors: DataFrame,
-    scaler_stats: DataFrame,
-    left_s: float = 2.0,
-    right_s: float = 2.0,
-    frame_rows: int = 200,
-    nominal_win_rows: int = 120,
-    step_ms: int = STEP_MS,
-) -> DataFrame:
+def emg_frame_features(emg: DataFrame, anchors: DataFrame, scaler_stats: DataFrame) -> DataFrame:
     """EMG context block -> robust scale -> 200-sample frames ->
     mean(|x|) per frame per channel (generate_submission.py:368-376).
 
-    Pad slots (outside [0, max_window)) contribute ``nominal_win_rows``
+    Pad slots (outside [0, max_window)) contribute ``NOMINAL_WIN_ROWS``
     zero-valued samples, which DO pass through the scaler — reference
     missing_value=0 semantics. A channel whose IQR is 0 is divided by
     1, as sklearn's RobustScaler does (``_handle_zeros_in_scale``, the
@@ -502,8 +483,7 @@ def emg_frame_features(
     non-zero channel scale to minus its median. Output: [subject,
     trial, win_end, emg_feats array<double>] with frame-major layout
     (emg_win_means.reshape(-1))."""
-    n_slots = int((left_s + right_s) * 1000) // step_ms
-    offsets = [(-int(left_s * 1000)) + i * step_ms for i in range(n_slots)]
+    offsets = range(-EMG_CONTEXT_MS, EMG_CONTEXT_MS, STEP_MS)
     max_win = emg.groupBy("subject", "trial").agg(F.expr("max(`window`) AS _max_win"))
 
     slots = (
@@ -529,7 +509,7 @@ def emg_frame_features(
         slots.filter(pad)
         .selectExpr(
             "subject", "trial", "win_end", "`window`", "_slot_off",
-            f"explode(sequence(1, {nominal_win_rows})) AS _i",
+            f"explode(sequence(1, {NOMINAL_WIN_ROWS})) AS _i",
         )
         .selectExpr(
             "subject", "trial", "win_end", "`window`",
@@ -551,7 +531,7 @@ def emg_frame_features(
     ]
     frame = (
         f"floor((row_number() OVER (PARTITION BY subject, trial, win_end "
-        f"ORDER BY _slot_off, ts) - 1) / {frame_rows}) AS _frame"
+        f"ORDER BY _slot_off, ts) - 1) / {EMG_FRAME_ROWS}) AS _frame"
     )
     framed = (
         block.join(F.broadcast(scaler_stats), "subject", "left")

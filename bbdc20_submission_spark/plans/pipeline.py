@@ -34,8 +34,10 @@ def run_pipeline(
 
     ensure_package_shipped(labels.sparkSession)
 
-    # stages 2-4: targets + sensor prep
-    targets = managed_persist(bbdc.expand_targets(labels))
+    # stages 2-4: targets + sensor prep. Both arms' label of each grid
+    # slot, cached: the one label frame of the repair, the training
+    # anchors and the training-label join
+    slot_labels = managed_persist(bbdc.arm_labels(bbdc.expand_targets(labels)))
     # the label vocabulary, read once; every later stage consumes it as
     # literal SQL (encode, one-hot, decode)
     left_classes, right_classes = bbdc.arm_label_classes(labels)
@@ -45,25 +47,19 @@ def run_pipeline(
     # stage 5: channel repair (train side only, as in the reference);
     # cached — consumed by the scaler fit, the feature stage and the
     # training collect
-    emg_r = managed_persist(bbdc.repair_channels(emg_p, targets, left_classes, right_classes))
+    emg_r = managed_persist(bbdc.repair_channels(emg_p, slot_labels, left_classes, right_classes))
 
     # stage 6: per-subject robust scaler stats
     scaler_stats = bbdc.subject_scaler_stats(emg_r)
 
-    # stage 7: train features on the la-grid anchors
-    anchors = targets.filter("arm = 'la'").select("subject", "trial", "win_end").distinct()
-    feats = bbdc.build_features(mocap_p, emg_r, anchors, scaler_stats)
-
-    # stage 9: train (collect the small matrix; J1 key-aligned join)
-    la = targets.filter("arm = 'la'").selectExpr(
-        "subject", "trial", "win_end", "action AS la_action"
-    )
-    ra = targets.filter("arm = 'ra'").selectExpr(
-        "subject", "trial", "win_end", "action AS ra_action"
+    # stages 7 + 9: train features on the slots both arms label, then
+    # collect the small matrix (J1 key-aligned join)
+    labeled = slot_labels.filter("la_action IS NOT NULL AND ra_action IS NOT NULL")
+    feats = bbdc.build_features(
+        mocap_p, emg_r, labeled.select("subject", "trial", "win_end"), scaler_stats
     )
     train_rows = (
-        feats.join(la, ["subject", "trial", "win_end"])
-        .join(ra, ["subject", "trial", "win_end"])
+        feats.join(labeled, ["subject", "trial", "win_end"])
         .selectExpr(
             "subject", "features",
             f"{bbdc.label_code_sql(left_classes, 'la_action')} AS y_left",

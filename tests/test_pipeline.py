@@ -206,6 +206,96 @@ def test_emg_frame_features_match_reference_math(spark):
     assert any(v > 0 for feats in s02 for v in feats[5::8])
 
 
+# ------------------------------------------------- golden: channel repair
+
+def _ols_golden(x, y):
+    """sklearn LinearRegression: least squares with an intercept
+    (minimum-norm lstsq on centered data)."""
+    xm, ym = x.mean(axis=0), y.mean()
+    coefs, *_ = np.linalg.lstsq(x - xm, y - ym, rcond=None)
+    return ym - xm @ coefs, coefs
+
+
+def _repair_golden(pdf, grid, classes):
+    """numpy re-derivation of generate_submission.py:162-302 over
+    prepared EMG [subject, trial, ts, window, c0..c7] sorted by
+    (subject, trial, ts), with the expanded label grid."""
+    keys = list(zip(pdf["subject"], pdf["trial"]))
+    max_we = {}
+    for s, t, _, win_end in grid:
+        max_we[(s, t)] = max(max_we.get((s, t), 0), win_end)
+    # fit rule: sample i takes slot floor(i/120)+1, clamped to the last
+    # labeled slot; apply rule: slot window+200, else '<arm>-nothing'
+    i = pdf.groupby(["subject", "trial"]).cumcount().to_numpy()
+    fit_slot = np.minimum((i // 120 + 1) * STEP, [max_we[k] for k in keys])
+    fit, apply = [], []
+    for arm, cls in zip(("la", "ra"), classes):
+        fit_lab = [grid.get((*k, arm, int(w))) for k, w in zip(keys, fit_slot)]
+        apply_lab = [
+            grid.get((*k, arm, int(w) + STEP), f"{arm}-nothing")
+            for k, w in zip(keys, pdf["window"])
+        ]
+        # every fit slot is labeled here: Spark's one-hot of a NULL label
+        # is NULL, which its sums skip and this re-derivation would not
+        assert None not in fit_lab
+        fit.append(np.array([[lab == c for c in cls] for lab in fit_lab], dtype=float))
+        apply.append(np.array([[lab == c for c in cls] for lab in apply_lab], dtype=float))
+    fit, apply = np.hstack(fit), np.hstack(apply)
+
+    c = pdf[bbdc.EMG_CHANNELS].to_numpy()
+    subject = pdf["subject"].to_numpy()
+    fix = np.isin(subject, ["s02", "s04"])
+    # ch4: channels [0,1,2,3,5,6,7] + one-hots, fit on s01/s03/s05
+    order4 = [0, 1, 2, 3, 5, 6, 7]
+    train = np.isin(subject, ["s01", "s03", "s05"])
+    b, w = _ols_golden(np.hstack([c[:, order4], fit])[train], c[train, 4])
+    out = c.copy()
+    out[fix, 4] = (b + np.hstack([c[:, order4], apply]) @ w)[fix]
+    # ch0: fit on s01/s02/s03/s05 after the ch4 repair with the order
+    # [1,2,4,3,5,6,7], applied with [1..7]
+    train = np.isin(subject, ["s01", "s02", "s03", "s05"])
+    b, w = _ols_golden(np.hstack([out[:, [1, 2, 4, 3, 5, 6, 7]], fit])[train], c[train, 0])
+    out[fix, 0] = (b + np.hstack([out[:, 1:8], apply]) @ w)[fix]
+    return out
+
+
+def test_repair_channels_match_reference_math(spark):
+    """repair_channels against a numpy re-derivation of the L1 repair:
+    the clamped repeat-120 fit labels, the window+200 apply labels with
+    the '-nothing' fallback, the fit order [1,2,4,3,5,6,7] vs the apply
+    order [1..7], s02 in the ch0 fit after its own c4 repair, and
+    s02+s04 repaired by both models."""
+    labels_rows, _, _ = make_fixture(**E2E_KW)
+    _, emg_df, _ = fixture_dfs(spark, **E2E_KW)
+    emg = bbdc.prepare_emg(emg_df).select(
+        "subject", "trial", "ts", "window", *bbdc.EMG_CHANNELS
+    )
+    pdf = emg.toPandas().sort_values(["subject", "trial", "ts"]).reset_index(drop=True)
+    grid = _expand_targets_golden(labels_rows)
+    classes = [sorted({a for k, a in grid.items() if k[2] == arm}) for arm in ("la", "ra")]
+    grid_df = spark.createDataFrame(
+        [(*k, a) for k, a in grid.items()],
+        "subject string, trial string, arm string, win_end long, action string",
+    )
+    got = (
+        bbdc.repair_channels(
+            spark.createDataFrame(pdf, emg.schema), bbdc.arm_labels(grid_df), *classes
+        )
+        .toPandas()
+        .sort_values(["subject", "trial", "ts"])
+        .reset_index(drop=True)
+    )
+    want = _repair_golden(pdf, grid, classes)
+    keys = ["subject", "trial", "ts", "window"]
+    assert got[keys].equals(pdf[keys])
+    np.testing.assert_allclose(got[bbdc.EMG_CHANNELS].to_numpy(), want, rtol=1e-9, atol=1e-12)
+    untouched = ~pdf["subject"].isin(["s02", "s04"]).to_numpy()
+    assert (got[bbdc.EMG_CHANNELS].to_numpy()[untouched] == want[untouched]).all()
+    fixed = ~untouched
+    for ch in (0, 4):
+        assert (want[fixed, ch] != pdf[f"c{ch}"].to_numpy()[fixed]).all()
+
+
 # ------------------------------------------------- driver plan-assembly cost
 
 def test_training_matrix_build_py4j_budget(spark, tmp_path):
@@ -293,10 +383,13 @@ def submission(pipeline_run):
 
 def test_pipeline_job_budget(pipeline_run):
     """The label vocabulary is read once and encoded, one-hot encoded
-    and decoded as literal SQL: the run fires about 63 jobs. Re-reading
-    the label dims at each stage (collects, counts, broadcast joins)
-    fired 95-96."""
-    assert pipeline_run[1] <= 70, f"{pipeline_run[1]} jobs for one run_pipeline"
+    and decoded as literal SQL, and one persisted arm-label frame feeds
+    the channel repair (one aligned frame for both fits), the training
+    anchors and the training-label join: the run fires 55 jobs (4
+    cores). Re-reading the label dims at each stage fired 95-96; two
+    repair rounds with their own alignments, and per-arm label frames
+    for training, 62-64."""
+    assert pipeline_run[1] <= 60, f"{pipeline_run[1]} jobs for one run_pipeline"
 
 
 def test_label_vocabulary_literals_round_trip(spark):

@@ -64,6 +64,58 @@ def test_telescoping_single_row_group_is_null(spark):
     assert got == {0: 3.0, 1: None}
 
 
+# a zero scale divides by 1 (sklearn's _handle_zeros_in_scale): every
+# row of a one-row or constant group scales to 0
+_SCALED_ZEROS = [(0, 0.0), (1, 0.0), (1, 0.0), (1, 0.0)]
+# documented [g, out] rows for group 0 = one row of 3.0 and group 1 =
+# three rows of 2.5
+_EDGE_WANT = {
+    # a one-row group has no diffs: NULL
+    "telescoping_mean_diff": [(0, None), (1, 0.0)],
+    "block_sum_diff": [(0, 0.0), (1, 0.0)],
+    "signed_abs_max": [(0, 3.0), (1, 2.5)],
+    "mode_lowest": [(0, 3.0), (1, 2.5)],
+    "robust_scale": _SCALED_ZEROS,
+    **{f"scale_group_{m}": _SCALED_ZEROS for m in ("standard", "zero_mean", "minmax", "robust")},
+}
+
+
+def _edge_plan(op, df):
+    """``op`` over [g, i, v] as [g, out]."""
+    from bbdc20_submission_spark.operators import aggregates as A
+    from bbdc20_submission_spark.operators.scalers import scale_group
+
+    if op == "telescoping_mean_diff":
+        return df.groupBy("g").agg(A.telescoping_mean_diff("v", F.col("i")).alias("out"))
+    if op == "signed_abs_max":
+        return df.groupBy("g").agg(A.signed_abs_max("v").alias("out"))
+    if op == "block_sum_diff":
+        out = A.block_sum_diff(df, ["g"], "v", ["i"], 7)
+        return out.withColumnRenamed("block_sum_diff", "out")
+    if op == "mode_lowest":
+        return A.mode_lowest(df, ["g"], "v", "out")
+    if op == "robust_scale":
+        return A.robust_scale(df, ["g"], "v", "out")
+    mode = op.removeprefix("scale_group_")
+    out = scale_group(df, ["g"], ["v"], mode=mode, suffix="_out")
+    return out.withColumnRenamed("v_out", "out")
+
+
+@pytest.mark.parametrize("op", sorted(_EDGE_WANT))
+def test_aggregates_and_scalers_on_degenerate_groups(spark, op):
+    """Every public aggregate and scaler returns its documented value
+    on a one-row group and a constant group, and no rows on an empty
+    frame — never ANSI's DIVIDE_BY_ZERO."""
+    from bbdc20_submission_spark.operators.scalers import SCALER_MODES
+
+    assert {f"scale_group_{m}" for m in SCALER_MODES} <= set(_EDGE_WANT)
+    schema = "g long, i long, v double"
+    rows = [(0, 0, 3.0), (1, 0, 2.5), (1, 1, 2.5), (1, 2, 2.5)]
+    got = _edge_plan(op, spark.createDataFrame(rows, schema)).collect()
+    assert sorted((r["g"], r["out"]) for r in got) == _EDGE_WANT[op]
+    assert _edge_plan(op, spark.createDataFrame([], schema)).collect() == []
+
+
 def _reference_frames(n_rows: int, win: int, shift: int, cut: int) -> list[list[int]]:
     """utils.py:10-16 semantics on row indices."""
     frames = [
