@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -83,7 +83,3 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -7,7 +7,7 @@ Stage map (reference -> here):
 - sensor prep       load_data.py:95,122-129,202-212              -> prepare_emg / prepare_mocap
 - channel repair    generate_submission.py:162-302 (L1)          -> repair_channels
 - robust scaling    generate_submission.py:304-313 (A9)          -> subject_scaler_stats
-- features          generate_submission.py:315-379 (W9)          -> build_features
+- features          generate_submission.py:315-379, 421 (W9)     -> build_features
 - train/predict     generate_submission.py:47-130, 479-502       -> plans.models
 - decode+RLE+sink   generate_submission.py:505-569 (W6/S5)       -> predictions_to_intervals
 
@@ -185,6 +185,10 @@ def prepare_mocap(mocap: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------- L1 repair
+
+# the subjects ``repair_channels`` fits on or rewrites: no test subject
+REPAIR_SUBJECTS = ("s01", "s02", "s03", "s04", "s05")
+
 
 def arm_labels(targets: DataFrame) -> DataFrame:
     """[subject, trial, win_end, la_action, ra_action]: both arms' label

@@ -3,9 +3,12 @@
 Accepts the three native tables as DataFrames (loaded by
 sources/native.py from CSVs, or synthesized by tests), trains on the
 train subjects, predicts the test subject, and emits the submission
-interval table. Only the feature matrix (thousands of rows x ~416 —
-SURVEY §7 M3 design rule) and the two arm label vocabularies are ever
-collected; everything else stays distributed.
+interval table. The test subject's samples come from the test
+tables, every other subject's from the train tables, and both splits
+share one plan from sensor prep to features. Only the feature matrix
+(thousands of rows x ~416 — SURVEY §7 M3 design rule) and the two arm
+label vocabularies are ever collected; everything else stays
+distributed.
 """
 
 from __future__ import annotations
@@ -30,6 +33,9 @@ def run_pipeline(
     seed: int = 1337,
 ) -> DataFrame:
     """Returns the submission DataFrame [key, start, end, action]."""
+    if test_subject in bbdc.REPAIR_SUBJECTS:
+        raise ValueError(f"test_subject {test_subject!r}: the channel repair fits on or "
+                         f"rewrites {', '.join(bbdc.REPAIR_SUBJECTS)}")
     from bbdc20_submission_spark.session import ensure_package_shipped
 
     ensure_package_shipped(labels.sparkSession)
@@ -41,23 +47,30 @@ def run_pipeline(
     # the label vocabulary, read once; every later stage consumes it as
     # literal SQL (encode, one-hot, decode)
     left_classes, right_classes = bbdc.arm_label_classes(labels)
-    emg_p = bbdc.prepare_emg(emg)
-    mocap_p = bbdc.prepare_mocap(mocap)
+    # one sensor frame per kind for both splits, split by subject: every
+    # later stage groups by subject or (subject, trial)
+    is_test = f"subject = {sql_str_lit(test_subject)}"
+    emg_p = bbdc.prepare_emg(emg.filter(f"NOT {is_test}").unionByName(emg_test.filter(is_test)))
+    mocap_p = bbdc.prepare_mocap(
+        mocap.filter(f"NOT {is_test}").unionByName(mocap_test.filter(is_test)))
 
-    # stage 5: channel repair (train side only, as in the reference);
-    # cached — consumed by the scaler fit, the feature stage and the
-    # training collect
+    # stage 5: channel repair (test rows carry no label and pass through
+    # unchanged); cached for the scaler fit and the feature stage
     emg_r = managed_persist(bbdc.repair_channels(emg_p, slot_labels, left_classes, right_classes))
 
-    # stage 6: per-subject robust scaler stats
+    # stage 6: robust scaler stats per subject, the test subject's own
     scaler_stats = bbdc.subject_scaler_stats(emg_r)
 
-    # stages 7 + 9: train features on the slots both arms label, then
-    # collect the small matrix (J1 key-aligned join)
-    labeled = slot_labels.filter("la_action IS NOT NULL AND ra_action IS NOT NULL")
-    feats = bbdc.build_features(
-        mocap_p, emg_r, labeled.select("subject", "trial", "win_end"), scaler_stats
-    )
+    # stage 7: features of both splits in one cached frame. Anchors are
+    # the train slots both arms label and the test subject's mocap
+    # window keys (generate_submission.py:421)
+    labeled = slot_labels.filter(
+        f"la_action IS NOT NULL AND ra_action IS NOT NULL AND NOT {is_test}")
+    anchors = labeled.select("subject", "trial", "win_end").unionByName(
+        mocap_p.filter(is_test).selectExpr("subject", "trial", "`window` AS win_end").distinct())
+    feats = managed_persist(bbdc.build_features(mocap_p, emg_r, anchors, scaler_stats))
+
+    # stage 9: collect the small training matrix (J1 key-aligned join)
     train_rows = (
         feats.join(labeled, ["subject", "trial", "win_end"])
         .selectExpr(
@@ -78,19 +91,8 @@ def run_pipeline(
     right_models = train_ensemble(x, y_r, weight, n_classes=len(right_classes),
                                   n_models=n_models, seed=seed)
 
-    # stage 8: test features — anchors are the mocap window keys
-    # (generate_submission.py:421), scaler fit on the test subject
-    emg_t = bbdc.prepare_emg(emg_test)
-    mocap_t = bbdc.prepare_mocap(mocap_test)
-    is_test = f"subject = {sql_str_lit(test_subject)}"
-    test_scaler = bbdc.subject_scaler_stats(emg_t.filter(is_test))
-    test_anchors = (
-        mocap_t.filter(is_test).selectExpr("subject", "trial", "`window` AS win_end").distinct()
-    )
-    test_feats = bbdc.build_features(mocap_t, emg_t, test_anchors, test_scaler)
-
     # stages 10-11: predict, vote, decode, RLE, emit
-    voted_l = predict_vote(test_feats, left_models, "code_l")
+    voted_l = predict_vote(feats.filter(is_test), left_models, "code_l")
     voted = predict_vote(voted_l, right_models, "code_r")
     preds = voted.selectExpr(
         "subject", "trial", "win_end",

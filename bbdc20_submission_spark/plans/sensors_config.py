@@ -11,10 +11,6 @@ POSITION_TYPES = ("Position_X", "Position_Y", "Position_Z")
 ROTATION_TYPES = ("Rotation_X", "Rotation_Z", "Rotation_W", "Rotation_Y")
 ALL_TYPES = POSITION_TYPES + ROTATION_TYPES
 
-IGNORED = frozenset(
-    {"LToe", "RToe", "RShin", "LShin", "LThigh", "RThigh", "Hip", "Ab"}
-)
-
 # body-part -> subtraction reference (hand positions made chest-relative
 # etc.); only pairs reachable from the main pipeline's sensor config
 # plus the full-vocabulary variant.

@@ -1,11 +1,10 @@
 """Reference-native CSV sources (SURVEY §2.1 S1-S5).
 
 The reference loads one CSV per (subject, trial) in a Python loop
-(``/root/reference/load_data.py:85-94, 161-170``); here a single
-partitioned glob scan reads every file in one job and
-``input_file_name()`` restores the (subject, trial) partition identity
-(S4). At 100 TB this is the difference between a driver bottleneck and
-a fully parallel scan.
+(``load_data.py:85-94, 161-170``); here one scan of the globbed file
+list reads every file in one job and ``input_file_name()`` restores
+the (subject, trial) partition identity (S4). At 100 TB this is the
+difference between a driver bottleneck and a fully parallel scan.
 
 Sensor CSVs are read with a declared all-DOUBLE schema taken from the
 first file's header, never with schema inference: inference fires two
@@ -51,16 +50,17 @@ def load_labels(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _csv_header(spark: SparkSession, pattern: str) -> list[str]:
-    """Column names from the header line of the first file matching
-    ``pattern``, read on the driver through the Hadoop ``FileSystem``
-    (any Hadoop path; no Spark job)."""
+def _csv_files(spark: SparkSession, pattern: str) -> tuple[list[str], list[str]]:
+    """The files matching ``pattern`` and the column names from the
+    header line of the first, read on the driver through the Hadoop
+    ``FileSystem`` (any Hadoop path; no Spark job)."""
     jvm = spark.sparkContext._jvm
     glob = jvm.org.apache.hadoop.fs.Path(pattern)
     fs = glob.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     matches = fs.globStatus(glob)
     if matches is None or len(matches) == 0:
         raise FileNotFoundError(f"no file matches {pattern}")
+    files = [m.getPath().toString() for m in matches]
     reader = jvm.java.io.BufferedReader(
         jvm.java.io.InputStreamReader(fs.open(matches[0].getPath()), "UTF-8")
     )
@@ -69,8 +69,8 @@ def _csv_header(spark: SparkSession, pattern: str) -> list[str]:
     finally:
         reader.close()
     if not line:
-        raise ValueError(f"{matches[0].getPath().toString()}: no header line")
-    return next(csv.reader([line.lstrip("\ufeff")]))
+        raise ValueError(f"{files[0]}: no header line")
+    return files, next(csv.reader([line.lstrip("\ufeff")]))
 
 
 def _with_file_keys(df: DataFrame, columns: list[str]) -> DataFrame:
@@ -86,16 +86,16 @@ def _with_file_keys(df: DataFrame, columns: list[str]) -> DataFrame:
 
 
 def load_sensor_csv_dir(spark: SparkSession, path: str) -> DataFrame:
-    """S2/S3: one glob scan over a directory of per-trial sensor CSVs
-    (header row, numeric columns), keyed by filename. Every column is
-    DOUBLE, named by the first file's header (module docstring: why
-    not inferred); an empty cell is a NULL, i.e. a missing sample."""
-    pattern = os.path.join(path, "*.csv")
-    columns = _csv_header(spark, pattern)
+    """S2/S3: one scan over the ``*.csv`` files of a directory of
+    per-trial sensor CSVs (header row, numeric columns), keyed by
+    filename. Every column is DOUBLE, named by the first file's header
+    (module docstring: why not inferred); an empty cell is a NULL, i.e.
+    a missing sample."""
+    files, columns = _csv_files(spark, os.path.join(path, "*.csv"))
     schema = T.StructType([T.StructField(c, T.DoubleType(), True) for c in columns])
-    df = spark.read.csv(
-        pattern, schema=schema, header=True, enforceSchema=False, mode="FAILFAST"
-    )
+    # the globbed files, not the glob: for a glob path Spark logs a WARN
+    # and a stack trace looking for a streaming-sink metadata directory
+    df = spark.read.csv(files, schema=schema, header=True, enforceSchema=False, mode="FAILFAST")
     return _with_file_keys(df, columns)
 
 

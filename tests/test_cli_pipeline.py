@@ -38,12 +38,20 @@ def _stage_native(tmp_path, subjects, seed):
 
 
 def test_cli_pipeline_native_csv_to_submission(spark, tmp_path):
+    """S1-S5 end to end: reference-native CSVs (missing samples as empty
+    cells) -> native loaders -> run_pipeline -> one headerless
+    submission part file of the test subject's intervals."""
     train = tmp_path / "train"
     test = tmp_path / "test"
     train.mkdir()
     test.mkdir()
     _stage_native(train, ("s01", "s02", "s03", "s04", "s05"), seed=42)
     _stage_native(test, ("s06",), seed=7)
+    empty_cells = 0  # the fixture's NULL samples, staged as empty fields
+    for f in glob.glob(f"{tmp_path}/*/*/*.csv"):
+        with open(f, newline="") as fh:
+            empty_cells += sum(row.count("") for row in csv.reader(fh))
+    assert empty_cells > 0
     out = str(tmp_path / "submission")
     rc = main(
         [
@@ -65,6 +73,6 @@ def test_cli_pipeline_native_csv_to_submission(spark, tmp_path):
     assert len(rows) > 0
     vocab = {"la-nothing", "la-lift", "la-pour", "ra-nothing", "ra-hold", "ra-stir"}
     for key, start, end, action in rows:
-        assert key.startswith("s06") and "." in key
+        assert key.startswith("s06t01.")
         assert float(end) > float(start) >= 0
         assert action in vocab

@@ -383,13 +383,32 @@ def submission(pipeline_run):
 
 def test_pipeline_job_budget(pipeline_run):
     """The label vocabulary is read once and encoded, one-hot encoded
-    and decoded as literal SQL, and one persisted arm-label frame feeds
+    and decoded as literal SQL; one persisted arm-label frame feeds
     the channel repair (one aligned frame for both fits), the training
-    anchors and the training-label join: the run fires 55 jobs (4
-    cores). Re-reading the label dims at each stage fired 95-96; two
-    repair rounds with their own alignments, and per-arm label frames
-    for training, 62-64."""
-    assert pipeline_run[1] <= 60, f"{pipeline_run[1]} jobs for one run_pipeline"
+    anchors and the training-label join; and train and test share one
+    sensor, scaler and persisted feature plan: the run fires 42 jobs
+    (4 cores). A second, test-side copy of the prepare, scaler and
+    feature stages fired 53-55 (gate 60); two repair rounds with their
+    own alignments, and per-arm label frames for training, 62-64;
+    re-reading the label dims at each stage, 95-96."""
+    assert pipeline_run[1] <= 45, f"{pipeline_run[1]} jobs for one run_pipeline"
+
+
+def test_pipeline_rejects_a_repaired_test_subject(spark):
+    """A test subject the channel repair fits on or rewrites would have
+    its samples repaired and dropped from training: run_pipeline raises
+    before it fires a Spark job."""
+    labels_df, emg_df, mocap_df = fixture_dfs(spark, subjects=("s02",), span_s=0.4)
+    sc = spark.sparkContext
+    group = "test-pipeline-repaired-test-subject"
+    sc.setJobGroup(group, "run_pipeline with a repaired test subject")
+    try:
+        with pytest.raises(ValueError, match="s02"):
+            run_pipeline(labels_df, emg_df, mocap_df, emg_df, mocap_df, test_subject="s02")
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_label_vocabulary_literals_round_trip(spark):
@@ -496,8 +515,6 @@ def test_pipeline_from_csv_sources(spark, tmp_path):
     mocap_df = load_sensor_csv_dir(spark, str(tmp_path / "mocap"))
     emg_t_df = load_sensor_csv_dir(spark, str(tmp_path / "emg_t"))
     mocap_t_df = load_sensor_csv_dir(spark, str(tmp_path / "mocap_t"))
-
-    from bbdc20_submission_spark.plans.pipeline import run_pipeline
 
     sub = run_pipeline(labels_df, emg_df, mocap_df, emg_t_df, mocap_t_df, n_models=2)
     out = str(tmp_path / "submission")
