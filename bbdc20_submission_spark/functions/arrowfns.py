@@ -11,7 +11,7 @@ new fastest Python path.
 ``arrow_cosine`` is the certified sample: cosine similarity of two
 ``array<float/double>`` columns, computed with numpy over the Arrow
 list arrays. Its contract vs the pure-expression
-``operators.similarity.cosine``: agreement to 1 ulp — numpy's
+``operators.similarity.cosine_sql``: agreement to 1 ulp — numpy's
 reductions use pairwise summation while the expression path is a
 strict left fold, so the two differ by at most one rounding step
 (measured max |Δ| = 2.2e-16 on the harness embeddings). Callers
@@ -36,9 +36,10 @@ from pyspark.sql.types import DoubleType
 @arrow_udf(DoubleType())
 def arrow_cosine(a: pa.Array, b: pa.Array) -> pa.Array:
     """Cosine similarity per row over two Arrow list arrays — within
-    1 ulp of ``similarity.cosine`` (see module docstring), with the
+    1 ulp of ``similarity.cosine_sql`` (see module docstring), with the
     expression path's NULL semantics: a null array, a null ELEMENT,
-    or mismatched lengths (zip_with pads with null) all yield NULL.
+    mismatched lengths (zip_with pads with null) or a zero norm (an
+    undefined cosine) all yield NULL.
 
     Fast path (the point of arrow_udf): when the batch has no null
     lists/elements and lengths pair up, compute over the ListArray's
@@ -73,7 +74,10 @@ def arrow_cosine(a: pa.Array, b: pa.Array) -> pa.Array:
             dots = np.add.reduceat(xa * xb, starts)
             na = np.sqrt(np.add.reduceat(xa * xa, starts))
             nb = np.sqrt(np.add.reduceat(xb * xb, starts))
-            return pa.array(dots / (na * nb), type=pa.float64())
+            den = na * nb
+            zero = den == 0
+            cos = np.divide(dots, den, out=np.zeros(n), where=~zero)
+            return pa.array(cos, type=pa.float64(), mask=zero)
     out = []
     for x, y in zip(a.to_pylist(), b.to_pylist()):
         if (
@@ -90,5 +94,5 @@ def arrow_cosine(a: pa.Array, b: pa.Array) -> pa.Array:
         dot = np.add.reduce(xa * ya)
         na = np.sqrt(np.add.reduce(xa * xa))
         nb = np.sqrt(np.add.reduce(ya * ya))
-        out.append(float(dot / (na * nb)))
+        out.append(float(dot / (na * nb)) if na * nb != 0 else None)
     return pa.array(out, type=pa.float64())

@@ -12,15 +12,18 @@ operators the DataFrame operators compile to) — no Python UDFs, so
 calling these from SQL costs exactly what the DataFrame path costs and
 stays inside whole-stage codegen. The token-count, stopword-ratio and
 quality bodies are the ``operators.text`` fragments that
-``quality_score`` parses, and the other constants (token pattern,
-fingerprint base/modulus) come from the same module, so the SQL surface
-cannot drift from the certified DataFrame surface.
+``quality_score`` parses, the cosine body is the zero-safe
+``operators.similarity.cosine_sql`` fragment (NULL on a zero-norm
+vector), and the other constants (token pattern, fingerprint
+base/modulus) come from ``operators.text``, so the SQL surface cannot
+drift from the certified DataFrame surface.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from bbdc20_submission_spark.operators.similarity import cosine_sql, l2_norm_sql
 from bbdc20_submission_spark.operators.text import (
     STOPWORDS,
     TOKEN_PATTERN,
@@ -52,10 +55,8 @@ def _definitions() -> dict[str, str]:
             "AS BIGINT), 1000000007)) % 1000000007)"
         ),
         # similarity scalars
-        "sg_cosine(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) RETURNS DOUBLE": (
-            "aggregate(zip_with(a, b, (x, y) -> x * y), 0.0D, (s, v) -> s + v) "
-            "/ (sqrt(aggregate(a, 0.0D, (s, v) -> s + v * v)) "
-            "* sqrt(aggregate(b, 0.0D, (s, v) -> s + v * v)))"
+        "sg_cosine(a ARRAY<DOUBLE>, b ARRAY<DOUBLE>) RETURNS DOUBLE": cosine_sql(
+            "a", "b", l2_norm_sql("a"), l2_norm_sql("b")
         ),
         "sg_hamming64(a BIGINT, b BIGINT) RETURNS INT": "CAST(bit_count(a ^ b) AS INT)",
         # hash-stable 6-decimal integerization (oracle authoring rule)

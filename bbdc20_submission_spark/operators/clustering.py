@@ -586,7 +586,7 @@ def ivf_topk(
     from pyspark.sql import Window
 
     from bbdc20_submission_spark.operators.similarity import (
-        dot_sql,
+        cosine_sql,
         l2_norm_sql,
     )
 
@@ -636,7 +636,7 @@ def ivf_topk(
         .selectExpr(
             "query_id",
             "match_id",
-            f"{dot_sql('_qv', '_cv')} / (_qn * _cn) AS _sim",
+            f"{cosine_sql('_qv', '_cv', '_qn', '_cn')} AS _sim",
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -691,26 +691,17 @@ def _refine_hot_cells(
 
     Returns ``assigned`` with the ``cluster`` column rewritten to the
     composite key."""
-    from bbdc20_submission_spark.operators.dedup import _hot_buckets
+    from bbdc20_submission_spark.operators.dedup import _collect_hot_dim
 
-    hot = _hot_buckets(assigned, ["cluster"], refine_cap)
-    hot_rows = hot.collect()  # bounded: <= n / refine_cap rows
+    # the collected dim is replayed as a local relation — joining
+    # against the aggregate itself would re-execute it once per
+    # consumer (semi-join + anti-join)
+    hot, hot_rows, _ = _collect_hot_dim(assigned, ["cluster"], refine_cap)
     if not hot_rows:
         return assigned
     n_hot = sum(r["_bn"] for r in hot_rows)
     k2 = int(min(max(n_hot // target_cell_size, 2), 65536))
-    # rebuild the hot dim from the ALREADY-collected rows — joining
-    # against `hot` itself would re-execute its aggregate once per
-    # consumer (semi-join + anti-join)
-    from pyspark.sql import types as T
-
-    spark = assigned.sparkSession
-    hot_ids = spark.createDataFrame(
-        [(r["cluster"],) for r in hot_rows],
-        schema=T.StructType(
-            [T.StructField("cluster", assigned.schema["cluster"].dataType)]
-        ),
-    )
+    hot_ids = hot.select("cluster")
     hot_members = assigned.join(F.broadcast(hot_ids), "cluster", "left_semi")
     model2 = fit_quantizer(
         hot_members,

@@ -66,6 +66,130 @@ def _hot_buckets(frame: DataFrame, bucket_cols: list[str], cap: int) -> DataFram
     )
 
 
+# The bounded hot-bucket plan's constants, shared by the three LSH
+# self-joins (minhash_lsh_candidates, hamming_near_pairs,
+# similarity.embedding_near_dups). Probe-side sub assignments per row:
+# 4 bounds the probe fanout at 4x (vs m-fold for the exact explosion)
+# while lifting per-band retention from ~1/m to ~4/m (SCALING.md,
+# d9_auto_guard row).
+_BOUNDED_PROBE_ROUNDS = 4
+# hamming_near_pairs' auto-mode ceiling in estimated pair evaluations:
+# ~a few seconds of vectorized SWAR popcounts on a 32-core executor
+# wave; past it the quadratic term dominates wall.
+_EXACT_PAIR_BUDGET = 1_000_000_000
+
+
+def _sub_count_sql(cap: int) -> str:
+    """SQL of ``m = ceil(_bn / cap)``: the subs a hot bucket of ``_bn``
+    members splits into (NULL for rows off the hot dim)."""
+    return f"CAST(ceil(_bn / {cap}) AS BIGINT)"
+
+
+def _sub_count(cap: int) -> Column:
+    """:func:`_sub_count_sql` with non-hot rows (``_bn`` NULL) at 1."""
+    return F.expr(
+        f"CASE WHEN _bn IS NOT NULL THEN {_sub_count_sql(cap)} ELSE 1 END"
+    )
+
+
+def _collect_hot_dim(
+    frame: DataFrame, bucket_cols: list[str], cap: int
+) -> tuple[DataFrame, list, int]:
+    """Collect the hot-bucket dim in ONE aggregate job: returns the hot
+    dim replayed as a local relation, its rows (bucket keys + ``_bn``)
+    and ``sum(_bn^2)`` over ALL buckets — the exact self-join candidate
+    volume. ``collect_list`` skips nulls, so the filtered struct list
+    IS the hot dim — bounded, since a bucket is hot only past ``cap``
+    members (at most rows/cap entries). The local relation then
+    REPLACES every plan-side recomputation of the hot agg, so a
+    caller's guard costs this one job instead of adding to the plan."""
+    occ = frame.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("_bn"))
+    guard = occ.agg(
+        F.sum(F.col("_bn") * F.col("_bn")).alias("_v"),
+        F.collect_list(
+            F.when(F.col("_bn") > cap, F.struct(*bucket_cols, "_bn"))
+        ).alias("_hot"),
+    ).first()
+    rows = list(guard["_hot"])
+    hot = frame.sparkSession.createDataFrame(rows, occ.schema)
+    return hot, rows, int(guard["_v"] or 0)
+
+
+def _chain_edges(
+    index: DataFrame,
+    hot: DataFrame,
+    bucket_cols: list[str],
+    payload: str | None = None,
+) -> DataFrame:
+    """Chain edges across a hot bucket's subs: ``[id_a, id_b]`` with
+    ``id_a < id_b`` (plus ``_pa``/``_pb``, the ``payload`` column of
+    ``id_a``/``id_b``, when one is named) over an index-side frame
+    ``[_id, sub_bucket, *bucket_cols, payload?]``.
+
+    Sub-splitting compares pairs only WITHIN a sub. Even with the
+    bucket-salted assignment making each band's split independent,
+    WITHIN any one band a capped dup family is partitioned into
+    ``m = ceil(n/cap)`` disconnected subs; downstream keep-one-per-
+    family clustering would then keep up to m representatives of one
+    family unless the ~rounds/m cross-sub sampling of some band
+    happens to link every fragment. Each sub contributes TWO
+    representatives (its min- and max-id members) and consecutive
+    subs are linked through all four rep-pair edges (+4(m-1) edges
+    per hot bucket). Each caller verifies the edges like any
+    candidate: MinHash lets them ride its jaccard verify, the hamming
+    and embedding joins check the exact distance / cosine against
+    the payloads, so only true pairs are added.
+
+    HEURISTIC, not a guarantee: in a MIXED hot bucket (a dup family
+    sharing its bucket with unrelated collision docs) an edge
+    anchored on a collision rep fails the verify, so the family
+    reconnects only if, for every consecutive sub pair, at least one
+    of the four rep edges joins two family members. Two reps per sub
+    square the per-link failure odds vs one (a collision doc must
+    hold BOTH extremes of a sub's id range) — the cheap end of the
+    tradeoff; the exact alternative (explode one side across subs,
+    ``hamming_near_pairs(exact_hot_buckets=True)``) restores the
+    O(n^2) hot-bucket cost the cap exists to bound. On a healthy
+    corpus the hot dim is empty and every stage is a no-op over zero
+    rows. The window stage is SQL text (r14): the lag/struct/explode
+    Column assembly cost ~50 py4j round trips per build."""
+    rep = F.col("_id") if payload is None else F.struct("_id", payload)
+    reps = (
+        index.join(F.broadcast(hot.select(*bucket_cols)), bucket_cols)
+        .groupBy(*bucket_cols, "sub_bucket")
+        .agg(F.min(rep).alias("_lo"), F.max(rep).alias("_hi"))
+    )
+    lag_over = (
+        f"OVER (PARTITION BY {', '.join(bucket_cols)} ORDER BY sub_bucket ASC)"
+    )
+    # rep structs order by _id first, so least/greatest pick the
+    # lower/higher id together with its payload
+    ends = ("id_a", "id_b") if payload is None else ("_a", "_b")
+    edges = (
+        reps.selectExpr(
+            "_lo",
+            "_hi",
+            f"lag(_lo) {lag_over} AS _plo",
+            f"lag(_hi) {lag_over} AS _phi",
+        )
+        .filter("_plo IS NOT NULL")
+        .selectExpr(
+            "inline(array("
+            "struct(_plo AS x, _lo AS y), struct(_plo AS x, _hi AS y), "
+            "struct(_phi AS x, _lo AS y), struct(_phi AS x, _hi AS y)))"
+        )
+        .selectExpr(f"least(x, y) AS {ends[0]}", f"greatest(x, y) AS {ends[1]}")
+    )
+    if payload is not None:
+        edges = edges.selectExpr(
+            "_a._id AS id_a",
+            "_b._id AS id_b",
+            f"_a.`{payload}` AS _pa",
+            f"_b.`{payload}` AS _pb",
+        )
+    return edges.filter("id_a != id_b")
+
+
 def _apply_sub_buckets(
     frame: DataFrame,
     hot: DataFrame,
@@ -91,8 +215,7 @@ def _apply_sub_buckets(
     hash_args = ", ".join(f"`{c}`" for c in (id_col, *salt_cols))
     sub = (
         "CAST(CASE WHEN _bn IS NOT NULL THEN "
-        f"pmod(xxhash64({hash_args}), "
-        f"CAST(ceil(_bn / {cap}) AS BIGINT)) "
+        f"pmod(xxhash64({hash_args}), {_sub_count_sql(cap)}) "
         "ELSE 0 END AS BIGINT) AS sub_bucket"
     )
     return frame.join(F.broadcast(hot), bucket_cols, "left").selectExpr(
@@ -131,10 +254,7 @@ def _multi_sub_buckets(
     ~6.6e6 background candidates through the jaccard verify for the
     SAME 16382/16382 within-budget recall the sampled plan gets in
     132 s."""
-    m = F.when(
-        F.col("_bn").isNotNull(),
-        F.ceil(F.col("_bn") / F.lit(cap)).cast("long"),
-    ).otherwise(F.lit(1))
+    m = _sub_count(cap)
     subs = F.array_distinct(
         F.array(
             *[
@@ -172,16 +292,11 @@ def _explode_sub_buckets(
     the pigeonhole guarantee requires; the index side stays <= cap per
     (bucket, sub) task and the kernel's blocked matrix bounds peak
     memory regardless."""
-    m = (
-        F.when(
-            F.col("_bn").isNotNull(),
-            F.ceil(F.col("_bn") / F.lit(cap)).cast("long"),
-        )
-        .otherwise(F.lit(1))
-    )
     return (
         frame.join(F.broadcast(hot), bucket_cols, "left")
-        .withColumn("sub_bucket", F.explode(F.sequence(F.lit(0), m - 1)))
+        .withColumn(
+            "sub_bucket", F.explode(F.sequence(F.lit(0), _sub_count(cap) - 1))
+        )
         .drop("_bn")
     )
 
@@ -449,58 +564,8 @@ def minhash_lsh_candidates(
         .filter("id_a < id_b")
         .select("id_a", "id_b")
     )
-    # Chain edges across a hot bucket's subs: sub-splitting compares
-    # pairs only WITHIN a sub, and although the r12 salt makes each
-    # band's split independent, WITHIN any one band a capped dup
-    # family is still partitioned into ceil(n/cap) disconnected subs —
-    # chains repair connectivity per band, so without them the family
-    # (the boilerplate corpus _cap_buckets exists for) only reconnects
-    # if the ~1/m cross-sub sampling of SOME band happens to link
-    # every fragment — downstream clustering would otherwise keep
-    # multiple representatives of one family instead of one. Each sub contributes TWO representatives (its min- and
-    # max-id members) and consecutive subs are linked through all
-    # four rep-pair edges (+4(m-1) edges per hot bucket); chain edges
-    # ride the same downstream jaccard verify as every candidate, so
-    # a bucket whose members merely share a band signature (not true
-    # near-dups) gains nothing. HEURISTIC, not a guarantee: in a
-    # MIXED hot bucket (a genuine dup family sharing its band
-    # signature with unrelated collision docs) a chain edge anchored
-    # on a collision rep fails the verify, so the family reconnects
-    # only if, for every consecutive sub pair, at least one of the
-    # four rep edges joins two family members. Two reps per sub
-    # square the per-link failure odds vs one (a collision doc must
-    # hold BOTH extremes of a sub's id range), which is the cheap
-    # end of the tradeoff — the exact alternative (explode one side
-    # across subs, as hamming_near_pairs does under
-    # exact_hot_buckets=True) restores the O(n^2) hot-bucket cost the
-    # cap exists to bound, unjustifiable for a connectivity repair.
-    # On a healthy corpus the hot dim is empty and every chain stage
-    # is a no-op over zero rows.
-    reps = (
-        banded.join(F.broadcast(hot.select("band", "bucket")), ["band", "bucket"])
-        .groupBy("band", "bucket", "sub_bucket")
-        .agg(F.min("_id").alias("_lo"), F.max("_id").alias("_hi"))
-    )
-    # window-SQL form (r14): the lag/struct/explode Column assembly
-    # cost ~50 py4j round trips per build; three parsed projections
-    # build the same operators
-    lag_over = "OVER (PARTITION BY band, bucket ORDER BY sub_bucket ASC)"
-    chain = (
-        reps.selectExpr(
-            "_lo",
-            "_hi",
-            f"lag(_lo) {lag_over} AS _plo",
-            f"lag(_hi) {lag_over} AS _phi",
-        )
-        .filter("_plo IS NOT NULL")
-        .selectExpr(
-            "inline(array("
-            "struct(_plo AS x, _lo AS y), struct(_plo AS x, _hi AS y), "
-            "struct(_phi AS x, _lo AS y), struct(_phi AS x, _hi AS y)))"
-        )
-        .selectExpr("least(x, y) AS id_a", "greatest(x, y) AS id_b")
-        .filter("id_a != id_b")
-    )
+    # chain edges ride the caller's jaccard verify like any candidate
+    chain = _chain_edges(banded, hot, ["band", "bucket"])
     return pairs.unionByName(chain).distinct()
 
 
@@ -776,11 +841,6 @@ def _simhash_from_hashes(hashed: DataFrame) -> DataFrame:
     return counts.selectExpr("_id", "(%s) AS _fp" % " | ".join(fp_terms))
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit fingerprints."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def _block_slices(n_blocks: int) -> list[tuple[int, int]]:
     """(offset, width) per block splitting 64 bits into ``n_blocks``
     contiguous slices; the first ``64 % n_blocks`` get one extra bit."""
@@ -802,8 +862,6 @@ def simhash_near_dups(
     bucket_cap: int = 1024,
     shingle_k: int | None = None,
     exact_hot_buckets: bool | None = None,
-    exact_pair_budget: int = 1_000_000_000,
-    bounded_probe_rounds: int = 4,
 ) -> DataFrame:
     """SimHash near-dup pairs with guaranteed recall via multi-index
     Hamming search (the HmSearch/multi-index-hashing family): split
@@ -852,8 +910,6 @@ def simhash_near_dups(
         max_hamming=max_hamming,
         bucket_cap=bucket_cap,
         exact_hot_buckets=exact_hot_buckets,
-        exact_pair_budget=exact_pair_budget,
-        bounded_probe_rounds=bounded_probe_rounds,
     )
 
 
@@ -862,8 +918,6 @@ def hamming_near_pairs(
     max_hamming: int = 8,
     bucket_cap: int = 1024,
     exact_hot_buckets: bool | None = None,
-    exact_pair_budget: int = 1_000_000_000,
-    bounded_probe_rounds: int = 4,
 ) -> DataFrame:
     """All pairs of a ``[_id, _fp]`` fingerprint frame within the
     hamming budget — the candidate-join core of ``simhash_near_dups``
@@ -895,47 +949,38 @@ def hamming_near_pairs(
 
     ``exact_hot_buckets`` (r11: the guard is now automatic):
 
-    * ``None`` (default) — AUTO: after the hot-bucket dim is built
-      (one broadcast-sized agg the capped plan needs anyway), the
-      exact scheme's hot candidate volume is estimated as
-      ``(w+1) * sum(hot _bn^2)`` — index occupancy times the probed
-      neighborhood of each hot bucket. At or under
-      ``exact_pair_budget`` pair evaluations the exact (recall-1)
-      plan runs; past it the operator degrades to the BOUNDED
-      O(n*cap) sub-sampled plan and emits a ``UserWarning`` naming
-      the estimate and the opt-in. On any corpus inside the
-      applicability window the hot dim is empty, the estimate is 0,
-      and the auto plan is byte-identical to the exact one — the
-      guard costs one tiny agg job and changes nothing.
+    * ``None`` (default) — AUTO: one guard job collects the
+      hot-bucket dim (``_collect_hot_dim``) and estimates the exact
+      scheme's hot candidate volume as ``(w+1) * sum(hot _bn^2)`` —
+      index occupancy times the probed neighborhood of each hot
+      bucket. At or under ``_EXACT_PAIR_BUDGET`` (1e9) pair
+      evaluations the exact (recall-1) plan runs; past it the
+      operator degrades to the BOUNDED O(n*cap) sub-sampled plan and
+      emits a ``UserWarning`` naming the estimate and the opt-in. On
+      any corpus inside the applicability window the hot dim is
+      empty, the estimate is 0, and the auto plan emits the exact
+      one's pairs — the guard costs one tiny agg job and changes
+      nothing.
     * ``True`` — exact recall regardless of cost (the caller opts
       INTO the quadratic region; no guard job runs).
     * ``False`` — always the bounded plan, never quadratic (r12
-      form). Per hot bucket of m = ceil(n/cap) subs: the index side
-      hash-assigns each row to ONE sub (salted by the bucket key, so
-      the assignment is independent across bands), the probe side
-      lands in up to ``bounded_probe_rounds`` round-salted subs, and
+      form; no guard job runs). Per hot bucket of m = ceil(n/cap)
+      subs: the index side hash-assigns each row to ONE sub (salted
+      by the bucket key, so the assignment is independent across
+      bands), the probe side lands in up to
+      ``_BOUNDED_PROBE_ROUNDS`` (4) round-salted subs, and
       consecutive subs are linked by hamming-VERIFIED chain edges
-      between their min/max-id members. Pair recall: a true pair
-      matching in k bands survives with ~``1-(1-rounds/m)^k`` (each
-      band an independent trial); family CONNECTIVITY (keep-one-per-
-      family clustering) is additionally repaired by the chain edges,
-      which — unlike the MinHash chain heuristic — are exact-distance
-      checked, so they add only true pairs. Cost O(n * cap * rounds).
+      (``_chain_edges``). Pair recall: a true pair matching in k
+      bands survives with ~``1-(1-rounds/m)^k`` (each band an
+      independent trial); family CONNECTIVITY (keep-one-per-family
+      clustering) is additionally repaired by the chain edges, which
+      are exact-distance checked, so they add only true pairs. Cost
+      O(n * cap * rounds).
 
-    ``bounded_probe_rounds``: probe-side sub assignments per row in
-    the bounded plan (ignored by the exact plan, which explodes the
-    probe into every sub). 1 reproduces the r11 single-assignment
-    behavior; the default 4 bounds the probe fanout at 4x (vs m-fold
-    for the exact plan) while lifting per-band retention from ~1/m
-    to ~4/m (measured recall at the 64x octave: SCALING.md,
-    d9_auto_guard row).
-
-    ``exact_pair_budget``: auto-mode ceiling in pair evaluations.
-    The default 1e9 is ~a few seconds of vectorized SWAR popcounts
-    on a 32-core executor wave — past that the quadratic term
-    dominates wall and a bounded plan (or the MinHash-LSH family,
-    whose bucket-key entropy is arbitrary — d8 measured 16359/16384
-    at the same 64x probe) is the right tool."""
+    Past the budget the quadratic term dominates wall and the bounded
+    plan (or the MinHash-LSH family, whose bucket-key entropy is
+    arbitrary — d8 measured 16359/16384 at the same 64x probe) is the
+    right tool."""
     slices = _block_slices(max_hamming // 2 + 1)
     # SQL-string expression build (one JVM parse, no per-literal
     # py4j tax). Index side: s exact block values; probe side:
@@ -956,54 +1001,42 @@ def hamming_near_pairs(
     # instead of explode + unpack per side (r14)
     index = fp.selectExpr("_id", "_fp", f"inline({idx_sql})")
     probe = fp.selectExpr("_id", "_fp", f"inline({probe_sql})")
-    hot = _hot_buckets(index, ["band", "slice"], bucket_cap)
+    cols = ["band", "slice"]
     if exact_hot_buckets is None:
-        # AUTO guard: COLLECT the hot dim (bounded: a bucket is
-        # hot only past cap members, so the dim holds at most
-        # s * n/cap rows — a few thousand even at the 64x octave,
-        # empty inside the applicability window) and estimate the
-        # exact scheme's hot candidate volume as
-        # (w+1) * sum(_bn^2) — each hot bucket's index occupancy
-        # times the (w+1)-bucket probed neighborhood (occupancies
-        # are ~uniform in the all-hot low-entropy regime that
-        # creates this problem). The collected rows are then
-        # replayed as a LOCAL relation for the sub-bucket joins,
-        # so the guard's one job REPLACES the plan-side hot
-        # recomputation instead of adding to it (the r11 probe
-        # measured +2.7 s at 16x for the agg-only form). Inside
-        # the window the dim is empty, the estimate is 0, and
-        # auto == exact in results; past the window this is what
-        # stops a 100 TB caller from silently entering the
-        # quadratic region (r10's 155+ s at the 64x octave).
-        hot_rows = hot.collect()
+        # AUTO guard (r11): estimate the exact scheme's hot candidate
+        # volume as (w+1) * sum(hot _bn^2) — occupancies are ~uniform
+        # in the all-hot low-entropy regime that creates this
+        # problem. Inside the window the dim is empty and the
+        # estimate 0; past it this is what stops a 100 TB caller from
+        # silently entering the quadratic region (r10's 155+ s at the
+        # 64x octave).
+        hot, hot_rows, _ = _collect_hot_dim(index, cols, bucket_cap)
         w_max = max(w for _, w in slices)
         est_pairs = sum(r["_bn"] * r["_bn"] for r in hot_rows) * (w_max + 1)
-        hot = fp.sparkSession.createDataFrame(hot_rows, hot.schema)
-        use_exact = est_pairs <= exact_pair_budget
+        use_exact = est_pairs <= _EXACT_PAIR_BUDGET
         if not use_exact:
             import warnings
 
             warnings.warn(
                 "hamming_near_pairs: estimated exact hot-bucket "
                 f"candidate volume ~{est_pairs:.2e} pair evals "
-                f"exceeds exact_pair_budget={exact_pair_budget:.0e}"
+                f"exceeds _EXACT_PAIR_BUDGET={_EXACT_PAIR_BUDGET:.0e}"
                 " — the corpus is past the multi-index "
                 "applicability window (n >~ bucket_cap * "
                 "2^(64/s)); degrading to the bounded "
                 "O(n*cap*rounds) sub-sampled plan (family "
                 "connectivity preserved via hamming-verified "
                 "chain edges across sub-buckets; pair recall "
-                f"~1-(1-{bounded_probe_rounds}/m)^k over k "
+                f"~1-(1-{_BOUNDED_PROBE_ROUNDS}/m)^k over k "
                 "matching bands). Pass exact_hot_buckets=True to "
-                "opt into the quadratic exact plan, raise "
-                "bounded_probe_rounds for more recall at linear "
-                "cost, or switch to the MinHash-LSH family "
-                "(minhash_lsh_candidates) for scale-free bucket "
-                "entropy.",
+                "opt into the quadratic exact plan, or switch to "
+                "the MinHash-LSH family (minhash_lsh_candidates) "
+                "for scale-free bucket entropy.",
                 UserWarning,
                 stacklevel=2,
             )
     else:
+        hot = _hot_buckets(index, cols, bucket_cap)
         use_exact = exact_hot_buckets
     # index side: hash-assigned subs (<= cap rows per task), salted
     # by the bucket key so the assignment is INDEPENDENT per band —
@@ -1012,29 +1045,18 @@ def hamming_near_pairs(
     # into every sub of a hot bucket (recall 1 — hash-assigning
     # both sides would only compare pairs whose id hashes collide
     # mod m, see _explode_sub_buckets); bounded plan assigns each
-    # probe row to up to bounded_probe_rounds round-salted subs
+    # probe row to up to _BOUNDED_PROBE_ROUNDS round-salted subs
     # (recall ~rounds/m per matching band, cost linear in rounds).
     # At the certified SFs no bucket is hot, so all plans are
     # identical there.
-    if bounded_probe_rounds < 1:
-        raise ValueError(
-            f"bounded_probe_rounds={bounded_probe_rounds} must be >= 1"
-        )
-    salt = ("band", "slice")
-    left = _apply_sub_buckets(
-        index, hot, ["band", "slice"], "_id", bucket_cap, salt_cols=salt
-    ).withColumn("_side", F.lit(0))
+    idx = _apply_sub_buckets(index, hot, cols, "_id", bucket_cap, salt_cols=cols)
+    left = idx.withColumn("_side", F.lit(0))
     right = (
-        _explode_sub_buckets(probe, hot, ["band", "slice"], bucket_cap)
+        _explode_sub_buckets(probe, hot, cols, bucket_cap)
         if use_exact
         else _multi_sub_buckets(
-            probe,
-            hot,
-            ["band", "slice"],
-            "_id",
-            bucket_cap,
-            bounded_probe_rounds,
-            salt_cols=salt,
+            probe, hot, cols, "_id", bucket_cap, _BOUNDED_PROBE_ROUNDS,
+            salt_cols=cols,
         )
     ).withColumn("_side", F.lit(1))
     # Per-bucket pair generation runs as a numpy XOR+popcount
@@ -1155,72 +1177,12 @@ def hamming_near_pairs(
         schema=f"id_a {id_type}, id_b {id_type}, hamming int",
     )
     if not use_exact:
-        # Chain edges across a hot bucket's subs (r12, mirroring
-        # minhash_lsh_candidates): sub-splitting alone leaves a
-        # capped dup family's subs as disconnected components —
-        # downstream keep-one-per-family clustering would keep
-        # ~m representatives of one family. Link consecutive subs
-        # through their min/max-id members' rep pairs, but —
-        # unlike the MinHash path, where chain edges are a
-        # heuristic riding a later jaccard verify — check the
-        # EXACT hamming distance here (the fingerprints are in
-        # hand), so only true within-budget pairs are emitted and
-        # the output contract (every row within max_hamming) is
-        # preserved. A mixed hot bucket whose consecutive-sub reps
-        # are all collision docs can still split a family (same
-        # residual caveat as MinHash); the probe rounds' ~rounds/m
-        # cross-sub sampling is the second, independent repair.
-        # On a corpus inside the applicability window the hot dim
-        # is empty and every chain stage is a no-op over zero rows.
-        from pyspark.sql import Window
-
-        reps = (
-            left.join(
-                F.broadcast(hot.select("band", "slice")),
-                ["band", "slice"],
-            )
-            .groupBy("band", "slice", "sub_bucket")
-            .agg(
-                F.min(F.struct("_id", "_fp")).alias("_lo"),
-                F.max(F.struct("_id", "_fp")).alias("_hi"),
-            )
+        # hamming-verified, so the output contract (every row within
+        # max_hamming) holds for the chain edges too
+        chain = _chain_edges(idx, hot, cols, "_fp").selectExpr(
+            "id_a", "id_b", "CAST(bit_count(_pa ^ _pb) AS INT) AS hamming"
         )
-        w = Window.partitionBy("band", "slice").orderBy("sub_bucket")
-        chain = (
-            reps.withColumn("_plo", F.lag("_lo").over(w))
-            .withColumn("_phi", F.lag("_hi").over(w))
-            .filter(F.col("_plo").isNotNull())
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("_plo").alias("x"), F.col("_lo").alias("y")
-                        ),
-                        F.struct(
-                            F.col("_plo").alias("x"), F.col("_hi").alias("y")
-                        ),
-                        F.struct(
-                            F.col("_phi").alias("x"), F.col("_lo").alias("y")
-                        ),
-                        F.struct(
-                            F.col("_phi").alias("x"), F.col("_hi").alias("y")
-                        ),
-                    )
-                ).alias("_e")
-            )
-            .select(
-                F.least("_e.x._id", "_e.y._id").alias("id_a"),
-                F.greatest("_e.x._id", "_e.y._id").alias("id_b"),
-                hamming64(F.col("_e.x._fp"), F.col("_e.y._fp"))
-                .cast("int")
-                .alias("hamming"),
-            )
-            .filter(
-                (F.col("id_a") != F.col("id_b"))
-                & (F.col("hamming") <= thr)
-            )
-        )
-        pairs = pairs.unionByName(chain)
+        pairs = pairs.unionByName(chain.filter(f"hamming <= {thr}"))
     # the kernel already filtered hamming <= budget and
     # id_a < id_b; distinct collapses the per-band duplicate
     # emissions, shuffling only survivors

@@ -211,8 +211,6 @@ def media_near_dups(
     decode_fn: Callable[[bytes], np.ndarray] = fake_decode_image,
     bucket_cap: int = 1024,
     exact_hot_buckets: bool | None = False,
-    exact_pair_budget: int = 1_000_000_000,
-    bounded_probe_rounds: int = 4,
 ) -> DataFrame:
     """Near-duplicate media detection: perceptual dHash, then the
     multi-index Hamming candidate join (pigeonhole recall 1 over the
@@ -228,15 +226,16 @@ def media_near_dups(
     (keep one blob per near-dup family), and the bounded plan (r12)
     preserves that through hamming-VERIFIED chain edges linking each
     hot bucket's consecutive sub-buckets, plus ~rounds/m cross-sub
-    pair sampling per band (``hamming_near_pairs``,
-    ``bounded_probe_rounds``) — perceptual hashes are exactly the
+    pair sampling per band (``hamming_near_pairs``; rounds =
+    ``dedup._BOUNDED_PROBE_ROUNDS``, 4) — perceptual hashes are exactly the
     case where hot buckets arise from genuine mass duplication
     (re-encoded copies of one asset) or, with ``taps < 65``, from
     zero high bits making the high band slices universal, so the
     never-quadratic plan is the right default. Pass ``True`` only
     when every individual pair matters and the corpus is inside the
     multi-index applicability window (see ``hamming_near_pairs``), or
-    ``None`` for the budget-guarded auto mode. With the bounded
+    ``None`` for the auto mode guarded by
+    ``dedup._EXACT_PAIR_BUDGET`` (1e9 pair evals). With the bounded
     default, building the plan fires no Spark job."""
     from bbdc20_submission_spark.caching import managed_persist
     from bbdc20_submission_spark.operators.dedup import hamming_near_pairs
@@ -247,6 +246,4 @@ def media_near_dups(
         max_hamming=max_hamming,
         bucket_cap=bucket_cap,
         exact_hot_buckets=exact_hot_buckets,
-        exact_pair_budget=exact_pair_budget,
-        bounded_probe_rounds=bounded_probe_rounds,
     )

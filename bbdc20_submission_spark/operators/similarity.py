@@ -20,14 +20,13 @@ from bbdc20_submission_spark.caching import managed_persist
 
 
 def dot_sql(a_sql: str, b_sql: str) -> str:
-    """SQL text of :func:`dot` over two array-SQL fragments.
+    """SQL text of the double-precision dot product (elementwise
+    product + left-fold sum) of two array-SQL fragments.
 
     The r13 build-cost form: every Python-lambda HOF costs ~20-40 ms
     of py4j round trips to assemble (measured — `_create_lambda` is
     2-4 JVM calls per lambda plus per-literal traffic), while a SQL
-    string is ONE parse call. `sameSemantics` against the Column form
-    is True (verified), so plans, codegen, and certified values are
-    identical — only driver build time changes."""
+    string is ONE parse call."""
     return (
         f"aggregate(zip_with({a_sql}, {b_sql}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -36,7 +35,7 @@ def dot_sql(a_sql: str, b_sql: str) -> str:
 
 
 def l2_norm_sql(a_sql: str) -> str:
-    """SQL text of :func:`l2_norm` over an array-SQL fragment (see
+    """SQL text of the L2 norm of an array-SQL fragment (see
     :func:`dot_sql` for why the string form exists)."""
     return (
         f"sqrt(aggregate(transform({a_sql}, "
@@ -45,27 +44,16 @@ def l2_norm_sql(a_sql: str) -> str:
     )
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Elementwise product + sum, in double precision."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def cosine_sql(a_sql: str, b_sql: str, na_sql: str, nb_sql: str) -> str:
+    """SQL text of the cosine of two array-SQL fragments given their
+    norm fragments (callers fold each norm once per ROW, not per pair).
 
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    Zero-safe: ``try_divide`` makes the cosine of a zero-norm vector
+    NULL where a plain ``/`` raises ``DIVIDE_BY_ZERO`` under Spark 4's
+    ANSI mode. An undefined cosine is never a near-dup (``>= t`` is not
+    true) and ranks after every defined score in a descending top-k
+    (NULLS LAST); non-zero norms give the same double as ``/``."""
+    return f"try_divide({dot_sql(a_sql, b_sql)}, {na_sql} * {nb_sql})"
 
 
 def cosine_topk_bruteforce(
@@ -87,8 +75,8 @@ def cosine_topk_bruteforce(
     aggregates per pair where only the dot product actually varies.
     Bit-identical (same fold over the same values in the same order,
     then the same _qn * _cn product) — the oracle-certified families
-    pin that. Expressions ride SQL strings (r13 build sweep,
-    `sameSemantics`-identical to the Column forms — see dot_sql)."""
+    pin that. Expressions ride SQL strings (r13 build sweep — see
+    dot_sql). A zero-norm vector's cosine is NULL (see cosine_sql)."""
     q = queries.selectExpr(
         f"`{id_col}` AS query_id",
         f"`{vec_col}` AS _qv",
@@ -105,7 +93,7 @@ def cosine_topk_bruteforce(
         .selectExpr(
             "query_id",
             "match_id",
-            f"{dot_sql('_qv', '_cv')} / (_qn * _cn) AS _sim",
+            f"{cosine_sql('_qv', '_cv', '_qn', '_cn')} AS _sim",
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -238,7 +226,7 @@ def cosine_topk_lsh(
         .selectExpr(
             "query_id",
             "match_id",
-            f"{dot_sql('_qv', '_cv')} / (_qn * _cn) AS _sim",
+            f"{cosine_sql('_qv', '_cv', '_qn', '_cn')} AS _sim",
         )
     )
     if multiprobe:
@@ -322,39 +310,44 @@ def quantize_embeddings(
     )
 
 
-def dequantize_cosine(qa: Column, sa: Column, qb: Column, sb: Column) -> Column:
-    """Cosine over two int8-quantized vectors. The scales cancel in
-    cosine (it is scale-invariant), so this is integer dot products in
-    double accumulation — sa/sb are accepted for API symmetry and for
-    callers that need the un-normalized dot (sa * sb * dot)."""
-    return cosine(
-        F.transform(qa, lambda x: x.cast("double")),
-        F.transform(qb, lambda x: x.cast("double")),
-    )
+def dequantize_cosine(qa: str, qb: str) -> Column:
+    """Cosine over two int8-quantized vector columns (NAMES). The
+    per-vector scales cancel in cosine (it is scale-invariant), so this
+    is integer dot products in double accumulation; NULL when either
+    vector is all zeros."""
+    a, b = f"`{qa}`", f"`{qb}`"
+    return F.expr(cosine_sql(a, b, l2_norm_sql(a), l2_norm_sql(b)))
+
+
+# embedding_near_dups' sizing and guard constants. Expected bucket
+# occupancy the "auto" signature sizes planes for:
+_TARGET_OCCUPANCY = 8
+# ceiling on the bands auto-sizing may derive:
+_MAX_BANDS = 32
+# exact candidate volume past which the plan-time guard warns: each
+# candidate eval is a dim-wide interpreted fold (~dim multiply-adds),
+# so 5e7 is ~minutes of single-node work.
+_CANDIDATE_PAIR_BUDGET = 50_000_000
 
 
 def auto_lsh_signature(
-    n: int,
-    threshold: float,
-    base_planes: int,
-    base_bands: int,
-    target_occupancy: int = 8,
-    max_bands: int = 32,
+    n: int, threshold: float, base_planes: int, base_bands: int
 ) -> tuple[int, int]:
     """Size a sign-LSH signature for a corpus of ``n`` vectors:
-    planes grow to ``log2(n / target_occupancy)`` (expected bucket
+    planes grow to ``log2(n / _TARGET_OCCUPANCY)`` (expected bucket
     occupancy is ``n / 2^planes`` on i.i.d. data, so the self-join
     candidate volume ~``bands * n^2 / 2^planes`` stays ~linear in n
     at fixed occupancy), and bands grow to hold the BASE config's
     per-pair recall at the threshold angle: with per-plane agreement
     p = 1 - acos(threshold)/pi, recall is 1-(1-p^planes)^bands, so
     bands = ceil(log(1-R0)/log(1-p^planes)) restores the base R0.
-    Returns (planes, bands); never shrinks below the base config.
+    Returns (planes, bands); never shrinks below the base config and
+    never exceeds ``_MAX_BANDS`` bands.
     This is the r12 `s3_planes_scaled` sizing (14 planes x 8 bands at
     128k vectors, planted recall 8/8, 4.3x wall at 64x where the
     fixed 8-plane config read 52.2x — SCALING.md) expressed as a rule."""
     planes = max(
-        base_planes, math.ceil(math.log2(max(n, 1) / max(target_occupancy, 1)))
+        base_planes, math.ceil(math.log2(max(n, 1) / _TARGET_OCCUPANCY))
     )
     if planes == base_planes:
         return base_planes, base_bands
@@ -364,10 +357,10 @@ def auto_lsh_signature(
     if r0 >= 1.0 or per_band <= 0.0:
         bands = base_bands
     elif per_band >= 1.0:
-        bands = max_bands
+        bands = _MAX_BANDS
     else:
         bands = math.ceil(math.log(1.0 - r0) / math.log(per_band))
-    return planes, min(max(bands, base_bands), max_bands)
+    return planes, min(max(bands, base_bands), _MAX_BANDS)
 
 
 def embedding_near_dups(
@@ -378,10 +371,7 @@ def embedding_near_dups(
     n_planes: int | str = 12,
     dim: int = 64,
     n_bands: int = 1,
-    bucket_cap: int | None = 1024,
-    bounded_probe_rounds: int = 4,
-    candidate_pair_budget: int = 50_000_000,
-    target_occupancy: int = 8,
+    bucket_cap: int = 1024,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded LSH bucket
     self-join + exact verify — the embedding-space analog of MinHash
@@ -396,7 +386,8 @@ def embedding_near_dups(
     precision at 1 regardless. The join stays a (band, signature) hash
     equi-join — no cross product at any scale; band duplicates are
     collapsed by the final distinct on the narrow (id, id, sim)
-    projection, so vectors are never shuffled twice.
+    projection, so vectors are never shuffled twice. A pair with a
+    zero-norm vector has no cosine (NULL) and is never a near-dup.
 
     ``bucket_cap`` (r12): the signature space is only ``2^n_planes``
     buckets per band, so bucket occupancy — and with it the self-join
@@ -405,48 +396,45 @@ def embedding_near_dups(
     concentrates it further. Buckets past the cap are sub-split with
     the same bounded machinery as the text/hamming dedup paths: one
     bucket-salted sub per row on the index side, up to
-    ``bounded_probe_rounds`` round-salted subs on the probe side
-    (pair retention ~``1-(1-rounds/m)^k`` over k shared bands), plus
-    COSINE-VERIFIED chain edges linking consecutive subs' min/max-id
-    members so a capped dup family stays one connected component. At
-    the certified SFs every bucket is far below the cap (sf0.1: ~8
-    members vs 1024), so the plan and output are unchanged there.
-    ``bucket_cap=None`` (r13) disables the capping machinery entirely
-    — the exact banded self-join regardless of cost, for callers where
-    every individual pair matters.
+    ``dedup._BOUNDED_PROBE_ROUNDS`` (4) round-salted subs on the probe
+    side (pair retention ~``1-(1-rounds/m)^k`` over k shared bands),
+    plus COSINE-VERIFIED chain edges (``dedup._chain_edges``) so a
+    capped dup family stays one connected component. With no bucket
+    past the cap — every certified SF (sf0.1: ~8 members vs 1024), or
+    any cap above the corpus size — the plan is the plain banded
+    self-join, every pair exact.
 
-    Plan-time guard (r13, the hamming auto-guard pattern): with a cap
-    set, the per-bucket occupancy histogram is aggregated ONCE over
-    the persisted signature frame (both join sides re-read that frame
-    anyway, and the collected hot dim REPLACES the three plan-side
-    recomputations of the hot agg). From it the operator derives the
-    EXACT candidate volume ``sum(bn^2)`` and warns when it exceeds
-    ``candidate_pair_budget`` — each candidate eval is a dim-wide
-    interpreted fold (~dim multiply-adds), so the default 5e7 budget
-    is ~minutes of single-node work; this is the sub-cap occupancy
-    hump the r12 64x ladder measured at 52.2x for an undersized
-    8-plane signature. It also warns whenever ANY bucket exceeds the
-    cap, because the bounded sub-split changes pair recall there
-    (connectivity still repaired by the verified chain edges).
+    Plan-time guard (r13, the hamming auto-guard pattern): one
+    aggregate job over the persisted signature frame
+    (``dedup._collect_hot_dim``) yields the EXACT candidate volume
+    ``sum(bn^2)`` and the hot dim, replayed as a local relation. The
+    operator warns when the volume exceeds ``_CANDIDATE_PAIR_BUDGET``
+    (5e7 dim-wide folds) — the sub-cap occupancy hump the r12 64x
+    ladder measured at 52.2x for an undersized 8-plane signature — and
+    whenever ANY bucket exceeds the cap, because the bounded sub-split
+    changes pair recall there.
 
     ``n_planes="auto"`` (r13): size the signature at plan time from
     ``n = df.count()`` via :func:`auto_lsh_signature` — planes to
-    ``log2(n / target_occupancy)`` and bands re-derived to hold the
+    ``log2(n / _TARGET_OCCUPANCY)`` and bands re-derived to hold the
     base (``12 x n_bands``) config's recall at the threshold angle.
     The structural fix for occupancy growth on CLEAN corpora (the cap
     is the safety bound for the skewed tail, not a substitute for
     sizing the signature); auto-sizing changes candidate RECALL
     bounds, never precision (the exact cosine verify filters every
     candidate), and leaves the certified small-SF configs unchanged
-    (n below 2^12 * target keeps the base signature)."""
+    (n below 2^12 * 8 keeps the base signature)."""
     from bbdc20_submission_spark.operators.dedup import (
+        _BOUNDED_PROBE_ROUNDS,
         _apply_sub_buckets,
+        _chain_edges,
+        _collect_hot_dim,
         _multi_sub_buckets,
     )
 
     if n_planes == "auto":
         n_planes, n_bands = auto_lsh_signature(
-            df.count(), threshold, 12, n_bands, target_occupancy
+            df.count(), threshold, 12, n_bands
         )
     sigs = F.array(
         *[
@@ -473,70 +461,36 @@ def embedding_near_dups(
         )
     )
     cols = ["_band", "_sig"]
-    hot_rows: list = []
-    if bucket_cap is not None:
-        # ONE occupancy agg over the persisted frame both join sides
-        # re-read anyway: exact candidate volume sum(bn^2) for the
-        # budget warning, plus the hot dim collected ONCE and replayed
-        # as a local relation (replacing three plan-side recomputations
-        # of the hot agg). Bounded: the hot dim holds at most
-        # n_bands * n / cap rows.
-        occ = tagged.groupBy(*cols).agg(F.count(F.lit(1)).alias("_bn"))
-        # ONE guard job (r13): the candidate-volume scalar and the hot
-        # dim come out of a single aggregate — collect_list skips
-        # nulls, so the filtered struct list IS the hot dim (bounded:
-        # at most n_bands * n / cap entries). The previous two-action
-        # form paid a second full pass over the occupancy agg.
-        guard = occ.agg(
-            F.sum(F.col("_bn") * F.col("_bn")).alias("_v"),
-            F.collect_list(
-                F.when(
-                    F.col("_bn") > bucket_cap, F.struct(*cols, "_bn")
-                )
-            ).alias("_hot"),
-        ).first()
-        est_pairs = int(guard["_v"] or 0)
-        hot_rows = list(guard["_hot"])
-        if est_pairs > candidate_pair_budget:
-            import warnings
+    import warnings
 
-            warnings.warn(
-                "embedding_near_dups: exact candidate volume "
-                f"~{est_pairs:.2e} pair evals (each a {dim}-wide "
-                "interpreted fold) exceeds candidate_pair_budget="
-                f"{candidate_pair_budget:.0e} — the {n_planes}-plane "
-                "signature is undersized for this corpus (expected "
-                "occupancy ~n/2^planes per band). Pass n_planes='auto' "
-                "to size planes to log2(n/target_occupancy) with bands "
-                "re-derived to hold recall, or raise n_planes manually; "
-                "bucket_cap bounds the worst-case skewed tail but does "
-                "not remove the sub-cap occupancy term.",
-                UserWarning,
-                stacklevel=2,
-            )
-        if hot_rows:
-            import warnings
-
-            warnings.warn(
-                f"embedding_near_dups: {len(hot_rows)} bucket(s) exceed "
-                f"bucket_cap={bucket_cap} — the bounded sub-split plan "
-                "engages there (pair recall ~1-(1-rounds/m)^bands within "
-                "those buckets; family connectivity preserved via "
-                "cosine-verified chain edges). Pass bucket_cap=None for "
-                "the exact self-join regardless of cost.",
-                UserWarning,
-                stacklevel=2,
-            )
-    if not hot_rows:
-        # no hot buckets (or capping disabled): the capped plan would
-        # assign sub_bucket=0 everywhere and the chain stages are
-        # no-ops over zero rows — build the plain banded self-join
-        # instead (identical output, two fewer broadcast joins and no
-        # window stage at every certified SF)
-        idx = prb = tagged
-        join_keys = cols
-    else:
-        hot = df.sparkSession.createDataFrame(hot_rows, occ.schema)
+    hot, hot_rows, est_pairs = _collect_hot_dim(tagged, cols, bucket_cap)
+    if est_pairs > _CANDIDATE_PAIR_BUDGET:
+        warnings.warn(
+            "embedding_near_dups: exact candidate volume "
+            f"~{est_pairs:.2e} pair evals (each a {dim}-wide "
+            "interpreted fold) exceeds _CANDIDATE_PAIR_BUDGET="
+            f"{_CANDIDATE_PAIR_BUDGET:.0e} — the {n_planes}-plane "
+            "signature is undersized for this corpus (expected "
+            "occupancy ~n/2^planes per band). Pass n_planes='auto' "
+            "to size planes to log2(n/_TARGET_OCCUPANCY) with bands "
+            "re-derived to hold recall, or raise n_planes manually; "
+            "bucket_cap bounds the worst-case skewed tail but does "
+            "not remove the sub-cap occupancy term.",
+            UserWarning,
+            stacklevel=2,
+        )
+    if hot_rows:
+        warnings.warn(
+            f"embedding_near_dups: {len(hot_rows)} bucket(s) exceed "
+            f"bucket_cap={bucket_cap} — the bounded sub-split plan "
+            "engages there (pair recall ~1-(1-rounds/m)^bands within "
+            "those buckets; family connectivity preserved via "
+            "cosine-verified chain edges). Pass a bucket_cap above "
+            "the largest bucket for the exact self-join regardless "
+            "of cost.",
+            UserWarning,
+            stacklevel=2,
+        )
         idx = _apply_sub_buckets(
             tagged, hot, cols, "_id", bucket_cap, salt_cols=("_band", "_sig")
         )
@@ -546,10 +500,18 @@ def embedding_near_dups(
             cols,
             "_id",
             bucket_cap,
-            bounded_probe_rounds,
+            _BOUNDED_PROBE_ROUNDS,
             salt_cols=("_band", "_sig"),
         )
         join_keys = [*cols, "sub_bucket"]
+    else:
+        # no hot buckets: the capped plan would assign sub_bucket=0
+        # everywhere and the chain stages are no-ops over zero rows —
+        # build the plain banded self-join instead (identical output,
+        # two fewer broadcast joins and no window stage at every
+        # certified SF)
+        idx = prb = tagged
+        join_keys = cols
     a = idx.select(
         F.col("_id").alias("id_a"),
         F.col("_v").alias("_va"),
@@ -567,7 +529,7 @@ def embedding_near_dups(
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
             "_sim",
-            F.expr(f"{dot_sql('_va', '_vb')} / (_na * _nb)"),
+            F.expr(cosine_sql("_va", "_vb", "_na", "_nb")),
         )
         # filter on the UNROUNDED cosine (matches a `WHERE cos >= t`
         # oracle at the threshold boundary), round only for output
@@ -576,39 +538,17 @@ def embedding_near_dups(
     )
     if not hot_rows:
         return pairs.distinct()
-    # chain edges across a hot bucket's subs (hot known non-empty at
-    # plan time; see hamming_near_pairs for the scheme) — verified at
-    # the SAME cosine threshold, so only true pairs are added and the
-    # output contract holds
-    reps = (
-        idx.join(F.broadcast(hot.select(*cols)), cols)
-        .groupBy(*cols, "sub_bucket")
-        .agg(
-            F.min(F.struct("_id", "_v")).alias("_lo"),
-            F.max(F.struct("_id", "_v")).alias("_hi"),
-        )
-    )
-    w = Window.partitionBy(*cols).orderBy("sub_bucket")
+    # chain edges verified at the SAME cosine threshold, so only true
+    # pairs are added and the output contract holds
     chain = (
-        reps.withColumn("_plo", F.lag("_lo").over(w))
-        .withColumn("_phi", F.lag("_hi").over(w))
-        .filter(F.col("_plo").isNotNull())
-        .select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("_plo").alias("x"), F.col("_lo").alias("y")),
-                    F.struct(F.col("_plo").alias("x"), F.col("_hi").alias("y")),
-                    F.struct(F.col("_phi").alias("x"), F.col("_lo").alias("y")),
-                    F.struct(F.col("_phi").alias("x"), F.col("_hi").alias("y")),
-                )
-            ).alias("_e")
+        _chain_edges(idx, hot, cols, "_v")
+        .withColumn(
+            "_sim",
+            F.expr(
+                cosine_sql("_pa", "_pb", l2_norm_sql("_pa"), l2_norm_sql("_pb"))
+            ),
         )
-        .select(
-            F.least("_e.x._id", "_e.y._id").alias("id_a"),
-            F.greatest("_e.x._id", "_e.y._id").alias("id_b"),
-            cosine(F.col("_e.x._v"), F.col("_e.y._v")).alias("_sim"),
-        )
-        .filter((F.col("id_a") != F.col("id_b")) & (F.col("_sim") >= threshold))
+        .filter(F.col("_sim") >= threshold)
         .select("id_a", "id_b", F.round("_sim", 6).alias("cosine_sim"))
     )
     return pairs.unionByName(chain).distinct()

@@ -1363,7 +1363,7 @@ def s_topk_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # produces, bit-identical to the oracle's CAST(qe AS DOUBLE[])
     # cosine), and each pair pays exactly one zip_with + one fold
     # (dot casts inside its lambda). 64x probe: 83 -> 26 s.
-    from bbdc20_submission_spark.operators.similarity import dot_sql
+    from bbdc20_submission_spark.operators.similarity import cosine_sql
 
     from bbdc20_submission_spark.caching import managed_persist
 
@@ -1404,7 +1404,7 @@ def s_topk_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr(
             "query_id",
             "match_id",
-            f"{dot_sql('_qa', '_qb')} / (_na * _nb) AS _sim",
+            f"{cosine_sql('_qa', '_qb', '_na', '_nb')} AS _sim",
         )
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -539,7 +539,6 @@ def main() -> None:
         ``expected`` is the beyond-budget tail, not a machinery
         loss."""
         from bbdc20_submission_spark.operators.dedup import (
-            hamming64,
             hashed_shingle_sets,
             simhash_sets_df,
         )
@@ -560,7 +559,7 @@ def main() -> None:
             F.broadcast(truth)
             .join(fp.selectExpr("_id AS id_a", "_fp AS fp_a"), "id_a")
             .join(fp.selectExpr("_id AS id_b", "_fp AS fp_b"), "id_b")
-            .select(hamming64(F.col("fp_a"), F.col("fp_b")).alias("h"))
+            .selectExpr("bit_count(fp_a ^ fp_b) AS h")
             .agg(
                 F.count("*").alias("n"),
                 F.max("h").alias("true_max"),

@@ -938,7 +938,7 @@ def test_hamming_auto_guard_stays_exact_inside_budget(spark):
     assert out == truth
 
 
-def test_hamming_auto_guard_degrades_past_budget(spark):
+def test_hamming_auto_guard_degrades_past_budget(spark, monkeypatch):
     """AUTO mode past the pair budget: the guard must warn and switch
     to the bounded O(n*cap) plan — a strict SUBSET of the true pairs
     (nothing spurious, cross-sub pairs sampled away), while an
@@ -946,25 +946,23 @@ def test_hamming_auto_guard_degrades_past_budget(spark):
     recovers exactness."""
     import pytest as _pytest
 
+    from bbdc20_submission_spark.operators import dedup
     from bbdc20_submission_spark.operators.dedup import hamming_near_pairs
 
+    monkeypatch.setattr(dedup, "_EXACT_PAIR_BUDGET", 100)
     df, truth, budget = _hot_corpus_for_guard(spark)
     with _pytest.warns(UserWarning, match="applicability window"):
         out = {
             (r["id_a"], r["id_b"])
             for r in hamming_near_pairs(
-                df, max_hamming=budget, bucket_cap=8, exact_pair_budget=100
+                df, max_hamming=budget, bucket_cap=8
             ).collect()
         }
     assert out < truth, (len(out), len(truth))
     exact = {
         (r["id_a"], r["id_b"])
         for r in hamming_near_pairs(
-            df,
-            max_hamming=budget,
-            bucket_cap=8,
-            exact_hot_buckets=True,
-            exact_pair_budget=100,
+            df, max_hamming=budget, bucket_cap=8, exact_hot_buckets=True
         ).collect()
     }
     assert exact == truth
@@ -1088,25 +1086,23 @@ def test_hamming_bounded_plan_connects_capped_family(spark):
     )
 
 
-def test_hamming_bounded_probe_rounds_lift_recall(spark):
+def test_hamming_bounded_probe_rounds_lift_recall(spark, monkeypatch):
     """r12: on the hot guard corpus, the bounded plan's pair recall
     must (a) never emit anything outside the brute-force truth, and
-    (b) be lifted by more probe rounds — rounds=4 (default) recovers
-    a superset-or-equal, strictly larger here, pair set than
-    rounds=1."""
+    (b) be lifted by more probe rounds — rounds=4 (the
+    _BOUNDED_PROBE_ROUNDS constant) recovers a superset-or-equal,
+    strictly larger here, pair set than rounds=1."""
+    from bbdc20_submission_spark.operators import dedup
     from bbdc20_submission_spark.operators.dedup import hamming_near_pairs
 
     df, truth, budget = _hot_corpus_for_guard(spark)
 
     def bounded(rounds):
+        monkeypatch.setattr(dedup, "_BOUNDED_PROBE_ROUNDS", rounds)
         return {
             (r["id_a"], r["id_b"])
             for r in hamming_near_pairs(
-                df,
-                max_hamming=budget,
-                bucket_cap=8,
-                exact_hot_buckets=False,
-                bounded_probe_rounds=rounds,
+                df, max_hamming=budget, bucket_cap=8, exact_hot_buckets=False
             ).collect()
         }
 

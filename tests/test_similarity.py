@@ -33,7 +33,10 @@ def _clustered_vectors(n_clusters=8, per_cluster=12, noise=0.05, seed=3):
 
 
 def test_bruteforce_topk_is_same_cluster(spark):
-    rows = _clustered_vectors()
+    # two all-zero vectors: their cosine is undefined (NULL), so they
+    # rank after every defined score instead of raising DIVIDE_BY_ZERO
+    zeros = [(900 + i, [0.0] * DIM, -1) for i in range(2)]
+    rows = _clustered_vectors() + zeros
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     out = cosine_topk_bruteforce(df, df.filter("vec_id < 5"), k=3)
     labels = {r["vec_id"]: r["label"] for r in df.collect()}
@@ -90,9 +93,13 @@ def test_embedding_near_dups_planted(spark):
         base.append((i, [float(x) for x in v], 0))
         # planted near-duplicate: tiny perturbation
         base.append((i + 1000, [float(x + rng.gauss(0, 0.01)) for x in v], 0))
+    # two all-zero vectors share a bucket; their cosine is undefined
+    # (NULL), so they never pair
+    base += [(2000 + i, [0.0] * DIM, 0) for i in range(2)]
     df = spark.createDataFrame(base, "vec_id long, embedding array<float>, label int")
     out = embedding_near_dups(df, threshold=0.98, n_planes=6, dim=DIM)
     pairs = {(r["id_a"], r["id_b"]) for r in out.collect()}
+    assert all(b < 2000 for _, b in pairs), pairs
     planted = {(i, i + 1000) for i in range(20)}
     recall = len(pairs & planted) / len(planted)
     assert recall >= 0.7, f"near-dup recall {recall}"
@@ -139,10 +146,11 @@ def test_embedding_near_dups_capped_family_bounded_and_connected(spark):
 
 
 def test_embedding_near_dups_exact_optout_matches_unsalted(spark):
-    """r13 (advice): ``bucket_cap=None`` restores the exact banded
-    self-join — on the capped-family corpus it must emit the FULL
-    quadratic family pair set (every same-bucket pair survives the
-    cosine verify), strictly a superset of the bounded plan's."""
+    """r13 (advice): a ``bucket_cap`` above the corpus size leaves no
+    bucket hot, so the plan is the exact banded self-join — on the
+    capped-family corpus it must emit the FULL quadratic family pair
+    set (every same-bucket pair survives the cosine verify) without
+    the hot-bucket warning."""
     rng = random.Random(9)
     fam_v = [float(x) for x in [rng.gauss(0, 1) for _ in range(DIM)]]
     n_fam = 80
@@ -154,27 +162,27 @@ def test_embedding_near_dups_exact_optout_matches_unsalted(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
-    exact = embedding_near_dups(
-        df, threshold=0.98, n_planes=6, dim=DIM, n_bands=2, bucket_cap=None
-    ).collect()
-    pairs = {(r["id_a"], r["id_b"]) for r in exact}
-    assert len(pairs) == n_fam * (n_fam - 1) // 2
     import warnings as _w
 
     with _w.catch_warnings():
         _w.simplefilter("error")  # hot-bucket warning must NOT fire
-        bounded = embedding_near_dups(
+        exact = embedding_near_dups(
             df, threshold=0.98, n_planes=6, dim=DIM, n_bands=2,
-            bucket_cap=n_fam + 1,
+            bucket_cap=len(rows) + 1,
         ).collect()
-    assert {(r["id_a"], r["id_b"]) for r in bounded} == pairs
+    pairs = {(r["id_a"], r["id_b"]) for r in exact}
+    assert len(pairs) == n_fam * (n_fam - 1) // 2
 
 
-def test_embedding_near_dups_budget_warning_fires(spark):
+def test_embedding_near_dups_budget_warning_fires(spark, monkeypatch):
     """r13: the plan-time exact candidate-volume estimate warns past
-    candidate_pair_budget even when NO bucket exceeds the cap — the
+    _CANDIDATE_PAIR_BUDGET even when NO bucket exceeds the cap — the
     sub-cap occupancy hump the r12 64x ladder measured."""
     import warnings as _w
+
+    from bbdc20_submission_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_CANDIDATE_PAIR_BUDGET", 100)
 
     rows = [
         (i, [float((i * 31 + j * 7) % 13 - 6) for j in range(DIM)])
@@ -183,24 +191,21 @@ def test_embedding_near_dups_budget_warning_fires(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     with _w.catch_warnings(record=True) as caught:
         _w.simplefilter("always")
-        embedding_near_dups(
-            df, threshold=0.999, n_planes=2, dim=DIM,
-            candidate_pair_budget=100,
-        )
+        embedding_near_dups(df, threshold=0.999, n_planes=2, dim=DIM)
     msgs = [str(c.message) for c in caught if c.category is UserWarning]
-    assert any("candidate_pair_budget" in m for m in msgs), msgs
+    assert any("_CANDIDATE_PAIR_BUDGET" in m for m in msgs), msgs
 
 
 def test_auto_lsh_signature_sizing():
     """The auto rule: small corpora keep the base signature; large
     corpora grow planes to log2(n/occupancy) with bands re-derived to
-    hold the base recall (never fewer bands, never > max_bands)."""
+    hold the base recall (never fewer bands, never > _MAX_BANDS)."""
     from bbdc20_submission_spark.operators.similarity import (
         auto_lsh_signature,
     )
 
     assert auto_lsh_signature(2_000, 0.95, 12, 1) == (12, 1)
-    p, b = auto_lsh_signature(128_000, 0.9998, 12, 1, target_occupancy=8)
+    p, b = auto_lsh_signature(128_000, 0.9998, 12, 1)
     assert p == 14 and b >= 2  # the r12 s3_planes_scaled shape
     # recall actually holds: 1-(1-q^p)^b >= base 1-(1-q^12)^1
     q = 1.0 - math.acos(0.9998) / math.pi
@@ -278,7 +283,7 @@ def test_quantized_cosine_topk_high_recall(spark, sf_dir):
                   F.col("embedding_q_scale").alias("_sb"))
     scored = qb.crossJoin(F.broadcast(qa)).filter(F.col("match_id") != F.col("query_id")).select(
         "query_id", "match_id",
-        dequantize_cosine(F.col("_qa"), F.col("_sa"), F.col("_qb"), F.col("_sb")).alias("sim"))
+        dequantize_cosine("_qa", "_qb").alias("sim"))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("match_id").asc())
     qtop = scored.withColumn("r", F.row_number().over(w)).filter(F.col("r") <= 3)
 
