@@ -483,16 +483,18 @@ def _union_find_components(edges):
     return {n: comp_min[find(n)] for n in parent}
 
 
+# Edge-count bound of dedup_clusters' driver union-find path (1M id
+# pairs is ~16 MB on the driver); past it the all-Spark
+# connected_components loop takes over.
+_DRIVER_EDGE_THRESHOLD = 1_000_000
+
+
 def dedup_clusters(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    driver_edge_threshold: int = 1_000_000,
-    keeper_scores: DataFrame | None = None,
-    score_col: str = "score",
-    quality_keeper_col: str | None = None,
-    quality_dup_col: str | None = None,
     inline_score_cols: tuple[str, str] | None = None,
+    quality_keeper_col: str | None = None,
 ) -> DataFrame:
     """Assign every document its dedup cluster representative: docs in
     a near-dup component share its min id; singletons keep their own.
@@ -500,52 +502,41 @@ def dedup_clusters(
 
     The verified near-dup edge list is tiny relative to the corpus —
     even 1M edges is ~16 MB of id pairs — so when it fits under
-    ``driver_edge_threshold`` the components are solved with driver
+    ``_DRIVER_EDGE_THRESHOLD`` the components are solved with driver
     union-find (path compression + union by size, near-linear) and
     broadcast back: one collect + one broadcast join instead of
     O(log n) shuffle iterations. This is the finishing step real dedup
     pipelines use. Above the threshold (adversarial corpora — think
     boilerplate farms where edges ~ corpus) the iterative
-    ``connected_components`` loop takes over: same labels, all-Spark,
-    O(log n) rounds. Both paths are exercised in tests and produce
-    identical output.
+    ``connected_components`` loop takes over. Both paths build the
+    same label frame over the edge endpoints — (id, component[,
+    quality keeper]) — and share one output projection; tests prove
+    them identical.
 
-    ``keeper_scores`` switches on quality-aware keeper selection
-    (:func:`reselect_keepers` semantics: each cluster keeps its max-
-    ``score_col`` member, ties -> lowest id, clusters with no scored
-    member fall back to the min-id label). On the driver-union-find
-    path the cluster membership is ALREADY on the driver, so the
-    argmax costs one bounded job (fetch the members' scores — at most
-    2x the edge bound — through a broadcast semi-join) instead of
-    reselect_keepers' persist + distinct + window + re-join chain;
-    the labels ride back in the same single broadcast join. Above the
-    threshold the all-Spark :func:`reselect_keepers` composition takes
-    over — identical output, proven in tests. With
-    ``quality_keeper_col``/``quality_dup_col`` set, BOTH policies are
-    emitted side by side ([id, keep_id, is_duplicate, q_keeper,
-    q_dup]); otherwise the quality keeper REPLACES keep_id (the
-    policy a curation pipeline actually wants).
-
-    ``inline_score_cols=(score_a_col, score_b_col)``: the keeper
-    scores are ALREADY columns of ``pairs`` (a verify that carried
-    them via ``jaccard_pairs(carry=...)``) — the driver path then
-    reads them off the collected edge rows, zero extra jobs/scans, and
-    the all-Spark path derives its score frame from the edge columns.
-    Mutually exclusive with ``keeper_scores``; requires a complete
-    per-doc score (every edge row carries its endpoints' scores, so
-    "unscored member" cannot arise — NULL scores still sort last)."""
-    if quality_dup_col and not quality_keeper_col:
+    ``inline_score_cols=(score_a_col, score_b_col)`` switches on
+    quality-aware keeper selection. The keeper scores are columns of
+    ``pairs`` (a verify that carried them via
+    ``jaccard_pairs(carry=...)``); every cluster member is an edge
+    endpoint, so the edge rows cover every member. Each cluster keeps
+    its max-score member with :func:`reselect_keepers` semantics (ties
+    -> lowest id, NULL scores sort last). The driver path reads the
+    scores off the edge rows it already collected (zero extra jobs or
+    scans); the all-Spark path derives a score frame from the same
+    edge columns and runs :func:`reselect_keepers` over its labels.
+    The quality keeper REPLACES keep_id / is_duplicate (the policy a
+    curation pipeline actually wants) unless ``quality_keeper_col`` is
+    set, which emits both policies side by side: [id_col, keep_id,
+    is_duplicate, quality_keeper_col, is_duplicate_q]."""
+    if quality_keeper_col and inline_score_cols is None:
         raise ValueError(
-            "dedup_clusters: quality_dup_col requires quality_keeper_col"
-            " (the replace-policy form names its outputs keep_id /"
-            " is_duplicate)"
+            "dedup_clusters: quality_keeper_col needs inline_score_cols"
+            " (the keeper scores ride the edge rows)"
         )
-    if keeper_scores is not None and inline_score_cols is not None:
-        raise ValueError(
-            "dedup_clusters: keeper_scores and inline_score_cols are"
-            " mutually exclusive score sources"
-        )
-    want_quality = keeper_scores is not None or inline_score_cols is not None
+    out_cols = [id_col, "keep_id", "is_duplicate"]
+    if quality_keeper_col:
+        out_cols += [quality_keeper_col, "is_duplicate_q"]
+    if len({c.lower() for c in out_cols}) < len(out_cols):
+        raise ValueError(f"dedup_clusters: output columns collide: {out_cols}")
     src, dst = (
         ("id_a", "id_b")
         if {"id_a", "id_b"} <= set(pairs.columns)
@@ -559,10 +550,11 @@ def dedup_clusters(
     # the broadcast mapping schema derives its id type from _ea; a
     # mixed-type edge frame (int vs long) would mis-type _eb-originated
     # values far from here — fail fast instead
-    if edge_sel.schema["_ea"].dataType != edge_sel.schema["_eb"].dataType:
+    id_type = edge_sel.schema["_ea"].dataType
+    if id_type != edge_sel.schema["_eb"].dataType:
         raise ValueError(
             "dedup_clusters: edge columns must share one id type, got "
-            f"{edge_sel.schema['_ea'].dataType} vs {edge_sel.schema['_eb'].dataType}"
+            f"{id_type} vs {edge_sel.schema['_eb'].dataType}"
         )
     # ONE job materializes the verify pipeline AND decides the path:
     # collect at most threshold+1 edges. When the result fits the
@@ -574,159 +566,72 @@ def dedup_clusters(
     # fact "too many" is used and the all-Spark path re-derives edges
     # itself (and on adversarial corpora the limit's early exit means
     # the probe never paid for the full edge volume).
-    edge_rows = edge_sel.limit(driver_edge_threshold + 1).collect()
-    if len(edge_rows) <= driver_edge_threshold:
+    edge_rows = edge_sel.limit(_DRIVER_EDGE_THRESHOLD + 1).collect()
+    if len(edge_rows) <= _DRIVER_EDGE_THRESHOLD:
         mapping = _union_find_components(
             [(r["_ea"], r["_eb"]) for r in edge_rows]
         )
-        spark = df.sparkSession
-        # id/component carry the caller's id type (long doc ids, string
-        # uuids, ...) — derive it from the edge frame, don't hardcode
-        id_type = edge_sel.schema["_ea"].dataType
-        fields = [
-            T.StructField("id", id_type),
-            T.StructField("component", id_type),
-        ]
+        names = ["_cid", "_comp"]
         rows: list[tuple] = list(mapping.items())
-        if want_quality:
-            if inline_score_cols is not None:
-                # scores came through the edge rows themselves (the
-                # verify join touched both sides anyway) — zero extra
-                # jobs, zero extra scans. Every member IS an edge
-                # endpoint, so coverage equals the member-fetch path
-                # given a complete per-doc score column.
-                member_scores: dict = {}
-                for r in edge_rows:
-                    member_scores[r["_ea"]] = r["_sa"]
-                    member_scores[r["_eb"]] = r["_sb"]
-                q_map = _argmax_keepers(mapping, member_scores.items())
-            else:
-                q_map = _driver_quality_keepers(
-                    mapping, keeper_scores, id_col, score_col, id_type
-                )
-            fields.append(T.StructField("_qcomp", id_type))
-            rows = [(n, c, q_map[n]) for n, c in mapping.items()]
-        comp = spark.createDataFrame(rows, schema=T.StructType(fields))
-        comp = F.broadcast(comp)
-        out = df.select(id_col).join(
-            comp.withColumnRenamed("id", id_col), id_col, "left"
-        )
-        keep = F.coalesce("component", F.col(id_col))
-        cols = [
-            F.col(id_col),
-            keep.alias("keep_id"),
-            (keep != F.col(id_col)).alias("is_duplicate"),
-        ]
-        if want_quality:
-            qkeep = F.coalesce("_qcomp", F.col(id_col))
-            # both-policies mode defaults the dup column to
-            # is_duplicate_q (like the reselect_keepers fallback) so it
-            # can never collide with the min-id is_duplicate column
-            qdup = quality_dup_col or (
-                "is_duplicate_q" if quality_keeper_col else "is_duplicate"
-            )
-            qcols = [
-                qkeep.alias(quality_keeper_col or "keep_id"),
-                (qkeep != F.col(id_col)).alias(qdup),
-            ]
-            # both policies side by side, or the quality keeper
-            # REPLACING the min-id label — one broadcast join either way
-            cols = cols + qcols if quality_keeper_col else [F.col(id_col), *qcols]
-        out = out.select(*cols)
-        return out
-    pairs_p = edge_sel.select("_ea", "_eb").persist()
-    comp = connected_components(pairs_p, src="_ea", dst="_eb")
-    out = (
-        df.select(id_col)
-        .join(comp.withColumnRenamed("id", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("keep_id"),
-            (F.coalesce("component", F.col(id_col)) != F.col(id_col)).alias(
-                "is_duplicate"
-            ),
-        )
-    )
-    pairs_p.unpersist()
-    if want_quality:
-        # above the driver bound the membership never comes to the
-        # driver — the all-Spark reselect pass provides the identical
-        # argmax/tie/fallback semantics. Inline edge-carried scores
-        # become the score frame (members = edge endpoints).
         if inline_score_cols is not None:
-            score_frame = (
-                edge_sel.select(
-                    F.col("_ea").alias(id_col), F.col("_sa").alias(score_col)
-                )
-                .unionByName(
-                    edge_sel.select(
-                        F.col("_eb").alias(id_col),
-                        F.col("_sb").alias(score_col),
-                    )
-                )
+            member_scores: dict = {}
+            for r in edge_rows:
+                member_scores[r["_ea"]] = r["_sa"]
+                member_scores[r["_eb"]] = r["_sb"]
+            q_map = _argmax_keepers(mapping, member_scores.items())
+            names.append("_qcomp")
+            rows = [(n, c, q_map[n]) for n, c in mapping.items()]
+        # id/component carry the caller's id type (long doc ids, string
+        # uuids, ...) — derived from the edge frame, not hardcoded
+        schema = T.StructType([T.StructField(n, id_type) for n in names])
+        comp = F.broadcast(df.sparkSession.createDataFrame(rows, schema))
+    else:
+        pairs_p = edge_sel.select("_ea", "_eb").persist()
+        comp = connected_components(pairs_p, src="_ea", dst="_eb").toDF(
+            "_cid", "_comp"
+        )
+        pairs_p.unpersist()
+        if inline_score_cols is not None:
+            scores = (
+                edge_sel.selectExpr("_ea AS _cid", "_sa AS _s")
+                .unionByName(edge_sel.selectExpr("_eb AS _cid", "_sb AS _s"))
                 .distinct()
             )
-        else:
-            score_frame = keeper_scores.select(id_col, score_col)
+            comp = reselect_keepers(
+                comp,
+                scores,
+                id_col="_cid",
+                cluster_col="_comp",
+                score_col="_s",
+                passthrough=("_comp",),
+                keeper_col="_qcomp",
+                dup_col="_qdup",
+            ).drop("_qdup")
+    # the label frame has internal column names and the join has an
+    # explicit condition, so no id_col can collide with them
+    ids = df.select(id_col)
+    doc = ids[id_col]
+    keep = F.coalesce(comp["_comp"], doc)
+    cols = [doc, keep.alias("keep_id"), (keep != doc).alias("is_duplicate")]
+    if inline_score_cols is not None:
+        qkeep = F.coalesce(comp["_qcomp"], doc)
         if quality_keeper_col:
-            out = reselect_keepers(
-                out,
-                score_frame,
-                id_col=id_col,
-                score_col=score_col,
-                passthrough=("keep_id", "is_duplicate"),
-                keeper_col=quality_keeper_col,
-                dup_col=quality_dup_col or "is_duplicate_q",
-            )
+            cols += [
+                qkeep.alias(quality_keeper_col),
+                (qkeep != doc).alias("is_duplicate_q"),
+            ]
         else:
-            out = reselect_keepers(
-                out,
-                score_frame,
-                id_col=id_col,
-                score_col=score_col,
-            )
-    return out
-
-
-def _driver_quality_keepers(
-    mapping: dict,
-    keeper_scores: DataFrame,
-    id_col: str,
-    score_col: str,
-    id_type,
-) -> dict:
-    """Driver-side argmax keeper per component, for the union-find
-    path of :func:`dedup_clusters`. ``mapping`` is node -> min-id
-    label for every node on an edge (so |members| <= 2 * edge bound).
-    One Spark job: the members' score rows come back through a
-    broadcast semi-join against the score frame. Semantics mirror
-    :func:`reselect_keepers` / a ``row_number() OVER (ORDER BY score
-    DESC, id ASC)`` window exactly: NaN scores sort as the LARGEST
-    value (Spark's float ordering), NULL scores sort last (DESC NULLS
-    LAST), unscored members never win, and a cluster with no scored
-    member keeps its min-id label."""
-    spark = keeper_scores.sparkSession
-    members = spark.createDataFrame(
-        [(n,) for n in mapping],
-        schema=T.StructType([T.StructField(id_col, id_type)]),
-    )
-    scored = (
-        keeper_scores.select(id_col, score_col)
-        .join(F.broadcast(members), id_col)
-        .collect()
-    )
-    return _argmax_keepers(mapping, ((r[0], r[1]) for r in scored))
+            cols = [doc, qkeep.alias("keep_id"), (qkeep != doc).alias("is_duplicate")]
+    return ids.join(comp, doc == comp["_cid"], "left").select(*cols)
 
 
 def _argmax_keepers(mapping: dict, scored_items) -> dict:
     """Argmax keeper per component from (id, score) items, mirroring a
     ``row_number() OVER (ORDER BY score DESC NULLS LAST, id ASC)``
     window exactly (NaN sorts as the LARGEST score, like Spark float
-    ordering). ``scored_items`` need only cover ids present in
-    ``mapping``-as-keys; components with no scored member keep their
-    min-id label. Shared by the member-fetch path
-    (:func:`_driver_quality_keepers`) and the inline edge-carried
-    score path of :func:`dedup_clusters`."""
+    ordering). ``scored_items`` covers every node of ``mapping``: the
+    driver path of :func:`dedup_clusters` reads one score per edge
+    endpoint off the edge rows."""
     import math
 
     def cat(s) -> int:
@@ -750,12 +655,10 @@ def _argmax_keepers(mapping: dict, scored_items) -> dict:
 
     best: dict = {}
     for i, s in scored_items:
-        if i not in mapping:
-            continue
         comp = mapping[i]
         if comp not in best or beats(s, i, *best[comp]):
             best[comp] = (s, i)
-    return {n: best[c][1] if c in best else c for n, c in mapping.items()}
+    return {n: best[c][1] for n, c in mapping.items()}
 
 
 def reselect_keepers(
@@ -774,9 +677,10 @@ def reselect_keepers(
 
     This is the keeper policy production dedup actually wants — keep
     the longest / cleanest / highest-quality member of each near-dup
-    cluster, drop the rest. ``clusters`` is the ``dedup_clusters``
-    output ([id, cluster label, _]); ``scores`` maps member ids to
-    scores. Output: [id_col, *passthrough, keeper_col, dup_col] with
+    cluster, drop the rest. ``clusters`` is a cluster-label frame
+    ([id, cluster label, _]: the ``dedup_clusters`` output, or the
+    edge-endpoint labels of its all-Spark path); ``scores`` maps member
+    ids to scores. Output: [id_col, *passthrough, keeper_col, dup_col] with
     the re-selected keeper; singletons keep themselves untouched.
     ``passthrough`` columns of ``clusters`` ride the same single
     broadcast-join pass (a caller wanting both the min-id and the
@@ -788,10 +692,9 @@ def reselect_keepers(
     need not cover every member. An UNSCORED member never wins the
     argmax (it is absent from the candidate set), and a cluster with
     NO scored member falls back to its existing label (the min-id
-    keeper) via the coalesce. Pass a complete score frame — as every
-    caller here does (d12: n_chars off the corpus; curate: the
-    keeper column of the exact-unique frame) — when the max-score
-    policy must hold for every cluster.
+    keeper) via the coalesce. Pass a complete score frame — as
+    ``dedup_clusters`` does (every member's edge-carried score) — when
+    the max-score policy must hold for every cluster.
 
     Scale shape: the corpus NEVER shuffles. Real clusters (size ≥ 2)
     are a small fraction of any sane corpus — the same boundedness

@@ -667,8 +667,8 @@ def jaccard_pairs(
     ``carry``: per-doc columns already riding the ``sets`` frame
     (``hashed_shingle_sets(carry=...)``) to emit per SIDE as
     ``<col>_a`` / ``<col>_b`` — e.g. a keeper score, which
-    ``dedup_clusters`` can then consume inline from the verified edge
-    list instead of paying a separate member-score scan. Zero extra
+    ``dedup_clusters`` reads off the verified edge list
+    (``inline_score_cols``). Zero extra
     joins: the columns ride the two set-side joins this verify
     performs anyway."""
     if sets is None:

@@ -12,9 +12,11 @@ never hold more than a narrow bracket of values:
    in-bracket value set, and pick the exact order statistics k and k+1
    locally, interpolating by the fractional rank.
 
-Cost: two scans, shuffle of O(bracket) values. The bracket is widened
-and retried in the (approx-sketch-violating) corner case where the
-target ranks fall outside it.
+Cost: two scans, shuffle of O(bracket) values. ``exact_percentile_frame``
+is the operator (one lazy plan, the bracket containment proved from the
+sketch accuracy); ``exact_percentile`` is its value on the driver, and
+``exact_percentile_by`` the per-group form, which widens and retries a
+group whose bracket missed.
 """
 
 from __future__ import annotations
@@ -22,101 +24,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# percentile_approx accuracy of the pass-1 bracket: rank error
+# <= n/_ACCURACY, inside the +-0.01*n bracket margin with 100x slack
+_ACCURACY = 10_000
 
-def exact_percentile(
-    df: DataFrame, col: str, p: float, accuracy: int = 10_000
-) -> float:
-    """Exact linear-interpolated percentile of a double column.
+
+def exact_percentile(df: DataFrame, col: str, p: float) -> float | None:
+    """Exact linear-interpolated percentile of a numeric column, as a
+    driver value (None when the column has no non-NULL value).
 
     Returns the same value as ``F.expr(f"percentile({col}, {p})")``.
-    Nulls are ignored (as the builtin does).
-    """
-    if not 0.0 <= p <= 1.0:
-        # out-of-range p would otherwise make the bracket-retry loop
-        # spin forever (the full-range bracket can never contain a
-        # rank outside [0, n-1])
-        raise ValueError(f"p={p} outside [0, 1]")
-    base = df.select(F.col(col).alias("v")).filter(F.col("v").isNotNull())
-    first = base.agg(
-        F.count("v").alias("n"),
-        F.min("v").alias("lo_all"),
-        F.max("v").alias("hi_all"),
-        F.percentile_approx(
-            "v", [max(0.0, p - 0.01), min(1.0, p + 0.01)], accuracy
-        ).alias("bracket"),
-    ).collect()[0]
-    n = first["n"]
-    if n == 0:
-        return None
-    if n == 1:
-        return float(base.collect()[0]["v"])
-    rank = (n - 1) * p  # fractional rank, quantile_cont semantics
-    k = int(rank)
-    frac = rank - k
-
-    lo, hi = first["bracket"][0], first["bracket"][1]
-    while True:
-        row = base.agg(
-            F.sum(F.when(F.col("v") < lo, 1).otherwise(0)).alias("below"),
-            F.sort_array(
-                F.collect_list(F.when((F.col("v") >= lo) & (F.col("v") <= hi), F.col("v")))
-            ).alias("bracket_vals"),
-        ).collect()[0]
-        below, vals = row["below"], row["bracket_vals"]
-        # need order stats k and k+frac>0; both inside [below, below+len)
-        last_needed = k + (1 if frac > 0 else 0)
-        if below <= k and last_needed < below + len(vals):
-            vk = vals[k - below]
-            if frac == 0:
-                return float(vk)
-            vk1 = vals[last_needed - below]
-            # equal endpoints short-circuit: both Spark's Percentile
-            # (value->count map — one entry spans both ranks) and
-            # DuckDB's quantile_cont return the exact value, while
-            # a*(1-frac) + a*frac re-rounds to a±1ulp
-            if vk1 == vk:
-                return float(vk)
-            # lower*(1-frac) + higher*frac — the exact evaluation order
-            # Spark's Percentile and DuckDB's quantile_cont use; the
-            # algebraically-equal lower+(higher-lower)*frac rounds
-            # differently in the last ulp
-            return float(vk * (1 - frac) + vk1 * frac)
-        # approx bracket missed (pathological); widen to the full range
-        lo, hi = first["lo_all"], first["hi_all"]
+    Nulls are ignored (as the builtin does)."""
+    return exact_percentile_frame(df, col, p).first()[0]
 
 
 def exact_percentile_frame(
-    df: DataFrame, col: str, p: float, accuracy: int = 10_000,
-    out_col: str = "pct",
+    df: DataFrame, col: str, p: float, out_col: str = "pct"
 ) -> DataFrame:
-    """LAZY single-plan variant of :func:`exact_percentile`: returns a
-    ONE-ROW DataFrame ``[out_col]`` whose execution (not construction)
-    runs both bracket passes — pass 1 rides a broadcast cross join into
-    pass 2, and the order-statistic interpolation finishes as a scalar
-    expression over the aggregated bracket. Callers that compose the
-    result into a bigger plan (cross join with other aggregates) get
-    the percentile recomputed per execution, with nothing evaluated at
-    plan-build time.
+    """Exact percentile as a ONE-ROW DataFrame ``[out_col]`` whose
+    execution (not construction) runs both bracket passes — pass 1
+    rides a broadcast cross join into pass 2, and the order-statistic
+    interpolation finishes as a scalar expression over the aggregated
+    bracket. Callers that compose the result into a bigger plan (cross
+    join with other aggregates) get the percentile recomputed per
+    execution, with nothing evaluated at plan-build time.
 
-    The eager function's bracket-miss retry is replaced by a proof:
-    ``percentile_approx``'s rank error is ≤ n/accuracy, and the
-    bracket margin is ±0.01·n ranks, so for n·(0.01 − 1/accuracy) ≥ 1
-    (n ≥ ~102 at the default accuracy) the bracket provably contains
+    No bracket-miss retry is needed: ``percentile_approx``'s rank error
+    is ≤ n/_ACCURACY, and the bracket margin is ±0.01·n ranks, so for
+    n·(0.01 − 1/_ACCURACY) ≥ 1 (n ≥ ~102) the bracket provably contains
     the target order statistics; below a 10×-slack threshold of 1000
     rows the bracket widens to the full [min, max] range, where the
     in-bracket value list is trivially small. Result is bit-equal to
     ``percentile(col, p)`` (same interpolation evaluation order)."""
     if not 0.0 <= p <= 1.0:
         raise ValueError(f"p={p} outside [0, 1]")
-    if accuracy < 200:
-        # the no-retry proof needs rank error n/accuracy strictly
-        # inside the ±0.01·n bracket margin; 200 gives 2x slack. A
-        # looser accuracy would let the target order statistic fall
-        # outside [_lo, _hi] and element_at index past _vals.
-        raise ValueError(
-            f"accuracy={accuracy} < 200 voids the bracket-containment"
-            " proof this no-retry variant relies on"
-        )
     # parsed-SQL projections (r14): the bracket/interpolation Column
     # assembly cost ~50 py4j round trips per build
     base = df.selectExpr(f"CAST(`{col}` AS DOUBLE) AS _v").filter(
@@ -129,7 +70,7 @@ def exact_percentile_frame(
         F.expr("min(_v)").alias("_lo_all"),
         F.expr("max(_v)").alias("_hi_all"),
         F.expr(
-            f"percentile_approx(_v, array({p_lo}, {p_hi}), {accuracy})"
+            f"percentile_approx(_v, array({p_lo}, {p_hi}), {_ACCURACY})"
         ).alias("_bracket"),
     ).selectExpr(
         "_n",
@@ -157,8 +98,11 @@ def exact_percentile_frame(
     vk = f"element_at(_vals, CAST({k} - _below + 1 AS INT))"
     vk1 = f"element_at(_vals, CAST({k} - _below + 2 AS INT))"
     # lower*(1-frac) + higher*frac — the exact evaluation order Spark's
-    # Percentile and DuckDB's quantile_cont use (see exact_percentile);
-    # equal endpoints short-circuit to the exact value as both engines do
+    # Percentile and DuckDB's quantile_cont use (the algebraically-equal
+    # lower+(higher-lower)*frac rounds differently in the last ulp).
+    # Equal endpoints short-circuit to the exact value, as both engines
+    # do: Spark's value->count map has one entry spanning both ranks,
+    # while a*(1-frac) + a*frac re-rounds to a±1ulp.
     return pass2.selectExpr(
         "CASE WHEN _n IS NULL OR _n = 0 THEN CAST(NULL AS DOUBLE) "
         f"WHEN {frac} = 0 OR {vk1} = {vk} THEN {vk} "
@@ -167,31 +111,18 @@ def exact_percentile_frame(
     )
 
 
-def exact_percentiles_by_group(
-    df: DataFrame, keys: list[str], col: str, ps: list[float]
-) -> DataFrame:
-    """Grouped exact percentiles via the builtin (appropriate when
-    per-group cardinality is bounded — the per-subject/trial case);
-    ``exact_percentile`` is the global-scan variant for when it isn't."""
-    aggs = [
-        F.expr(f"percentile({col}, {p})").alias(f"p{int(p * 100)}") for p in ps
-    ]
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def exact_percentile_by(
     df: DataFrame,
     keys: list[str],
     col: str,
     p: float,
-    accuracy: int = 10_000,
     max_groups: int = 10_000,
 ) -> list[tuple]:
     """Bracketed two-pass EXACT percentile PER GROUP, bit-equal to
     ``percentile(col, p)`` within each group.
 
-    The complement of ``exact_percentiles_by_group`` (builtin — fine
-    when per-group cardinality is bounded): this is for the
+    The complement of the builtin grouped ``percentile`` (fine when
+    per-group cardinality is bounded): this is for the
     low-cardinality analytic grouping over a huge fact table (return
     flags, status codes), where each group's value->count map is the
     scale hazard but the group COUNT is driver-trivial. Per-group
@@ -217,7 +148,7 @@ def exact_percentile_by(
             F.min("_v").alias("lo_all"),
             F.max("_v").alias("hi_all"),
             F.percentile_approx(
-                "_v", [max(0.0, p - 0.01), min(1.0, p + 0.01)], accuracy
+                "_v", [max(0.0, p - 0.01), min(1.0, p + 0.01)], _ACCURACY
             ).alias("bracket"),
         )
         .collect()
@@ -225,8 +156,8 @@ def exact_percentile_by(
     if len(first) > max_groups:
         raise ValueError(
             f"exact_percentile_by: {len(first)} groups exceeds "
-            f"max_groups={max_groups}; use exact_percentiles_by_group "
-            "for high-cardinality keys"
+            f"max_groups={max_groups}; use the builtin grouped "
+            "percentile aggregate for high-cardinality keys"
         )
     pend: dict[tuple, tuple] = {}
     meta: dict[tuple, tuple] = {}
@@ -281,11 +212,11 @@ def exact_percentile_by(
                 vk = vals[k - below]
                 vk1 = vals[last_needed - below]
                 if frac == 0 or vk1 == vk:
-                    # equal-endpoint short-circuit — see exact_percentile
+                    # equal-endpoint short-circuit — see exact_percentile_frame
                     res[gk] = float(vk)
                 else:
                     # same evaluation order as Spark Percentile /
-                    # DuckDB quantile_cont (see exact_percentile)
+                    # DuckDB quantile_cont (see exact_percentile_frame)
                     res[gk] = float(vk * (1 - frac) + vk1 * frac)
             else:  # sketch-violating corner: widen to the full range
                 nxt[gk] = (lo_all, hi_all)

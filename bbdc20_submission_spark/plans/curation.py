@@ -82,10 +82,12 @@ class CurationConfig:
     near_dup_jaccard: float = 0.5
     # quality-aware keeper policy: when set, each near-dup cluster's
     # representative is the member maximizing this column (tie →
-    # lowest id) instead of the min-id label; selection rides inside
-    # dedup_clusters (driver argmax under the edge bound,
-    # chunking.reselect_keepers above it). The column must exist on
-    # the input docs (e.g. n_chars).
+    # lowest id) instead of the min-id label; the verify carries the
+    # column onto the edge rows (jaccard_pairs(carry=...)) and
+    # dedup_clusters picks the keeper from those edge-carried scores
+    # (driver argmax under the edge bound, chunking.reselect_keepers
+    # above it). The column must exist on the input docs (e.g.
+    # n_chars).
     keeper_score_col: str | None = None
     # exact duplicate-substring dedup (Lee-et-al suffix-array style,
     # operators.dedup.duplicate_span_stats) over the near-dup
@@ -220,27 +222,25 @@ def curate(
             # prefix — shingling, signatures, banding, verify — is
             # skipped. CONTRACT: edges were computed over THIS corpus
             # after the same blocklist + exact dedup (foreign endpoint
-            # ids would become phantom min-id cluster labels). Keeper
-            # scores fall back to the member-fetch path unless the
-            # frame already carries <score>_a/_b columns from
-            # jaccard_pairs(carry=...).
+            # ids would become phantom min-id cluster labels). Bare
+            # (id_a, id_b) edges get the keeper scores <score>_a/_b
+            # attached with one left join per edge side from the docs
+            # score column, which covers every member.
             pairs = precomputed_pairs
-            inline = (
-                (f"{score}_a", f"{score}_b")
-                if score and {f"{score}_a", f"{score}_b"} <= set(pairs.columns)
-                else None
-            )
+            if score and not {f"{score}_a", f"{score}_b"} <= set(pairs.columns):
+                for side in ("a", "b"):
+                    pairs = pairs.join(
+                        docs.select(id_col, score).toDF(
+                            f"id_{side}", f"{score}_{side}"
+                        ),
+                        f"id_{side}",
+                        "left",
+                    )
             return dedup_clusters(
                 exact_unique,
                 pairs,
                 id_col,
-                score_col=score or "score",
-                inline_score_cols=inline,
-                keeper_scores=(
-                    docs.select(id_col, score)
-                    if score and inline is None
-                    else None
-                ),
+                inline_score_cols=(f"{score}_a", f"{score}_b") if score else None,
             )
         sets = managed_persist(
             hashed_shingle_sets(
@@ -276,7 +276,6 @@ def curate(
             keep,
             pairs,
             id_col,
-            score_col=score or "score",
             inline_score_cols=(f"{score}_a", f"{score}_b") if score else None,
         )
 

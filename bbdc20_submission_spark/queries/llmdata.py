@@ -504,7 +504,7 @@ def d12_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     # n_chars rides the shingle-set frame so the verify emits it per
     # edge side — the keeper argmax then reads scores off the edges
-    # dedup_clusters already collects (no member-score fetch job)
+    # dedup_clusters already collects
     sets = managed_persist(
         hashed_shingle_sets(d, shingle_k=3, carry=("n_chars",))
     )
@@ -522,10 +522,8 @@ def d12_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = dedup_clusters(
         d,
         pairs,
-        score_col="n_chars",
         inline_score_cols=("n_chars_a", "n_chars_b"),
         quality_keeper_col="quality_keep_id",
-        quality_dup_col="is_duplicate_q",
     )
     return both.select(
         "doc_id",

@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from bbdc20_submission_spark.operators import chunking
 from bbdc20_submission_spark.operators.chunking import (
     chunk_by_tokens,
     connected_components,
@@ -67,7 +69,7 @@ def test_dedup_clusters_marks_duplicates(spark):
     assert out == {1: (1, False), 2: (1, True), 3: (1, True), 10: (10, False), 99: (99, False)}
 
 
-def test_dedup_clusters_driver_and_distributed_paths_agree(spark):
+def test_dedup_clusters_driver_and_distributed_paths_agree(spark, monkeypatch):
     """The size-gated driver union-find fast path and the iterative
     distributed CC path must label identically (same min-id components
     for every doc, singletons kept)."""
@@ -87,89 +89,27 @@ def test_dedup_clusters_driver_and_distributed_paths_agree(spark):
         r["doc_id"]: (r["keep_id"], r["is_duplicate"])
         for r in dedup_clusters(docs, pairs).collect()
     }
+    monkeypatch.setattr(chunking, "_DRIVER_EDGE_THRESHOLD", -1)
     via_loop = {
         r["doc_id"]: (r["keep_id"], r["is_duplicate"])
-        for r in dedup_clusters(docs, pairs, driver_edge_threshold=-1).collect()
+        for r in dedup_clusters(docs, pairs).collect()
     }
     assert via_driver == via_loop
     assert len(via_driver) == 200
 
 
-def test_dedup_clusters_keeper_paths_agree(spark):
-    """keeper_scores integration: the driver-argmax fast path and the
-    reselect_keepers fallback (edge count above threshold) must agree
-    — both the replace-policy shape and the both-policies shape — and
-    must match reselect_keepers composed by hand. Scores carry a NULL
-    and ties so the ordering corners are exercised."""
+def _scored_dedup_case(spark, monkeypatch):
+    """Random edges (Random(11)) whose rows carry both endpoints'
+    scores, as a jaccard_pairs(carry=...) verify produces them. Scores
+    carry a NULL (id 7) and exact ties (score = id % 9) so the ordering
+    corners are exercised. Returns (docs, pairs, both_paths, ref):
+    both_paths(**kw) runs dedup_clusters with the inline scores on the
+    driver path and on the all-Spark fallback (edge count above
+    _DRIVER_EDGE_THRESHOLD); ref is reselect_keepers composed by hand
+    over the min-id clusters."""
     import random
 
     from bbdc20_submission_spark.operators.chunking import reselect_keepers
-
-    rng = random.Random(11)
-    docs = spark.createDataFrame([(i,) for i in range(120)], "doc_id long")
-    edges = sorted({
-        (min(a, b), max(a, b))
-        for a, b in ((rng.randrange(80), rng.randrange(80)) for _ in range(70))
-        if a != b
-    })
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    # NULL score on 7, exact ties on many ids (score = id % 9)
-    scores = spark.createDataFrame(
-        [(i, None if i == 7 else float(i % 9)) for i in range(120)],
-        "doc_id long, s double",
-    )
-
-    def snap(df):
-        return {tuple(r) for r in df.collect()}
-
-    kw = dict(keeper_scores=scores, score_col="s")
-    # replace-policy: driver vs fallback vs hand-composed
-    a = snap(dedup_clusters(docs, pairs, **kw))
-    b = snap(dedup_clusters(docs, pairs, driver_edge_threshold=-1, **kw))
-    c = snap(reselect_keepers(dedup_clusters(docs, pairs), scores, score_col="s"))
-    assert a == b == c
-    # both-policies shape
-    kw2 = dict(kw, quality_keeper_col="qk", quality_dup_col="qd")
-    d = snap(dedup_clusters(docs, pairs, **kw2))
-    e = snap(dedup_clusters(docs, pairs, driver_edge_threshold=-1, **kw2))
-    assert d == e
-    # the quality policy must actually bite somewhere
-    assert any(r[1] != r[3] for r in d)
-    # defaulted dup-column name must be is_duplicate_q on BOTH paths
-    # (never colliding with the min-id is_duplicate column)
-    kw3 = dict(kw, quality_keeper_col="qk")
-    want = ["doc_id", "keep_id", "is_duplicate", "qk", "is_duplicate_q"]
-    assert dedup_clusters(docs, pairs, **kw3).columns == want
-    assert (
-        dedup_clusters(docs, pairs, driver_edge_threshold=-1, **kw3).columns
-        == want
-    )
-    # dup col without keeper col is ambiguous between the two shapes
-    import pytest
-
-    with pytest.raises(ValueError, match="quality_dup_col requires"):
-        dedup_clusters(docs, pairs, keeper_scores=scores, score_col="s",
-                       quality_dup_col="qd")
-
-
-def test_dedup_clusters_empty_pairs(spark):
-    """No edges: every doc is its own keep_id, nothing flagged."""
-    docs = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
-    pairs = spark.createDataFrame([], "id_a long, id_b long")
-    out = {r["doc_id"]: (r["keep_id"], r["is_duplicate"]) for r in dedup_clusters(docs, pairs).collect()}
-    assert out == {i: (i, False) for i in range(5)}
-
-
-def test_dedup_clusters_inline_scores_all_paths_agree(spark):
-    """inline_score_cols (scores riding the edge rows, as a
-    jaccard_pairs(carry=...) verify produces) must pick the same
-    keepers as the keeper_scores member-fetch form — on BOTH the
-    driver union-find path and the all-Spark fallback — including the
-    NULL-score and tie corners. keeper_scores+inline together is an
-    error."""
-    import random
-
-    import pytest
 
     rng = random.Random(11)
     docs = spark.createDataFrame([(i,) for i in range(120)], "doc_id long")
@@ -182,34 +122,99 @@ def test_dedup_clusters_inline_scores_all_paths_agree(spark):
     def s(i):
         return None if i == 7 else float(i % 9)
 
-    pairs_scored = spark.createDataFrame(
+    pairs = spark.createDataFrame(
         [(a, b, s(a), s(b)) for a, b in edges],
         "id_a long, id_b long, s_a double, s_b double",
     )
-    pairs_bare = pairs_scored.select("id_a", "id_b")
     scores = spark.createDataFrame(
         [(i, s(i)) for i in range(120)], "doc_id long, s double"
     )
 
-    def snap(df):
-        return {tuple(r) for r in df.collect()}
+    def both_paths(**kw):
+        kw["inline_score_cols"] = ("s_a", "s_b")
+        driver = dedup_clusters(docs, pairs, **kw)
+        with monkeypatch.context() as m:
+            m.setattr(chunking, "_DRIVER_EDGE_THRESHOLD", -1)
+            return driver, dedup_clusters(docs, pairs, **kw)
 
-    ref = snap(dedup_clusters(docs, pairs_bare, keeper_scores=scores,
-                              score_col="s"))
-    kw = dict(score_col="s", inline_score_cols=("s_a", "s_b"))
-    assert snap(dedup_clusters(docs, pairs_scored, **kw)) == ref
-    assert (
-        snap(dedup_clusters(docs, pairs_scored, driver_edge_threshold=-1, **kw))
-        == ref
+    ref = _snap(
+        reselect_keepers(dedup_clusters(docs, pairs), scores, score_col="s")
     )
-    # both-policies shape rides inline scores too
-    kw2 = dict(kw, quality_keeper_col="qk", quality_dup_col="qd")
-    assert snap(dedup_clusters(docs, pairs_scored, **kw2)) == snap(
-        dedup_clusters(docs, pairs_scored, driver_edge_threshold=-1, **kw2)
+    return docs, pairs, both_paths, ref
+
+
+def _snap(df):
+    return {tuple(r) for r in df.collect()}
+
+
+def test_dedup_clusters_keeper_paths_agree(spark, monkeypatch):
+    """Quality-aware keepers, replace-policy shape: the driver-argmax
+    path and the all-Spark fallback must agree and must match
+    reselect_keepers composed by hand. A quality keeper column without
+    scores to pick it by is an error."""
+    docs, pairs, both_paths, ref = _scored_dedup_case(spark, monkeypatch)
+    a, b = both_paths()
+    assert a.columns == b.columns == ["doc_id", "keep_id", "is_duplicate"]
+    assert _snap(a) == _snap(b) == ref
+    with pytest.raises(ValueError, match="needs inline_score_cols"):
+        dedup_clusters(docs, pairs, quality_keeper_col="qk")
+
+
+def test_dedup_clusters_inline_scores_all_paths_agree(spark, monkeypatch):
+    """Quality-aware keepers, both-policies shape: on both paths the
+    min-id columns equal plain dedup_clusters, the quality columns
+    equal the hand-composed reselect_keepers, and the dup column
+    defaults to is_duplicate_q (never colliding with the min-id
+    is_duplicate column)."""
+    docs, pairs, both_paths, ref = _scored_dedup_case(spark, monkeypatch)
+    min_id = _snap(dedup_clusters(docs, pairs))
+    d, e = both_paths(quality_keeper_col="qk")
+    want = ["doc_id", "keep_id", "is_duplicate", "qk", "is_duplicate_q"]
+    assert d.columns == e.columns == want
+    assert _snap(d) == _snap(e)
+    assert {r[:3] for r in _snap(d)} == min_id
+    assert {(r[0], r[3], r[4]) for r in _snap(d)} == ref
+    # the quality policy must actually bite somewhere
+    assert any(r[1] != r[3] for r in _snap(d))
+
+
+@pytest.mark.parametrize("spark_path", [False, True])
+def test_dedup_clusters_id_col_named_like_internal_column(
+    spark, monkeypatch, spark_path
+):
+    """An id column named like a label column ("component" was the
+    connected-components output name, "_comp" is the label frame's)
+    must not make the label join ambiguous, on either path; an id
+    column named like an output column raises before any job."""
+    if spark_path:
+        monkeypatch.setattr(chunking, "_DRIVER_EDGE_THRESHOLD", -1)
+    pairs = spark.createDataFrame(
+        [(1, 2, 5.0, 9.0), (2, 3, 9.0, 9.0)],
+        "id_a long, id_b long, s_a double, s_b double",
     )
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        dedup_clusters(docs, pairs_scored, keeper_scores=scores,
-                       score_col="s", inline_score_cols=("s_a", "s_b"))
+    for name in ("component", "_comp"):
+        docs = spark.createDataFrame([(i,) for i in [1, 2, 3, 10]], f"{name} long")
+        out = dedup_clusters(
+            docs, pairs, id_col=name, inline_score_cols=("s_a", "s_b"),
+            quality_keeper_col="qk",
+        )
+        assert out.columns[0] == name
+        assert {tuple(r) for r in out.collect()} == {
+            (1, 1, False, 2, True),
+            (2, 1, True, 2, False),
+            (3, 1, True, 2, True),
+            (10, 10, False, 10, False),
+        }
+    with pytest.raises(ValueError, match="collide"):
+        dedup_clusters(docs, pairs, id_col="keep_id")
+
+
+def test_dedup_clusters_empty_pairs(spark):
+    """No edges: every doc is its own keep_id, nothing flagged."""
+    docs = spark.createDataFrame([(i,) for i in range(5)], "doc_id long")
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    out = {r["doc_id"]: (r["keep_id"], r["is_duplicate"]) for r in dedup_clusters(docs, pairs).collect()}
+    assert out == {i: (i, False) for i in range(5)}
 
 
 def test_jaccard_pairs_carry_emits_per_side_scores(spark):
